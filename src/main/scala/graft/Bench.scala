@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE JSON line (driver contract) and writes the
   * full-precision copy to bench_summary.json.
@@ -36,10 +35,23 @@ import org.apache.spark.sql.SparkSession
   *     timeout now leaves per-query data instead of nothing. */
 object Bench {
 
-  private case class QueryStat(name: String, med: Double, min: Double,
+  private[graft] case class QueryStat(name: String, med: Double, min: Double,
       rounds: Int)
-  private case class ShardResult(sentinelBefore: Double, sentinelAfter: Double,
-      stats: Vector[QueryStat])
+  private[graft] case class ShardResult(sentinelBefore: Double,
+      sentinelAfter: Double, stats: Vector[QueryStat])
+
+  /** Timed rounds per query (`SPARK_GRAFT_BENCH_RUNS`, default 3). */
+  private def benchRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+  private def demoteSecs =
+    sys.env.getOrElse("GRAFT_BENCH_DEMOTE_SECS", "30").toDouble
+
+  /** The `i/n` modulo shard of the sorted query list. */
+  private def shardNames(spec: String): Vector[String] = {
+    val Array(iStr, nStr) = spec.split("/")
+    val (shard, nShards) = (iStr.toInt - 1, nStr.toInt)
+    SparkEntry.queries.keys.toVector.sorted
+      .zipWithIndex.collect { case (n, ix) if ix % nShards == shard => n }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,7 +62,8 @@ object Bench {
         val out = sys.env("GRAFT_BENCH_OUT")
         val budget = sys.env.get("GRAFT_BENCH_SHARD_BUDGET")
           .map(_.toDouble).getOrElse(Double.MaxValue)
-        val res = runShard(spec, sfDir, budget, Some(out))
+        val res = runShard(shardNames(spec), sfDir, benchRuns, budget,
+          demoteSecs, Some(out))
         writeFile(out, shardTsv(res))
       case None =>
         val wall = sys.env.getOrElse("GRAFT_BENCH_WALL_SECS", "2400").toDouble
@@ -59,8 +72,8 @@ object Bench {
         val merged =
           if (sys.env.contains("GRAFT_BENCH_NO_FORK")) None
           else forkShards(sfDir, () => remaining)
-        val res = merged.getOrElse(
-          runShard("1/1", sfDir, remaining, Some("bench_shard_1of1.tsv")))
+        val res = merged.getOrElse(runShard(shardNames("1/1"), sfDir,
+          benchRuns, remaining, demoteSecs, Some("bench_shard_1of1.tsv")))
         emit(res, sfDir)
     }
   }
@@ -166,33 +179,19 @@ object Bench {
     ShardResult(sent(1).toDouble, sent(2).toDouble, stats)
   }
 
-  /** The r9 bench core, over the `i/n` modulo shard of the sorted query
-    * list: untimed warmup round, interleaved timed rounds, clearCache +
+  /** The timing core shared by Bench and [[TimeQueries]], over `names`:
+    * untimed warmup round, `runs` interleaved timed rounds, clearCache +
     * gc between queries, ambient-load sentinel before and after. Sheds
     * timed rounds past the first when `budgetSecs` of shard time is
-    * spent, demotes >30s-warmup queries to one round, and rewrites
-    * `partialSink` after every timed round so a kill keeps the data. */
-  private def runShard(spec: String, sfDir: String, budgetSecs: Double,
+    * spent, demotes queries whose warmup exceeds `demoteSecs` to one
+    * round, and rewrites `partialSink` after every timed round so a kill
+    * keeps the data. */
+  private[graft] def runShard(names: Vector[String], sfDir: String, runs: Int,
+      budgetSecs: Double, demoteSecs: Double,
       partialSink: Option[String]): ShardResult = {
-    val Array(iStr, nStr) = spec.split("/")
-    val (shard, nShards) = (iStr.toInt - 1, nStr.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val demoteSecs =
-      sys.env.getOrElse("GRAFT_BENCH_DEMOTE_SECS", "30").toDouble
     val start = System.nanoTime()
     def elapsedSecs = (System.nanoTime() - start) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = SparkEntry.queries.keys.toVector.sorted
-      .zipWithIndex.collect { case (n, ix) if ix % nShards == shard => n }
-    val failed = scala.collection.mutable.Set[String]()
+    val spark = Graft.session("graft-bench")
     // Ambient-load sentinel: a fixed, data-independent CPU-bound job whose
     // cost is a property of the MACHINE, not the code under test. Timed
     // once before the warmup and once after the last timed round; the pair
@@ -202,7 +201,7 @@ object Bench {
     // both published phantom regressions that this self-identifies.
     def sentinel(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 400000000L, 1, cpus.toInt)
+      spark.range(0L, 400000000L, 1, spark.sparkContext.defaultParallelism)
         .selectExpr("sum(id % 1000007) as s")
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
@@ -210,11 +209,12 @@ object Bench {
     // noop sink (not count()) so Catalyst can't prune the projected
     // expressions out from under the timer — every query runs its full work.
     def runOne(name: String): Double = {
+      spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
       val ok = try {
         SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); failed += name; false }
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
       val elapsed = (System.nanoTime() - t0) / 1e9
       // drop anything the query cached so the next one re-does its full work,
       // and collect the garbage it left so its GC debt isn't billed to the
@@ -239,11 +239,10 @@ object Bench {
     // parquet footers — so timed rounds measure steady state.
     sentinel() // untimed: JIT/codegen for the sentinel job itself
     val sentinelBefore = sentinel()
-    val warm = names.map(n => n -> runOne(n)).toMap
     // a transient warmup-only failure must not erase the query from the
     // totals — that would publish a phantom speedup; only timed-round
     // failures count (and then only the failed samples are discarded)
-    failed.clear()
+    val warm = names.map(n => n -> runOne(n)).toMap
     // a failed warmup reads -1, which never exceeds the demotion bar —
     // the query keeps its full rounds and a real failure surfaces there
     val demoted = names.filter(n => warm(n) > demoteSecs).toSet
@@ -308,8 +307,7 @@ object Bench {
     // CONFIGURED round count (demotion or budget shed) — the common
     // all-full case adds nothing; comparing against the observed max
     // would hide a uniformly-shed shard entirely
-    val fullRounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val shortRounds = results.filter(s => s.rounds < fullRounds && s.med >= 0)
+    val shortRounds = results.filter(s => s.rounds < benchRuns && s.med >= 0)
     val roundsJson = shortRounds
       .map(s => "\"" + s.name + "\":" + s.rounds).mkString("{", ",", "}")
     val partialJson = partial.map(p => s""","partial":"$p"""").getOrElse("")

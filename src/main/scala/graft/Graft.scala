@@ -3,18 +3,20 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Session + table helpers shared by the engine, Verify, Bench and tests. */
+/** Session + table helpers shared by the engine, its mains and tests. */
 object Graft {
 
-  /** Build a local session tuned for this container (32 threads, AQE on).
-    * On a real cluster the same conf minus `master` applies; AQE handles
-    * skew-joins and shuffle-partition coalescing at 100 TB. */
+  /** The one session recipe: every main and the test suite build their
+    * session here. The default master takes its core count from
+    * `SPARK_GRAFT_CPUS` (4 when unset), and shuffle partitions follow the
+    * master's parallelism. On a real cluster the same conf minus `master`
+    * applies; AQE handles skew-joins and shuffle-partition coalescing at
+    * 100 TB. */
   def session(appName: String = "graft",
-              master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
+              master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -26,6 +28,8 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.sparkContext.defaultParallelism.toLong)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -56,41 +60,14 @@ object Graft {
     * consumer a distinct fanout subtree, so the exchanges don't reuse —
     * while only compute-heavy map sides win. The operators that own
     * such compute opt in here; everything else keeps exchange-free
-    * scans. `spark.graft.map.fanout=false` disables. */
+    * scans. */
   def parallelizeMap(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
     // .rdd is illegal on a streaming frame — a future streaming caller
     // gets the unmodified frame, not an AnalysisException
     if (df.isStreaming) df
-    else if (!spark.conf.get("spark.graft.map.fanout", "true").toBoolean) df
     else {
-      val par = spark.sparkContext.defaultParallelism
+      val par = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-    }
-  }
-
-  /** Conditional small-file fanout for single-file readers (CsvIngest
-    * applies it after `_row_id` capture). No-op unless the file is a
-    * regular file whose estimated split count cannot reach the
-    * session's parallelism and whose size exceeds `minBytesConf`. */
-  def fanOutSmallScan(df: DataFrame, spark: SparkSession,
-      path: String): DataFrame = {
-    if (!spark.conf.get("spark.graft.scan.fanout", "true").toBoolean) df
-    else {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.isRegularFile(p)) df
-      else {
-        val size = java.nio.file.Files.size(p)
-        def bytes(s: String): Long =
-          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
-        val minBytes = bytes(
-          spark.conf.get("spark.graft.scan.fanoutMinBytes", "256k"))
-        val maxSplit = bytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-        val par = spark.sparkContext.defaultParallelism
-        val estSplits = (size + maxSplit - 1) / math.max(maxSplit, 1L)
-        if (size >= minBytes && estSplits < par) df.repartition(par) else df
-      }
     }
   }
 

@@ -19,14 +19,3 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ext.injectFunction((FunctionIdentifier(name), info, builder))
       }
 }
-
-object GraftExtensions {
-  /** Programmatic registration on an already-built session (the extensions
-    * config only applies at session construction). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    (IsoExpressions.registryEntries ++ VectorExpressions.registryEntries)
-      .foreach { case (name, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(
-          FunctionIdentifier(name), info, builder)
-      }
-}

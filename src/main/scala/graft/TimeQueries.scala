@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Standalone per-query timing for optimization work: the Bench protocol
-  * (untimed warmup, interleaved timed rounds, clearCache + gc between
-  * queries, noop sink, ambient sentinel before/after) over an explicit
-  * query subset — the honest floor measurement CLAUDE.md's adjudication
-  * recipe needs without a 40-minute full-suite run. NOT part of the
-  * driver contract; Bench stays the published bench.
+/** Standalone per-query timing for optimization work: Bench's timing core
+  * ([[Bench.runShard]]: untimed warmup, interleaved timed rounds,
+  * clearCache + gc between queries, noop sink, ambient sentinel
+  * before/after) over an explicit query subset, with no round budget and
+  * no demotion — an honest per-query floor without a 40-minute
+  * full-suite run. It prints no contract line; Bench stays the published
+  * bench.
   *
   * Usage: runMain graft.TimeQueries <sfDir> <rounds> <query> [query ...]
   * Heap: run under SPARK_DRIVER_MEM=16g for the heap-sensitive queries
@@ -16,54 +15,16 @@ import org.apache.spark.sql.SparkSession
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: TimeQueries <sfDir> <rounds> <q> [q ...]")
-    val sfDir = args(0)
-    val rounds = args(1).toInt
     val names = args.drop(2).toVector
     val missing = names.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def sentinel(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 400000000L, 1, cpus.toInt)
-        .selectExpr("sum(id % 1000007) as s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+    val res = Bench.runShard(names, args(0), args(1).toInt,
+      budgetSecs = Double.MaxValue, demoteSecs = Double.MaxValue,
+      partialSink = None)
+    println(f"sentinel [${res.sentinelBefore}%.3f, ${res.sentinelAfter}%.3f]")
+    res.stats.foreach { s =>
+      if (s.rounds == 0) println(s"${s.name} FAILED")
+      else println(f"${s.name}%-24s med=${s.med}%8.3f min=${s.min}%8.3f rounds=${s.rounds}")
     }
-    def runOne(name: String): Double = {
-      spark.sparkContext.setJobDescription(name)
-      val t0 = System.nanoTime()
-      val ok = try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save(); true
-      } catch { case e: Throwable =>
-        System.err.println(s"[time] $name FAILED: ${e.getMessage}"); false }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      System.gc()
-      if (ok) elapsed else -1.0
-    }
-    sentinel()
-    val s0 = sentinel()
-    names.foreach(runOne) // warmup
-    val samples = (1 to rounds).map { _ =>
-      Thread.sleep(200)
-      names.map(n => n -> runOne(n)).toMap
-    }
-    val s1 = sentinel()
-    println(f"sentinel [$s0%.3f, $s1%.3f]")
-    names.foreach { n =>
-      val good = samples.map(_(n)).filter(_ >= 0).sorted
-      if (good.isEmpty) println(s"$n FAILED")
-      else println(f"$n%-24s med=${good(good.length / 2)}%8.3f min=${good.head}%8.3f rounds=${good.length}")
-    }
-    spark.stop()
   }
 }

@@ -1,17 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the SAME session recipe as tests/Bench/PlanCheck (Graft.session):
-    // a hand-rolled builder here once omitted spark.sql.extensions, so a
-    // query using the SQL surface of the native expressions would fail in
-    // the correctness gate only
-    val spark = Graft.session("graft-verify", s"local[$cpus]")
+    // the SAME session recipe as the tests, Bench and PlanCheck
+    // (Graft.session): a hand-rolled builder here once omitted
+    // spark.sql.extensions, so a query using the SQL surface of the native
+    // expressions would fail in the correctness gate only
+    val spark = Graft.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // local iteration aid: GRAFT_VERIFY_ONLY=q1_agg,t8_repetition runs a
     // subset (the driver never sets it, so its gate always runs everything)

@@ -4,6 +4,7 @@ import java.io.{BufferedReader, FileInputStream, InputStreamReader}
 import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -208,14 +209,20 @@ object CsvIngest {
     // and skips the exchange; the 2m floor keeps small studies (e1's
     // 600 KB DM, the golden fixtures) exchange-free — their per-domain
     // work is too light to repay it (measured: e1 +1.4 s at 256k).
+    val scan = Paths.get(scanPath)
+    val size = if (Files.isRegularFile(scan)) Files.size(scan) else 0L
+    val maxSplit = math.max(1L, JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
+    val par = spark.sparkContext.defaultParallelism
     val fanned =
-      if (Files.size(Paths.get(scanPath)) >= org.apache.spark.network.util
-            .JavaUtils.byteStringAsBytes(
-              spark.conf.get("spark.graft.scan.csvFanoutMinBytes", "2m")))
-        graft.Graft.fanOutSmallScan(df, spark, scanPath)
+      if (size >= FanoutMinBytes && (size + maxSplit - 1) / maxSplit < par)
+        df.repartition(par)
       else df
     (fanned, headers)
   }
+
+  /** Size floor of the post-ingest scan fanout. */
+  private val FanoutMinBytes = 2L * 1024 * 1024
 
   private def dedupe(names: Seq[String]): Seq[String] = {
     val used = scala.collection.mutable.Set[String]()

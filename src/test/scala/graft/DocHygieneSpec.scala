@@ -47,4 +47,15 @@ class DocHygieneSpec extends AnyFunSuite {
         "attaches to nothing — move or merge the first block):\n  " +
         offenders.mkString("\n  "))
   }
+
+  test("only Graft.scala builds a SparkSession") {
+    // the needle is split so this spec does not match itself
+    val builder = java.util.regex.Pattern.compile("SparkSession" + """\s*\.\s*builder""")
+    val offenders = (scalaSources("src/main/scala") ++ scalaSources("src/test/scala"))
+      .filter(p => builder.matcher(
+        new String(Files.readAllBytes(p), "UTF-8")).find())
+    assert(offenders.map(_.getFileName.toString) == Seq("Graft.scala"),
+      "every session goes through Graft.session — found a builder in:\n  " +
+        offenders.mkString("\n  "))
+  }
 }

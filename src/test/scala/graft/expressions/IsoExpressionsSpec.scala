@@ -48,7 +48,8 @@ class IsoExpressionsSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_iso8601/graft_duration resolve after registration") {
-    graft.GraftExtensions.register(spark)
+    // registered by the shared session's spark.sql.extensions, the same
+    // Graft.session conf every main uses — never by hand
     val r = spark.sql(
       "SELECT graft_iso8601('15.01.2024') AS d, graft_duration('5d') AS dur")
       .head()
