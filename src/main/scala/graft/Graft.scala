@@ -71,6 +71,25 @@ object Graft {
     }
   }
 
+  /** The one place graft cuts lineage: runs `df` once, now, keeps its rows
+    * at `MEMORY_AND_DISK`, and returns a frame whose logical plan is a
+    * scan of those rows (output partitioning and ordering preserved). The
+    * rows keep their RDD lineage, so a lost block is recomputed rather
+    * than failing the query; the ContextCleaner frees them once the frame
+    * is unreachable.
+    *
+    * When to call it: only on a frame that is node-, agg- or
+    * sample-sized AND referenced more than once (iterative rounds,
+    * frontiers, sweep frames), or on one that is expensive to derive.
+    * An edge-sized frame that is merely re-referenced does not pay:
+    * exchange reuse already serves repeated identical subtrees, and the
+    * materialization job costs more than it saves (measured on the
+    * pageRank degree join and the negative-sampling positives). A
+    * builder that calls this runs a job at build time, so the plan-fact
+    * gates see only the plan after the cut. */
+  def materialize(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftBridge.persistedPlan(df)
+
   /** events table with `ts` normalized to a micros TimestampType (LTZ)
     * regardless of the physical parquet shape. The testdata has shipped
     * `ts` as TIMESTAMP(NANOS) (read as long via nanosAsLong) and as

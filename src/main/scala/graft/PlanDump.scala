@@ -6,9 +6,10 @@ package graft
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [query ...]
   * Writes <outDir>/<query>_<suffix>.txt per query (all queries when no
-  * names are given). The plan is the ANALYZED/physical pre-execution
-  * formatted explain — deterministic, no execution, so dumping the full
-  * suite stays cheap.
+  * names are given). The plan is the pre-execution formatted explain of
+  * the final query. Builders that call `Graft.materialize` run those
+  * jobs while the query is built, and their plan shows the materialized
+  * frames as scans.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

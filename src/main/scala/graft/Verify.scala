@@ -52,26 +52,12 @@ object Verify {
     val produced = registered.filter(n => Files.isDirectory(Paths.get(s"$outDir/$n")))
     println(s"[verify] produced ${produced.size} of ${registered.size} registered queries" +
       (if (failures.isEmpty) "" else s"; FAILED: ${failures.keys.mkString(",")}"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(e => selected(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val manifest = "{" +
-      s"${q("registered")}: [${registered.map(q).mkString(",")}]," +
-      s"${q("failed")}: {${failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString(",")}}" +
-      "}"
-    Files.writeString(Paths.get(s"$outDir/manifest.json"), manifest)
+    val mapper = graft.session.Persistence.mapper
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      mapper.writeValueAsString(SparkEntry.oracleSql.filter(e => selected(e._1))))
+    Files.writeString(Paths.get(s"$outDir/manifest.json"),
+      mapper.writeValueAsString(scala.collection.immutable.ListMap(
+        "registered" -> registered, "failed" -> failures)))
     spark.stop()
     // deliberately exit 0 even on per-query failure: the driver compares
     // whatever was produced, and a non-zero exit could make it discard the

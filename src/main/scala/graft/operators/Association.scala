@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Graft
+
 /**
  * Frequent-pair association mining over basket data — the co-occurrence
  * rule extraction behind recommendations ("customers who bought A...")
@@ -53,13 +55,13 @@ object Association {
       minPairCount: Long, opName: String): (DataFrame, Long) = {
     require(minPairCount >= 1,
       s"$opName: minPairCount must be >= 1, got $minPairCount")
-    // checkpointed: the nBaskets count below already materializes this
-    // subtree eagerly, and it is referenced three more times (item counts
-    // + pair build) — each reference would re-run the distinct
-    val bi = df.select(col(basketCol).as("b"), col(itemCol).as("i"))
-      .where(col("b").isNotNull && col("i").isNotNull)
-      .distinct()
-      .localCheckpoint()
+    // materialized: the nBaskets count below already runs this subtree
+    // eagerly, and it is referenced three more times (item counts + pair
+    // build) — each reference would re-run the distinct
+    val bi = Graft.materialize(
+      df.select(col(basketCol).as("b"), col(itemCol).as("i"))
+        .where(col("b").isNotNull && col("i").isNotNull)
+        .distinct())
     val nBaskets = bi.select("b").distinct().count()
     require(nBaskets > 0, s"$opName: no baskets")
     val itemCounts = bi.groupBy(col("i")).agg(count(lit(1)).as("n_i"))
@@ -171,13 +173,13 @@ object Association {
       minCount: Long = 2L): DataFrame = {
     require(minCount >= 1,
       s"frequentTriples: minCount must be >= 1, got $minCount")
-    // same build rules as assocCounts: checkpoint the eagerly-counted
+    // same build rules as assocCounts: materialize the eagerly-counted
     // distinct frame; [[groupedTriples]] replaces the TWO basket
     // self-joins with one shuffle + chained explodes
-    val bi = df.select(col(basketCol).as("b"), col(itemCol).as("i"))
-      .where(col("b").isNotNull && col("i").isNotNull)
-      .distinct()
-      .localCheckpoint()
+    val bi = Graft.materialize(
+      df.select(col(basketCol).as("b"), col(itemCol).as("i"))
+        .where(col("b").isNotNull && col("i").isNotNull)
+        .distinct())
     val nBaskets = bi.select("b").distinct().count()
     require(nBaskets > 0, "frequentTriples: no baskets")
     val itemCounts = bi.groupBy(col("i")).agg(count(lit(1)).as("n_i"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Graft
+
 /**
  * Deduplication operators for large-scale training-data pipelines: exact,
  * token/n-gram Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
@@ -17,16 +19,15 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  // Caching note: these pipelines deliberately hold NO cache and stay fully
-  // lazy. An earlier revision cached the token/fingerprint relations and
-  // eagerly localCheckpoint'ed the result — that accumulated executor-pinned
-  // storage across calls, truncated lineage (an executor loss after the call
-  // made the result unrecoverable instead of recomputable), and blinded the
-  // plan-regression pins because construction executed the query. Lazy
-  // recompute-from-lineage is the shape that survives a 1000-executor run:
-  // the self-join sides below are identical subplans, so Catalyst's
-  // ReuseExchange computes their shuffle once, and the remaining token-scan
+  // Materialization note: the pair/candidate pipelines hold no cache and
+  // stay lazy — their self-join sides are identical subplans, so Catalyst's
+  // ReuseExchange computes each shuffle once, and the remaining token-scan
   // repetition is cheap projection work against a column-pruned scan.
+  // Caching or materializing them would pin storage across calls and run
+  // the whole query at build time. Only two operators materialize
+  // (Graft.materialize): [[duplicateClustersConverged]], whose round count
+  // is data-driven, and [[bandingSweep]], whose sample-sized frames are
+  // each referenced many times.
 
   // ---- exact --------------------------------------------------------------
 
@@ -135,7 +136,7 @@ object Dedup {
    * the converged variant offline when the graph shape is unknown. Each iteration
    * here is one equi-join + one min-aggregation (all map-side combinable);
    * the plan depth grows linearly with `iters` — for genuinely deep graphs
-   * the converged variant checkpoints per round instead of building one
+   * the converged variant materializes per round instead of building one
    * enormous plan.
    */
   def duplicateClusters(pairs: DataFrame, iCol: String = "i",
@@ -178,29 +179,24 @@ object Dedup {
    * P31 fixed-point variant: min-label propagation iterated EAGERLY until
    * no label changes, so a chain-shaped component can never silently come
    * back split (the bounded [[duplicateClusters]]'s documented failure
-   * mode). Each round localCheckpoints its label frame — the plan stays
-   * one-join deep regardless of graph diameter and the per-round
-   * changed-label count is a cheap aggregate over the checkpointed frame.
-   * Throws after `maxIters` non-converged rounds rather than returning
-   * wrong labels. Deliberately NOT used inside `queries()` builders (d8
-   * keeps the bounded, fully-lazy form): its round count is data-driven,
-   * so the plan a gate sees would vary with the corpus. Note the r12
-   * nuance on checkpoints generally: several FIXED-round builders now do
-   * checkpoint (hits, steadyState, kHopReach, bandingSweep) where
-   * measurement justified it — the plan-facts gates then see only the
-   * post-checkpoint plan, a documented tradeoff pinned by GraphPlanSpec's
-   * linear-plan bounds.
+   * mode). Each round materializes its label frame (Graft.materialize) —
+   * the plan stays one-join deep regardless of graph diameter and the
+   * per-round changed-label test is a cheap scan of the materialized
+   * frame. Throws after `maxIters` non-converged rounds rather than
+   * returning wrong labels. Deliberately NOT used inside `queries()`
+   * builders (d8 keeps the bounded, fully-lazy form): its round count is
+   * data-driven, so the plan a gate sees would vary with the corpus.
    */
   def duplicateClustersConverged(pairs: DataFrame, iCol: String = "i",
       jCol: String = "j", maxIters: Int = 50): DataFrame = {
     require(maxIters >= 1, s"duplicateClustersConverged: maxIters must be >= 1, got $maxIters")
-    // the edge list is scanned every round — checkpoint it once so the
+    // the edge list is scanned every round — materialize it once so the
     // upstream pair-producer pipeline (LSH, shingles, …) runs exactly once
-    val sym = pairs.select(col(iCol).as("id"), col(jCol).as("nb"))
-      .union(pairs.select(col(jCol).as("id"), col(iCol).as("nb")))
-      .localCheckpoint()
-    var labels = sym.select(col("id")).distinct()
-      .withColumn("cluster_id", col("id")).localCheckpoint()
+    val sym = Graft.materialize(
+      pairs.select(col(iCol).as("id"), col(jCol).as("nb"))
+        .union(pairs.select(col(jCol).as("id"), col(iCol).as("nb"))))
+    var labels = Graft.materialize(sym.select(col("id")).distinct()
+      .withColumn("cluster_id", col("id")))
     var iter = 0
     var changed = true
     while (changed && iter < maxIters) {
@@ -208,18 +204,17 @@ object Dedup {
       val nbMin = sym
         .join(labels.select(col("id").as("nb"), col("cluster_id").as("__nbc")), Seq("nb"))
         .groupBy("id").agg(min("__nbc").as("__m"))
-      val next = labels.join(nbMin, Seq("id"), "left")
+      val next = Graft.materialize(labels.join(nbMin, Seq("id"), "left")
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("__m"), col("cluster_id")))
             .as("cluster_id"),
-          coalesce(col("__m") < col("cluster_id"), lit(false)).as("__changed"))
-        .localCheckpoint()
-      // only "did ANY label move" matters — take(1) over the checkpointed
+          coalesce(col("__m") < col("cluster_id"), lit(false)).as("__changed")))
+      // only "did ANY label move" matters — take(1) over the materialized
       // blocks short-circuits at the first changed row in every round but
       // the final (empty) one, where it costs the same scan count() did
       changed = !next.where(col("__changed")).isEmpty
-      // the superseded round's checkpoint blocks are reclaimed by the
-      // ContextCleaner once this reassignment drops the last reference
+      // the superseded rounds' blocks are reclaimed by the ContextCleaner
+      // once the returned frame (whose lineage holds them) is dropped
       labels = next.drop("__changed")
     }
     if (changed) throw new IllegalStateException(
@@ -1266,31 +1261,29 @@ object Dedup {
     // below) but referenced many times: tokens 4x (signatures, sizes, both
     // intersection sides), the signature frame once per ladder member, the
     // truth set twice per member — the lazy form unrolled to 144 parquet
-    // scans (measured r12). Materialize each once (the gr8 lineage rule).
-    val tokens = docTokens(df, idCol, textCol, fanOut = false).localCheckpoint()
+    // scans (measured r12), so each is materialized once.
+    val tokens = Graft.materialize(docTokens(df, idCol, textCol, fanOut = false))
     val h = pmod(Sampling.hashValue(col("token"), "mh:"), lit(HashPrime))
     val sigExprs = hashCoeffs(numHashes, seed).zipWithIndex.map {
       case ((a, b), i) =>
         min(pmod(col("__h") * lit(a) + lit(b), lit(HashPrime))).as(s"__m$i")
     }
-    val sigs = tokens.withColumn("__h", h)
-      .groupBy("id").agg(sigExprs.head, sigExprs.tail: _*)
-      .localCheckpoint()
+    val sigs = Graft.materialize(tokens.withColumn("__h", h)
+      .groupBy("id").agg(sigExprs.head, sigExprs.tail: _*))
     val sizes = tokens.groupBy("id").agg(count(lit(1)).as("sz"))
     val inter = tokens.select(col("id").as("i"), col("token"))
       .join(tokens.select(col("id").as("j"), col("token")), Seq("token"))
       .where(col("i") < col("j"))
       .groupBy("i", "j").agg(count(lit(1)).as("__x"))
     val thr = thresholdPct / 100.0
-    val truth = inter
+    val truth = Graft.materialize(inter
       .join(sizes.select(col("id").as("i"), col("sz").as("__si"))
         .hint("shuffle_hash"), Seq("i"))
       .join(sizes.select(col("id").as("j"), col("sz").as("__sj"))
         .hint("shuffle_hash"), Seq("j"))
       .where(round(col("__x").cast("double") /
         (col("__si") + col("__sj") - col("__x")).cast("double"), 6) >= thr)
-      .select(col("i"), col("j"))
-      .localCheckpoint()
+      .select(col("i"), col("j")))
     rowsPerBandLadder.sorted.map { r =>
       val bands = numHashes / r
       val keyed = sigs.select(col("id") +:
@@ -1306,12 +1299,12 @@ object Dedup {
           col("__bk.key").as("key"))
       // materialized: the candidate set feeds both the count and the
       // truth semi-join — the lazy form ran the band self-join twice
-      val cand = exploded.select(col("id").as("i"), col("band"), col("key"))
-        .join(exploded.select(col("id").as("j"), col("band"), col("key"))
-          .hint("shuffle_hash"), Seq("band", "key"))
-        .where(col("i") < col("j"))
-        .select(col("i"), col("j")).distinct()
-        .localCheckpoint()
+      val cand = Graft.materialize(
+        exploded.select(col("id").as("i"), col("band"), col("key"))
+          .join(exploded.select(col("id").as("j"), col("band"), col("key"))
+            .hint("shuffle_hash"), Seq("band", "key"))
+          .where(col("i") < col("j"))
+          .select(col("i"), col("j")).distinct())
       val nc = cand.agg(count(lit(1)).as("n_candidates"))
       val nt = truth.agg(count(lit(1)).as("n_true"))
       val nh = cand.join(truth.hint("shuffle_hash"), Seq("i", "j"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Graft
+
 /**
  * Bounded-iteration graph analytics over edge lists — the link-analysis
  * pass a training pipeline runs to weight documents by reference
@@ -61,15 +63,13 @@ object Graph {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     require(dampingPct >= 1 && dampingPct <= 99,
       s"pageRank: dampingPct must be in [1,99], got $dampingPct")
-    // one materialization of the distinct edge list (the gr8 lineage
-    // rule): the builder below already runs an eager count over this
-    // subtree for N, and every iteration re-references it through
-    // withDeg — checkpointing makes the (often expensive) upstream edge
-    // build run exactly once instead of once per reference
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+    // expensive to derive: the eager count for N below already runs this
+    // subtree, and every iteration re-references it through withDeg —
+    // materialized, the upstream edge build runs once
+    val e = Graft.materialize(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
+        .distinct())
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // The caller contract (above) is outdeg ≥ 1 everywhere, so the vertex
     // set IS deg's key set — the r10 form rebuilt it as a distinct over
@@ -80,7 +80,7 @@ object Graph {
     val n = verts.count()
     require(n > 0, "pageRank: empty graph")
     val teleport = ((100L - dampingPct) * Scale / 100L) / n
-    // NOT checkpointed (measured r12: materializing the edge-sized degree
+    // NOT materialized (measured r12: materializing the edge-sized degree
     // join cost more than it saved — the shuffle_hash join already leaves
     // it src-partitioned and exchange reuse serves the per-iter references)
     val withDeg = e.join(deg.hint("shuffle_hash"), Seq("src"))
@@ -125,10 +125,10 @@ object Graph {
    */
   def triangleCounts(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    // materialized once: und feeds both the degree agg and the oriented
-    // edge build, each of which would otherwise re-run the upstream
-    // edge-derivation pipeline (the gr8 lineage rule)
-    val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
+    // materialized: und feeds both the degree agg and the oriented edge
+    // build, and its upstream edge derivation is expensive (the lazy form
+    // measured slower on gr2, local[4]: 16.5–19.1 s vs 15.6–17.3 s at sf0.1)
+    val und = Graft.materialize(canonicalUndirected(edges, srcCol, dstCol))
     triangleCountsOf(und, nodeDegrees(und))
   }
 
@@ -170,8 +170,8 @@ object Graph {
     // the oriented edge frame is referenced THREE times below (both wedge
     // sides + the closing semi-join) — materialize it once, partitioned by
     // the wedge apex so the wedge self-join reads both sides exchange-free
-    // (the checkpoint preserves the physical partitioning)
-    val e = und
+    // (materialize preserves the physical partitioning)
+    val e = Graft.materialize(und
       .join(deg.select(col("node").as("u"), col("deg").as("du"))
         .hint("shuffle_hash"), Seq("u"))
       .join(deg.select(col("node").as("v"), col("deg").as("dv"))
@@ -179,7 +179,7 @@ object Graph {
       .select(when(su < sv, col("u")).otherwise(col("v")).as("a"),
         when(su < sv, col("v")).otherwise(col("u")).as("b"),
         when(su < sv, sv).otherwise(su).as("rb"))
-      .repartition(col("a")).localCheckpoint()
+      .repartition(col("a")))
     val wedges = e.as("e1")
       .join(e.as("e2").hint("shuffle_hash"),
         col("e1.a") === col("e2.a") && col("e1.rb") < col("e2.rb"))
@@ -211,8 +211,9 @@ object Graph {
    */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    // same materialization rationale as [[triangleCounts]]
-    val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
+    // materialized for the same reason as in [[triangleCounts]]; here the
+    // lazy form would also re-derive the edges for the final degree frame
+    val und = Graft.materialize(canonicalUndirected(edges, srcCol, dstCol))
     val deg = nodeDegrees(und)
     deg.where(col("deg") >= 2)
       .join(triangleCountsOf(und, deg).hint("shuffle_hash"),
@@ -355,7 +356,7 @@ object Graph {
    * but with one self-reference per round instead of three: the r10
    * plan cloned the `alive` subtree 3^iters times (~1000 parquet scans
    * at iters = 3, measured r11-opt) and shuffled twice the rows. Plan
-   * growth is now LINEAR in `iters` (localCheckpoint past ~10 rounds
+   * growth is now LINEAR in `iters` (Graft.materialize past ~10 rounds
    * at scale remains the escape hatch).
    */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
@@ -485,25 +486,18 @@ object Graph {
       iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 16,
       s"hits: iters must be in 1..16, got $iters")
-    // Lineage discipline (the r11 kCorePeel rule, checkpoint form): the L1
-    // normalization must reference its input twice (the total agg + the
-    // scalar join-back — a global sum has no single-reference window form
-    // that stays distributed), so each round DOUBLED the unrolled plan:
-    // 368 parquet scans at iters = 2, 2^(2·iters) growth, and every clone
-    // re-ran the upstream edge build. localCheckpoint materializes the
-    // edge list once and each round's AGG-SIZED raw score frame (≤ one row
-    // per node), truncating the lineage so the plan stays LINEAR in iters
-    // and the edge build runs exactly once. Values are untouched — a
-    // checkpoint stores the same rows the lazy plan computes (GraphSpec
-    // pins the unrolled arithmetic; GraphPlanSpec pins the linear plan) —
-    // and the per-round jobs run inside the caller's timed action. At
-    // scale this is the standard iterative-graph shape (materialize per
-    // superstep); the checkpointed frames are node-sized, never edge-sized,
-    // except the edge list itself which any HITS round must hold anyway.
-    val e = edges.select(col(leftCol).as("l"), col(rightCol).as("r"))
-      .where(col("l").isNotNull && col("r").isNotNull)
-      .distinct()
-      .localCheckpoint()
+    // The L1 normalization must reference its input twice (the total agg
+    // + the scalar join-back — a global sum has no single-reference
+    // window form that stays distributed), so each lazy round DOUBLED the
+    // unrolled plan: 368 parquet scans at iters = 2, and every clone
+    // re-ran the upstream edge build. Materializing the edge list once and
+    // each round's agg-sized raw score frame (≤ one row per node) keeps
+    // the plan linear in iters (GraphPlanSpec) and runs the edge build
+    // once — the standard materialize-per-superstep shape.
+    val e = Graft.materialize(
+      edges.select(col(leftCol).as("l"), col(rightCol).as("r"))
+        .where(col("l").isNotNull && col("r").isNotNull)
+        .distinct())
     def normalized(scores: DataFrame, idCol: String): DataFrame = {
       val tot = scores.agg(
         sum(col("__s").cast("decimal(28,9)")).cast("double").as("__tot"))
@@ -517,16 +511,16 @@ object Graph {
       round(lit(1.0) / col("__nl").cast("double"), 9).as("score"))
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
-      auth = normalized(
+      auth = normalized(Graft.materialize(
         e.join(hub.hint("shuffle_hash"), Seq("l"))
           .groupBy(col("r"))
           .agg(sum(col("score").cast("decimal(28,9)")).cast("double")
-            .as("__s")).localCheckpoint(), "r")
-      hub = normalized(
+            .as("__s"))), "r")
+      hub = normalized(Graft.materialize(
         e.join(auth.hint("shuffle_hash"), Seq("r"))
           .groupBy(col("l"))
           .agg(sum(col("score").cast("decimal(28,9)")).cast("double")
-            .as("__s")).localCheckpoint(), "l")
+            .as("__s"))), "l")
     }
     hub.select(lit("hub").as("kind"), col("l").as("id"), col("score"))
       .union(auth.select(lit("auth").as("kind"), col("r").as("id"),
@@ -649,30 +643,28 @@ object Graph {
       hops: Int): DataFrame = {
     require(hops >= 1 && hops <= 6,
       s"kHopReach: hops must be in 1..6, got $hops")
-    // Lineage discipline (the gr8 rule): every frontier is referenced by
-    // the NEXT frontier's expansion, by every LATER frontier's anti-join,
-    // and by its own closing count — the lazy chain held 132 parquet
-    // scans at hops = 3 and grows ~3^hops. The undirected edge list and
-    // each NODE-SIZED frontier are materialized once (localCheckpoint);
-    // values are untouched — pure set semantics over the same frames.
-    val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
+    // Every frontier is referenced by the NEXT frontier's expansion, by
+    // every LATER frontier's anti-join, and by its own closing count — the
+    // lazy chain held 132 parquet scans at hops = 3 and grows ~3^hops, so
+    // each node-sized frontier is materialized. The edge list feeds two
+    // separate materializations (dirE, seed), so it is materialized too
+    // (lazy, gr12 read 7.2–8.9 s vs 5.6–6.2 s at sf0.1, local[4]).
+    val und = Graft.materialize(canonicalUndirected(edges, srcCol, dstCol))
     // pre-partitioned by the expansion key: every hop joins on a, so the
-    // edge exchange happens once here instead of once per hop (the
-    // checkpoint preserves the physical partitioning)
-    val dirE = bothDirections(und, "a", "b")
-      .repartition(col("a")).localCheckpoint()
-    val seed = nodeDegrees(und)
+    // edge exchange happens once here instead of once per hop
+    // (materialize preserves the physical partitioning)
+    val dirE = Graft.materialize(bothDirections(und, "a", "b")
+      .repartition(col("a")))
+    val seed = Graft.materialize(nodeDegrees(und)
       .orderBy(col("deg").desc, col("node").asc).limit(1)
-      .select(col("node"))
-      .localCheckpoint()
+      .select(col("node")))
     var fronts = Vector[DataFrame](seed)
     for (_ <- 1 to hops) {
       val reached = fronts.last
         .join(dirE.hint("shuffle_hash"), col("node") === col("a"))
         .select(col("b").as("node")).distinct()
-      val next = fronts.foldLeft(reached)((acc, f) =>
-        acc.join(f.hint("shuffle_hash"), Seq("node"), "left_anti"))
-        .localCheckpoint()
+      val next = Graft.materialize(fronts.foldLeft(reached)((acc, f) =>
+        acc.join(f.hint("shuffle_hash"), Seq("node"), "left_anti")))
       fronts = fronts :+ next
     }
     // DENSIFY the hop spine: a saturated graph empties late frontiers,

@@ -308,13 +308,13 @@ object Sampling {
     require(itemMax >= itemMin,
       s"negativeSample: empty item range [$itemMin, $itemMax]")
     val n = itemMax - itemMin + 1
-    // checkpointed: referenced by both the candidate generator and the
-    // positives anti-join — each reference re-ran the upstream
-    // interaction build + distinct (the gr8 lineage rule)
+    // NOT materialized: the candidate generator and the positives
+    // anti-join read it in one query, so exchange reuse runs the distinct
+    // once (lazy measured equal: sa12 at sf0.1, local[4], median 5.68 s vs
+    // 5.67 s materialized)
     val pos = df.select(col(userCol).as("user"), col(itemCol).as("item"))
       .where(col("user").isNotNull && col("item").isNotNull)
       .distinct()
-      .localCheckpoint()
     val key = concat_ws("|", col("user").cast("string"),
       col("item").cast("string"), col("j").cast("string"))
     val cands = pos

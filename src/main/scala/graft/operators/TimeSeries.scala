@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Graft
+
 /**
  * Per-key rolling features over an ordered event stream — the feature-
  * engineering pass a training pipeline runs over clickstream/telemetry
@@ -1155,10 +1157,9 @@ object TimeSeries {
       s"steadyState: iters must be in 1..16, got $iters")
     // The transition matrix is AGG-SIZED by definition (≤ |states|² cells),
     // but its upstream (typically a corpus-sized lead window) is referenced
-    // by the states build + every unrolled round — materialize the cells
-    // once so the upstream runs exactly once (the gr8 lineage rule; values
-    // untouched, TimeSeriesSpec pins the unrolled arithmetic)
-    val cells = trans.localCheckpoint()
+    // by the states build + every unrolled round — materialized, the
+    // upstream runs exactly once
+    val cells = Graft.materialize(trans)
     val states = cells.select(col(fromCol).as("state"))
       .union(cells.select(col(toCol).as("state"))).distinct()
     val k = states.agg(count(lit(1)).as("__k"))

@@ -56,7 +56,8 @@ object Persistence {
   /** `types/mod.rs:36` — 3 id bytes + one format-generation byte. */
   val MagicBytes: Array[Byte] = Array('G'.toByte, 'T'.toByte, 'S'.toByte, 0x01.toByte)
 
-  private val mapper = {
+  /** Jackson with Scala collections — also writes Verify's JSON files. */
+  private[graft] val mapper = {
     val m = new ObjectMapper()
     m.registerModule(DefaultScalaModule)
     m

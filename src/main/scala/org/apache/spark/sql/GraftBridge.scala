@@ -6,6 +6,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.storage.StorageLevel
 
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -18,8 +20,35 @@ object GraftBridge {
 
   /** True when the session's SQL cache manager holds no cached plans —
     * lets tests assert that operators release every `Dataset.cache()` they
-    * take (localCheckpoint persists RDD-level only and doesn't register
-    * here, so scoped-cache leaks are isolated from checkpoint storage). */
+    * take. `graft.Graft.materialize` persists at the RDD level and does
+    * not register here, so scoped-cache leaks are isolated from
+    * materialized frames. */
   def noCachedPlans(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  /** The body of `graft.Graft.materialize`: execute `df`'s physical plan
+    * once as one SQL execution (as `Dataset.localCheckpoint` does), keep
+    * its rows persisted at `MEMORY_AND_DISK` (the level `localCheckpoint`
+    * uses), and return a frame whose logical plan is a `LogicalRDD` over
+    * them. The RDD keeps its lineage, so a lost block is recomputed. */
+  def persistedPlan(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+      val rows = qe.executedPlan.execute().map(_.copy())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      rows.count()
+      classic.Dataset.ofRows(ds.sparkSession,
+        LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+    }
+  }
+
+  /** Drop every block of every persisted RDD, leaving each RDD's storage
+    * level set — what executor loss does to cached and materialized
+    * data. */
+  def dropRddBlocks(spark: SparkSession): Unit = {
+    val master = spark.sparkContext.env.blockManager.master
+    spark.sparkContext.getPersistentRDDs.keys.foreach(
+      id => master.removeRdd(id, blocking = true))
+  }
 }

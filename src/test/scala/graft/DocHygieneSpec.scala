@@ -58,4 +58,18 @@ class DocHygieneSpec extends AnyFunSuite {
       "every session goes through Graft.session — found a builder in:\n  " +
         offenders.mkString("\n  "))
   }
+
+  test("lineage is cut only through Graft.materialize") {
+    // split needles, as above; `checkpointEvery` (a parameter name) must
+    // not match, so the call form needs the dot and the paren
+    val cut = java.util.regex.Pattern.compile(
+      """\.(local""" + """Checkpoint|check""" + """point)\s*\(""")
+    val offenders = scalaSources("src/main/scala")
+      .filter(p => cut.matcher(
+        new String(Files.readAllBytes(p), "UTF-8")).find())
+    assert(offenders.isEmpty,
+      "a bare checkpoint drops RDD lineage, so a lost block fails the " +
+        "query — call Graft.materialize instead:\n  " +
+        offenders.mkString("\n  "))
+  }
 }

@@ -105,13 +105,12 @@ class PlanFactsSpec extends SparkSpec {
     // metadata/agg-sized frames (fold grids, bucket ladders, k-row
     // rankings — benign at any scale). A NEW corpus-sized global window
     // must fail here instead of being grep-discovered by a judge.
-    // Detection is on the optimized LOGICAL plan (no execution of the
-    // FINAL query — though since r12 a few builders localCheckpoint
-    // intermediate frames, so building those queries runs small jobs and
-    // this gate sees only their post-checkpoint plans; GraphPlanSpec
-    // bounds what the checkpoints hide). Logical Window partitionSpec
-    // survives unchanged into WindowExec, and AQE neither adds nor
-    // removes window operators.
+    // Detection is on the optimized LOGICAL plan of the final query,
+    // which is never executed. Builders that call Graft.materialize run
+    // those frames at build time, so this gate sees them only as scans;
+    // GraphPlanSpec bounds the plans behind them. Logical Window
+    // partitionSpec survives unchanged into WindowExec, and AQE neither
+    // adds nor removes window operators.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow, WindowGroupLimit}
     val allowed = PlanFactsSpec.adjudicatedUnpartitionedWindowQueries
     val offenders = scala.collection.mutable.ListBuffer[String]()

@@ -12,13 +12,14 @@ import graft.SparkSpec
  * mm10 240 before the fixes), which reads here as a plan-size RATIO far
  * above the linear bound when iters doubles: linear growth gives
  * size(2k) ≤ 2·size(k) (+ slack for the constant prologue), exponential
- * gives ≥ 2^k×. Checkpointed operators (hits, steadyState, kHopReach)
- * additionally truncate lineage to ~constant size per round and pass the
- * same bound trivially; duplicateClusters stays fully lazy and linear.
+ * gives ≥ 2^k×. Operators that materialize per round (hits,
+ * steadyState, kHopReach, via Graft.materialize) cut the logical plan to
+ * ~constant size per round and pass the same bound trivially;
+ * duplicateClusters stays fully lazy and linear.
  *
- * These builders run their materialization jobs at build time (the r12
- * checkpoint discipline), so this spec EXECUTES small jobs — inputs are
- * k-row literal frames, not corpus data.
+ * Those builders run their materialization jobs at build time, so this
+ * spec EXECUTES small jobs — inputs are k-row literal frames, not corpus
+ * data.
  */
 class GraphPlanSpec extends SparkSpec {
 
@@ -33,7 +34,7 @@ class GraphPlanSpec extends SparkSpec {
       s"$name optimized plan grew superlinearly in iters: " +
         s"$small nodes -> $large nodes when iters doubled — a second " +
         "self-reference per round is back (the 2^iters lineage class " +
-        "r12 removed); restore the single-reference/checkpoint form")
+        "r12 removed); restore the single-reference/materialize form")
 
   test("hits plan is linear in iters") {
     import spark.implicits._
