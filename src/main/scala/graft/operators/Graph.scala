@@ -103,39 +103,40 @@ object Graph {
 
   /**
    * P117 — per-node triangle counts over an undirected edge list, via
-   * the degree-ordered node-iterator (the standard distributed triangle
-   * algorithm): orient every canonical edge from its lower-(degree, id)
-   * endpoint to the higher, enumerate wedges from each node's ordered
-   * out-neighborhood, and semi-join against the oriented edges to close
-   * them — each triangle counted exactly once at its lowest-rank apex.
-   * Degree ordering bounds the wedge fan-out by O(√m) out-degree instead
-   * of the raw max degree, which is what keeps hub nodes from exploding
-   * the wedge join at web-graph scale. Returns (node, tri_cnt) for every
-   * node in ≥ 1 triangle — the clique-density diagnostic for dup-cluster
-   * graphs and co-occurrence networks.
+   * degree-ordered adjacency intersection ("compact-forward"): orient
+   * every canonical edge from its lower-(degree, id) endpoint to the
+   * higher, collect each node's oriented out-list N+, and for every
+   * oriented edge a → b intersect N+(a) with N+(b) — each common c closes
+   * one triangle, counted exactly once at its lowest-order edge. No wedge
+   * is ever emitted, and degree ordering bounds every out-list by O(√m)
+   * instead of the raw max degree, which is what keeps hub nodes from
+   * exploding the intersection at web-graph scale. Returns (node,
+   * tri_cnt) for every node in ≥ 1 triangle — the clique-density
+   * diagnostic for dup-cluster graphs and co-occurrence networks.
    *
    * Shape: canonical distinct + one degree agg; the total order over
    * nodes is the LEXICOGRAPHIC struct(deg, node) comparison directly —
    * no dense rank, so there is NO global window anywhere in the plan
    * (the r9 version ranked all nodes through one partition; struct
-   * ordering gives the identical total order shuffle-free). All joins
-   * are equi-keyed with shuffle_hash hints (post-agg no-stats rule).
-   * The oracle proves the orientation is an identity: it counts the
-   * same triangles by plain id-order three-way join.
+   * ordering gives the identical total order shuffle-free). The out-list
+   * agg and both list joins are equi-keyed, with shuffle_hash hints
+   * (post-agg no-stats rule); no join carries a residual condition. The
+   * oracle proves the orientation is an identity: it counts the same
+   * triangles by plain id-order three-way join.
    */
   def triangleCounts(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
     // materialized: und feeds both the degree agg and the oriented edge
-    // build, and its upstream edge derivation is expensive (the lazy form
-    // measured slower on gr2, local[4]: 16.5–19.1 s vs 15.6–17.3 s at sf0.1)
+    // build, and its upstream edge derivation (a basket self-join in gr2)
+    // is expensive; the lazy form measured no faster on gr2
     val und = Graft.materialize(canonicalUndirected(edges, srcCol, dstCol))
     triangleCountsOf(und, nodeDegrees(und))
   }
 
   /** The ONE canonical undirected-edge build (least/greatest + junk
-    * filter + distinct) shared by the triangle family — P188's cc is
-    * only correct if numerator and denominator read the SAME graph, so
-    * the canonicalization rule must exist exactly once. */
+    * filter + distinct) shared by every undirected operator here — P188's
+    * cc is only correct if numerator and denominator read the SAME graph,
+    * so the canonicalization rule must exist exactly once. */
   private def canonicalUndirected(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
     edges
@@ -143,7 +144,6 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct()
-
 
   /** Both orientations of a canonical (u, v) edge frame in ONE pass:
     * the r10 `und ∪ swap(und)` union referenced the (often expensive)
@@ -167,29 +167,28 @@ object Graph {
     // conditional would see two distinct StructTypes
     val su = struct(col("du").as("d"), col("u").as("n"))
     val sv = struct(col("dv").as("d"), col("v").as("n"))
-    // the oriented edge frame is referenced THREE times below (both wedge
-    // sides + the closing semi-join) — materialize it once, partitioned by
-    // the wedge apex so the wedge self-join reads both sides exchange-free
-    // (materialize preserves the physical partitioning)
+    // the oriented edge frame feeds both the adjacency agg and the
+    // intersection join — materialized, its degree joins run once
     val e = Graft.materialize(und
       .join(deg.select(col("node").as("u"), col("deg").as("du"))
         .hint("shuffle_hash"), Seq("u"))
       .join(deg.select(col("node").as("v"), col("deg").as("dv"))
         .hint("shuffle_hash"), Seq("v"))
       .select(when(su < sv, col("u")).otherwise(col("v")).as("a"),
-        when(su < sv, col("v")).otherwise(col("u")).as("b"),
-        when(su < sv, sv).otherwise(su).as("rb"))
-      .repartition(col("a")))
-    val wedges = e.as("e1")
-      .join(e.as("e2").hint("shuffle_hash"),
-        col("e1.a") === col("e2.a") && col("e1.rb") < col("e2.rb"))
-      .select(col("e1.a").as("apex"), col("e1.b").as("x"), col("e2.b").as("y"))
-    // order(x) < order(y) in the struct(deg, node) total order, so the
-    // closing edge — if present — is oriented (x → y); a left-semi
-    // keeps each closed wedge exactly once
-    val tri = wedges.join(e.as("e3").hint("shuffle_hash"),
-      col("x") === col("e3.a") && col("y") === col("e3.b"), "left_semi")
-    tri.select(explode(array(col("apex"), col("x"), col("y"))).as("node"))
+        when(su < sv, col("v")).otherwise(col("u")).as("b")))
+    val adj = e.groupBy("a").agg(collect_list(col("b")).as("na"))
+    // for an oriented edge a → b, every c in N+(a) ∩ N+(b) has
+    // order(a) < order(b) < order(c): each triangle closes exactly once,
+    // at its lowest-order edge. adj streams and e builds, so the rows
+    // leaving the first join carry each list on consecutive rows and the
+    // shuffle on b compresses the repeats (with the sides swapped it
+    // wrote 8× the bytes on the perfbench co-purchase graph)
+    val tri = adj.join(e.hint("shuffle_hash"), Seq("a"))
+      .join(adj.select(col("a").as("b"), col("na").as("nb"))
+        .hint("shuffle_hash"), Seq("b"))
+      .select(col("a"), col("b"),
+        explode(array_intersect(col("na"), col("nb"))).as("c"))
+    tri.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("tri_cnt"))
   }
 
@@ -204,10 +203,10 @@ object Graph {
    * every node with deg ≥ 2 (one edge defines no angle); nodes in no
    * triangle carry cc = 0, not null — a star center's 0 is a finding.
    *
-   * Shape: [[triangleCounts]] (degree-ordered wedges, no global
-   * window) + the same degree agg, one left equi-join; cc is one
-   * double division of exact BIGINTs, rounded at 6. deg·(deg−1) stays
-   * far below 2⁶² for any degree a sane graph admits.
+   * Shape: [[triangleCounts]] (degree-ordered adjacency intersection,
+   * no global window) + the same degree agg, one left equi-join; cc is
+   * one double division of exact BIGINTs, rounded at 6. deg·(deg−1)
+   * stays far below 2⁶² for any degree a sane graph admits.
    */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
@@ -246,13 +245,8 @@ object Graph {
     require(maxDegree >= 2, s"adamicAdar: maxDegree must be >= 2, got $maxDegree")
     require(minCommon >= 1L, s"adamicAdar: minCommon must be >= 1, got $minCommon")
     require(k >= 1, s"adamicAdar: k must be >= 1, got $k")
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-    val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    val und = canonicalUndirected(edges, srcCol, dstCol)
+    val deg = nodeDegrees(und)
     val adj = bothDirections(und, "z", "nb")
     val centers = deg.where(col("deg") >= 2 && col("deg") <= maxDegree)
       .select(col("node").as("z"),
@@ -301,13 +295,8 @@ object Graph {
     require(minCommon >= 1L,
       s"neighborJaccard: minCommon must be >= 1, got $minCommon")
     require(k >= 1, s"neighborJaccard: k must be >= 1, got $k")
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-    val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    val und = canonicalUndirected(edges, srcCol, dstCol)
+    val deg = nodeDegrees(und)
     val adj = bothDirections(und, "z", "nb")
     val centers = deg.where(col("deg") >= 2 && col("deg") <= maxDegree)
       .select(col("node").as("z"))
@@ -364,11 +353,7 @@ object Graph {
     require(k >= 2, s"kCorePeel: k must be >= 2, got $k")
     require(iters >= 1 && iters <= 20,
       s"kCorePeel: iters must be in [1, 20], got $iters")
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
+    val und = canonicalUndirected(edges, srcCol, dstCol)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("__n"))
     var alive = und
     for (_ <- 1 to iters) {
@@ -401,13 +386,8 @@ object Graph {
    */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-    val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    val und = canonicalUndirected(edges, srcCol, dstCol)
+    val deg = nodeDegrees(und)
     val dir = bothDirections(und, "a", "b")
     val pairs = dir
       .join(deg.select(col("node").as("a"), col("deg").as("__x"))

@@ -85,7 +85,7 @@ object GraphQueries {
     }),
 
     // P117 — per-node triangle counts over the same part co-purchase
-    // graph: degree-ordered wedge enumeration closed by a semi-join; the
+    // graph: degree-ordered out-lists, intersected per oriented edge; the
     // oracle counts the identical triangles by plain id-order three-way
     // join, proving the orientation is an identity
     "gr2_triangles" -> ((s, dir) => {

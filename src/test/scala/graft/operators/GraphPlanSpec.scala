@@ -17,6 +17,11 @@ import graft.SparkSpec
  * ~constant size per round and pass the same bound trivially;
  * duplicateClusters stays fully lazy and linear.
  *
+ * It also pins the triangle kernels' join shape: every join in the
+ * plans of triangleCounts and clusteringCoefficient is a pure equi-join,
+ * so a wedge enumeration (a residual-ordered self-join closed by a
+ * left-semi join) cannot come back unnoticed.
+ *
  * Those builders run their materialization jobs at build time, so this
  * spec EXECUTES small jobs — inputs are k-row literal frames, not corpus
  * data.
@@ -71,5 +76,28 @@ class GraphPlanSpec extends SparkSpec {
     assertLinear("kHopReach",
       planSize(Graph.kHopReach(e, "s", "d", hops = 2)),
       planSize(Graph.kHopReach(e, "s", "d", hops = 4)))
+  }
+
+  test("triangle kernels plan no semi-join and no residual join condition") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // a wedge enumeration pairs out-edges under a `rank < rank` residual
+    // and closes the wedges with a left-semi join; neither may appear
+    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+      .toDF("s", "d")
+    for ((name, df) <- Seq(
+        "triangleCounts" -> Graph.triangleCounts(e, "s", "d"),
+        "clusteringCoefficient" -> Graph.clusteringCoefficient(e, "s", "d"))) {
+      val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
+      assert(joins.nonEmpty, s"$name planned no join at all")
+      val bad = joins.filter(j => j.joinType == LeftSemi ||
+        ExtractEquiJoinKeys.unapply(j).forall(_._4.nonEmpty))
+      assert(bad.isEmpty,
+        s"$name plans ${bad.size} semi/residual join(s) — the wedge " +
+          "enumeration is back; intersect the oriented out-lists instead:\n" +
+          bad.map(_.simpleString(200)).mkString("\n"))
+    }
   }
 }

@@ -109,6 +109,69 @@ class GraphSpec extends SparkSpec {
     assert(!got.contains(4L)) // deg 1
   }
 
+  /** A seeded random edge list with every shape the triangle kernel
+    * must survive: a random core (degree ties fall back to node id), a
+    * K4 whose four nodes tie on degree, a hub wired to most of the core,
+    * a triangle-free bipartite component, reversed duplicates,
+    * self-loops and null endpoints. */
+  private def randomGraph(seed: Int): Seq[(java.lang.Long, java.lang.Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val core = for (u <- 0L until 24L; v <- u + 1 until 24L
+      if rnd.nextDouble() < 0.25) yield (u, v)
+    val k4 = for (u <- 300L to 303L; v <- u + 1 to 303L) yield (u, v)
+    val hub = (0L until 24L).filter(_ => rnd.nextDouble() < 0.8)
+      .map(v => (100L, v)) ++ (101L to 106L).map(v => (100L, v))
+    val bipartite = for (u <- 200L to 203L; v <- 210L to 212L) yield (u, v)
+    val edges = core ++ k4 ++ hub ++ bipartite
+    val noise = rnd.shuffle(edges).take(edges.size / 4).map(_.swap) ++
+      Seq((7L, 7L), (300L, 300L), (100L, 100L))
+    val boxed = (edges ++ noise).map { case (u, v) =>
+      (java.lang.Long.valueOf(u), java.lang.Long.valueOf(v)) }
+    rnd.shuffle(boxed ++ Seq((null, 5L: java.lang.Long),
+      (3L: java.lang.Long, null), (null, null)))
+  }
+
+  /** Plain Scala enumeration over the canonical graph: per-node degree
+    * and the triangles through it, every u < v < w triple tested. */
+  private def bruteForce(edges: Seq[(java.lang.Long, java.lang.Long)])
+      : (Map[Long, Long], Map[Long, Long]) = {
+    val und = edges.collect { case (a, b) if a != null && b != null &&
+        a.longValue != b.longValue =>
+      (math.min(a.longValue, b.longValue), math.max(a.longValue, b.longValue))
+    }.toSet
+    val nbrs = und.toSeq.flatMap { case (u, v) => Seq(u -> v, v -> u) }
+      .groupBy(_._1).map { case (n, ps) => n -> ps.map(_._2).toSet }
+    val deg = nbrs.map { case (n, ns) => n -> ns.size.toLong }
+    val tris = for ((u, v) <- und.toSeq; w <- nbrs(u) & nbrs(v) if w > v)
+      yield Seq(u, v, w)
+    val tri = tris.flatten.groupBy(identity).map { case (n, ns) =>
+      n -> ns.size.toLong }
+    (deg, tri)
+  }
+
+  test("triangleCounts and clusteringCoefficient match brute-force " +
+      "enumeration on seeded random graphs") {
+    for (seed <- 1 to 3) {
+      val edges = randomGraph(seed)
+      val (deg, tri) = bruteForce(edges)
+      assert(tri.nonEmpty && (200L to 212L).forall(n => !tri.contains(n)))
+      val df = edges.toDF("s", "d")
+      val gotTri = Graph.triangleCounts(df, "s", "d")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(gotTri == tri, s"seed $seed")
+      val wantCc = deg.collect { case (n, d) if d >= 2 =>
+        val t = tri.getOrElse(n, 0L)
+        val cc = BigDecimal(2.0 * t.toDouble / (d * (d - 1)).toDouble)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        n -> ((d, t, cc))
+      }
+      val gotCc = Graph.clusteringCoefficient(df, "s", "d")
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
+          r.getDouble(3)))).toMap
+      assert(gotCc == wantCc, s"seed $seed")
+    }
+  }
+
   test("adamicAdar: 1/ln weights, adjacency exclusion, degree cap") {
     // centers 10 (deg 3) and 20 (deg 2); 1-2 share both, 1-3/2-3 only 10
     val edges = Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 1L), (20L, 2L))
