@@ -73,10 +73,13 @@ object Graft {
 
   /** The one place graft cuts lineage: runs `df` once, now, keeps its rows
     * at `MEMORY_AND_DISK`, and returns a frame whose logical plan is a
-    * scan of those rows (output partitioning and ordering preserved). The
-    * rows keep their RDD lineage, so a lost block is recomputed rather
-    * than failing the query; the ContextCleaner frees them once the frame
-    * is unreachable.
+    * scan of those rows. The scan does NOT keep `df`'s output
+    * partitioning: under AQE the executed plan reports
+    * `UnknownPartitioning(0)` (and AQE may have coalesced the partitions),
+    * so a join or aggregate on the key `df` was repartitioned by still
+    * plans an exchange. The rows keep their RDD lineage, so a lost block is
+    * recomputed rather than failing the query; the ContextCleaner frees
+    * them once the frame is unreachable.
     *
     * When to call it: only on a frame that is node-, agg- or
     * sample-sized AND referenced more than once (iterative rounds,

@@ -30,6 +30,23 @@ object PlanCheck {
     }
     self + kids.map(unpartitionedWindows).sum
   }
+
+  /** The plan that actually ran, as text. AQE's toString appends the
+    * pre-adaptive "== Initial Plan ==" after the final plan — drop it so
+    * counts and negative pins see only what ran (the initial section
+    * inflated smj/exchange with joins AQE replaced). Safe to cut at the
+    * FIRST marker: plain toString never inlines subquery plan trees
+    * (verified on o3/sim2/x5 — exactly one Final/Initial marker pair per
+    * plan; only explain("formatted") prints a Subqueries section). Call
+    * it after the query ran: under AQE the plan is only finalized then. */
+  def finalPlan(executed: SparkPlan): String =
+    executed.toString.split("== Initial Plan ==").head
+
+  /** Distinct whole-stage-codegen stages in a plan text: Spark 4 renders
+    * them as "*(n)" operator prefixes, not "WholeStageCodegen" nodes. */
+  def codegenStages(plan: String): Int =
+    "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
+
   def main(args: Array[String]): Unit = {
     val verbose = args.contains("-v")
     val rest = args.filterNot(_ == "-v")
@@ -42,23 +59,14 @@ object PlanCheck {
         // under AQE the plan is only finalized (join strategy chosen, codegen
         // stages collapsed and annotated) after execution — run it first
         qe.toRdd.count()
-        // AQE's toString appends the pre-adaptive "== Initial Plan ==" after
-        // the final plan — drop it so the counts reflect what actually ran
-        // (the initial section inflated smj/exchange with joins AQE replaced).
-        // Safe to cut at the FIRST marker: plain toString never inlines
-        // subquery plan trees (verified on o3/sim2/x5 — exactly one
-        // Final/Initial marker pair per plan; only explain("formatted")
-        // prints a Subqueries section).
-        val plan = qe.executedPlan.toString.split("== Initial Plan ==").head
+        val plan = finalPlan(qe.executedPlan)
         // plan toString truncates long filter lists — count non-empty
         // brackets by their opening character
         val pushed = "PushedFilters: \\[[^\\]]".r.findAllIn(plan).size
         val bhj = "BroadcastHashJoin".r.findAllIn(plan).size
         val smj = "SortMergeJoin".r.findAllIn(plan).size
         val bnl = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
-        // Spark 4 renders codegen stages as "*(n)" operator prefixes, not
-        // "WholeStageCodegen" nodes — count distinct stage ids
-        val wscg = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
+        val wscg = codegenStages(plan)
         val exch = "Exchange".r.findAllIn(plan).size
         val upw = unpartitionedWindows(qe.executedPlan)
         println(f"$q%-22s pushedFilters=$pushed bhj=$bhj smj=$smj bnl=$bnl wscg=$wscg exchange=$exch unpartWin=$upw")

@@ -630,9 +630,10 @@ object Graph {
     // separate materializations (dirE, seed), so it is materialized too
     // (lazy, gr12 read 7.2–8.9 s vs 5.6–6.2 s at sf0.1, local[4]).
     val und = Graft.materialize(canonicalUndirected(edges, srcCol, dstCol))
-    // pre-partitioned by the expansion key: every hop joins on a, so the
-    // edge exchange happens once here instead of once per hop
-    // (materialize preserves the physical partitioning)
+    // the cut does not keep this partitioning (Graft.materialize), so each
+    // hop still plans an exchange on a; dropping the repartition measured
+    // no faster on gr12 (sf0.01, local[4], 7 alternating pairs: median
+    // 3.97 s without, 3.59 s with), so it stays
     val dirE = Graft.materialize(bothDirections(und, "a", "b")
       .repartition(col("a")))
     val seed = Graft.materialize(nodeDegrees(und)

@@ -446,7 +446,11 @@ class StudySession(val spark: SparkSession, val studyId: String,
               domainMetaFor(code).flatMap(_.label))
             val path = s"$outDir/${suppName.toLowerCase}.xpt"
             val orderedSupp = supp.orderBy("QNAM", "USUBJID", "IDVARVAL")
-            XptWriter.writeDataFrame(orderedSupp, path, suppName, suppLabel)
+            // one stats aggregate feeds both the XPT lengths and Define-XML,
+            // as on the per-domain path
+            val stats = XmlSinks.varStats(supp, supp.columns.toSeq)
+            XptWriter.writeDataFrame(orderedSupp, path, suppName, suppLabel,
+              declaredLengths = stats.map { case (v, st) => v -> math.max(st.maxLength, 1) })
             written += path
             // the define.xml must describe every dataset in the package —
             // SUPP-- gets an ItemGroupDef from the SUPPQUAL template
@@ -467,7 +471,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
                     required = v.isRequired, identifier = v.isIdentifier,
                     expected = v.isExpected, codelistOid = None)
                 },
-                stats = XmlSinks.varStats(supp, presentSupp.map(_.name)))
+                stats = stats)
             }
           }
         case _ =>
@@ -513,43 +517,37 @@ object StudySession {
       ctVersion: String = graft.standards.Standards.DefaultCtVersion): StudySession = {
     val s = new StudySession(spark, studyId, standard, ctVersion)
     val sorted = assignments.toSeq.sortBy(_._1)
-    if (sorted.size <= 1) {
-      sorted.foreach { case (code, file) =>
-        s.addDomain(code, Paths.get(folder, file).toString, headerRows)
+    // the per-domain builds (CSV scan, cache, hints aggregate, scoring)
+    // are independent Spark jobs over different files — run them
+    // concurrently, then publish in sorted-code order so domainCodes and
+    // snapshot serialization are identical to a serial loop's
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(sorted.size, 8)))
+    val built = sorted.map { case (code, file) =>
+      pool.submit(new java.util.concurrent.Callable[DomainState] {
+        def call(): DomainState =
+          s.buildDomainState(code, Paths.get(folder, file).toString, headerRows)
+      })
+    }
+    try {
+      built.foreach { f =>
+        val ds = try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        s.publishDomain(ds)
       }
-    } else {
-      // the per-domain builds (CSV scan, cache, hints aggregate, scoring)
-      // are independent Spark jobs over different files — run them
-      // concurrently, then publish in sorted-code order so domainCodes and
-      // snapshot serialization are identical to the serial loop's
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(sorted.size, 8))
-      val built = sorted.map { case (code, file) =>
-        pool.submit(new java.util.concurrent.Callable[DomainState] {
-          def call(): DomainState =
-            s.buildDomainState(code, Paths.get(folder, file).toString, headerRows)
-        })
-      }
-      try {
+      pool.shutdown()
+    } catch {
+      case e: Throwable =>
+        // the session is being abandoned: stop in-flight builds, then
+        // unpersist every frame any build cached (published or not —
+        // the caller never receives `s`, so nothing would ever free them)
+        pool.shutdownNow()
+        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
         built.foreach { f =>
-          val ds = try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-          s.publishDomain(ds)
+          if (f.isDone && !f.isCancelled)
+            scala.util.Try(f.get().source.unpersist())
         }
-        pool.shutdown()
-      } catch {
-        case e: Throwable =>
-          // the session is being abandoned: stop in-flight builds, then
-          // unpersist every frame any build cached (published or not —
-          // the caller never receives `s`, so nothing would ever free them)
-          pool.shutdownNow()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          built.foreach { f =>
-            if (f.isDone && !f.isCancelled)
-              scala.util.Try(f.get().source.unpersist())
-          }
-          throw e
-      }
+        throw e
     }
     s
   }

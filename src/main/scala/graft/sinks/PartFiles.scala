@@ -1,0 +1,100 @@
+package graft.sinks
+
+import java.io.{BufferedOutputStream, FileOutputStream, OutputStream}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+
+/**
+ * Single-file assembly shared by the XPT and Dataset-XML sinks. Each
+ * partition encodes its rows into a part file beside the destination in
+ * ONE parallel job (a driver-side row iterator runs one single-partition
+ * job at a time, which would serialize the encode on one core; cached
+ * encoded chunks would hold the whole dataset in the block store).
+ * The driver then writes the head, concatenates the non-empty parts in
+ * partition order with zero-copy `FileChannel.transferTo` (pure kernel
+ * IO, no re-heap of the bytes; the collected manifest is one row count
+ * per partition) and writes the tail. The destination's parent must be
+ * storage both executors and driver can reach (true in local mode and
+ * for the shared mounts a single-file regulatory artifact lands on in
+ * cluster mode).
+ */
+private[sinks] object PartFiles {
+
+  /** Write `rows` as the one file at `path`: `writePart` encodes one
+    * partition's rows onto its part stream and returns how many it wrote;
+    * `head` runs before the parts, `tail` after them with the total row
+    * count. Returns that total. */
+  def assemble[T](rows: RDD[T], path: String, head: OutputStream => Unit,
+      tail: (OutputStream, Long) => Unit)(
+      writePart: (Iterator[T], OutputStream) => Long): Long = {
+    val partsDir = Paths.get(path + ".parts")
+    deleteRecursively(partsDir)
+    Files.createDirectories(partsDir)
+    try {
+      val partsDirStr = partsDir.toString
+      val manifest = rows.mapPartitionsWithIndex { (idx, it) =>
+        val part = new PartFile(partsDirStr, idx)
+        val n =
+          try { val n = writePart(it, part.stream); part.commit(); n }
+          catch { case e: Throwable => part.abort(); throw e }
+        Iterator.single((idx, n))
+      }.collect().sortBy(_._1)
+      val total = manifest.map(_._2).sum
+      val fos = new FileOutputStream(path)
+      try {
+        val out = new BufferedOutputStream(fos, 1 << 16)
+        head(out)
+        out.flush() // channel writes below share the stream's file position
+        val ch = fos.getChannel
+        manifest.foreach { case (idx, n) =>
+          if (n > 0) transferFile(partsDir.resolve(partName(idx)), ch)
+        }
+        tail(out, total)
+        out.flush()
+      } finally fos.close()
+      total
+    } finally deleteRecursively(partsDir)
+  }
+
+  private def partName(idx: Int): String = f"part-$idx%05d"
+
+  /** Open partition `idx`'s part file for writing via an attempt-unique
+    * temp name; `commit()` atomically renames it into place. Speculative
+    * or zombie duplicate attempts of the same partition then race only on
+    * the rename — last COMPLETE file wins, a half-written attempt is never
+    * visible under the final name (the FileOutputCommitter pattern). */
+  private final class PartFile(partsDir: String, idx: Int) {
+    private val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
+    private val finalPath = Paths.get(partsDir, partName(idx))
+    private val tmpPath = Paths.get(partsDir, s"${partName(idx)}.a$attempt")
+    val stream = new BufferedOutputStream(new FileOutputStream(tmpPath.toFile), 1 << 20)
+    def commit(): Unit = {
+      stream.close()
+      Files.move(tmpPath, finalPath,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
+    def abort(): Unit = {
+      scala.util.Try(stream.close())
+      scala.util.Try(Files.deleteIfExists(tmpPath))
+    }
+  }
+
+  /** Concatenate `src` onto `dst` with zero-copy kernel transfers. */
+  private def transferFile(src: Path, dst: FileChannel): Unit = {
+    val in = FileChannel.open(src)
+    try {
+      val size = in.size()
+      var pos = 0L
+      while (pos < size) pos += in.transferTo(pos, size - pos, dst)
+    } finally in.close()
+  }
+
+  private def deleteRecursively(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+    }
+}

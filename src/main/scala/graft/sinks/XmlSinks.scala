@@ -3,7 +3,7 @@ package graft.sinks
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter, Writer}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Numerics
@@ -38,11 +38,10 @@ case class VarStats(maxLength: Int, hasData: Boolean)
  * and `define_xml.rs:73-470`).
  *
  * Division of labor at scale: everything data-dependent (max lengths,
- * has-collected-data, row streaming) is Spark-side; document assembly is
+ * has-collected-data, row rendering) is Spark-side; document assembly is
  * driver-side string building. Define-XML needs exactly ONE aggregate per
- * domain; Dataset-XML streams rows through `toLocalIterator` (single
- * regulatory file by construction — for a sharded variant, the same
- * row-renderer runs per-partition and part files concatenate).
+ * domain; Dataset-XML renders rows per partition into part files that the
+ * driver concatenates into the single regulatory file ([[PartFiles]]).
  */
 object XmlSinks {
 
@@ -104,179 +103,74 @@ object XmlSinks {
 
   // ---- K2: Dataset-XML ------------------------------------------------------
 
-  /** Everything before the first ItemGroupData / after the last one —
-    * shared by the Writer and part-file paths so their bytes can't
-    * diverge. Returns (prologue, epilogue). */
-  private def datasetXmlFrame(datasetName: String, studyId: String,
-      igVersion: String, isReferenceData: Boolean,
-      creationDateTime: String): (String, String) = {
+  /**
+   * Write one domain as Dataset-XML: `ItemGroupData` per row with
+   * `data:ItemGroupDataSeq` = 1-based row index in `orderCol` order, one
+   * `ItemData` per non-empty cell, `ItemOID = IT.<ds>.<var>`. Returns the
+   * row count.
+   *
+   * Each partition renders AND UTF-8-encodes its blocks into a part file
+   * (per-value escape + string assembly is the expensive part of this
+   * sink and parallelizes perfectly) and [[PartFiles.assemble]] puts the
+   * prologue and epilogue around them (same reachability note there).
+   */
+  def writeDatasetXmlFile(df: DataFrame, path: String, datasetName: String,
+      studyId: String, igVersion: String, variables: Seq[String],
+      orderCol: Option[String] = None, isReferenceData: Boolean = false): Long = {
     val studyOid = s"STDY.${sanitizeOid(studyId)}"
     val mdvOid = s"MDV.$studyOid.SDTMIG.${sanitizeOid(igVersion)}"
     val defineFileOid = s"$studyOid.Define-XML_$DefineXmlVersion"
     val container = if (isReferenceData) "ReferenceData" else "ClinicalData"
-    val p = "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
+    val prologue = "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
       s"""<ODM xmlns="$OdmNs" xmlns:xlink="$XlinkNs" xmlns:data="$DataNs"""" +
       s""" data:DatasetXMLVersion="$DatasetXmlVersion" FileType="Snapshot"""" +
       s""" FileOID="${escape(s"$defineFileOid(IG.$datasetName)")}"""" +
       s""" PriorFileOID="${escape(defineFileOid)}" ODMVersion="1.3.2"""" +
-      s""" CreationDateTime="$creationDateTime" Originator="graft">\n""" +
+      s""" CreationDateTime="2020-01-01T00:00:00Z" Originator="graft">\n""" +
       s"""  <$container StudyOID="${escape(studyOid)}" MetaDataVersionOID="${escape(mdvOid)}">\n"""
-    (p, s"  </$container>\n</ODM>\n")
-  }
+    val epilogue = s"  </$container>\n</ODM>\n"
 
-  /** The globally-ordered, projected frame plus the per-column ItemOIDs
-    * (sanitized exactly like Define-XML builds them, so the two documents
-    * cross-reference; escape() alone would diverge on spaces). */
-  private def datasetXmlBody(df: DataFrame, datasetName: String,
-      variables: Seq[String], orderCol: Option[String]): (DataFrame, Array[String], String) = {
     val present = variables.filter(df.columns.contains)
     val ordered = orderCol match {
       case Some(c) => df.orderBy(col(c)).select(present.map(col): _*)
       case None => df.select(present.map(col): _*)
     }
+    // ItemOIDs are sanitized exactly like Define-XML builds them, so the
+    // two documents cross-reference (escape() alone would diverge on spaces)
     val dsOid = sanitizeOid(datasetName)
     val itemOids = present.map(v => s"IT.$dsOid.${sanitizeOid(v)}").toArray
     val openPrefix = s"""    <ItemGroupData ItemGroupOID="IG.$dsOid" data:ItemGroupDataSeq=""""
-    (ordered, itemOids, openPrefix)
-  }
-
-  /** Render (row, 0-based global index) pairs into complete ItemGroupData
-    * blocks, emitted as (rowsInChunk, text) pieces of ~1 MiB. Runs in the
-    * EXECUTORS — per-value escape + string assembly is the expensive part
-    * of this sink and parallelizes perfectly; concatenating the chunks in
-    * order is byte-identical to a driver-side row loop. */
-  private def renderChunks(it: Iterator[(Row, Long)], itemOids: Array[String],
-      openPrefix: String): Iterator[(Long, String)] = {
-    val nCols = itemOids.length
-    val chunkTarget = 1 << 20
-    val sb = new java.lang.StringBuilder(chunkTarget + (96 + 48 * nCols))
-    new Iterator[(Long, String)] {
-      private var pending: (Long, String) = _
-      private var rowsInChunk = 0L
-      private def fill(): Unit = {
-        while (pending == null && it.hasNext) {
-          val (r, idx) = it.next()
-          sb.append(openPrefix).append(idx + 1).append("\">\n")
-          var i = 0
-          while (i < nCols) {
-            renderValue(if (r.isNullAt(i)) null else r.get(i)).foreach { text =>
-              sb.append("      <ItemData ItemOID=\"").append(itemOids(i))
-                .append("\" Value=\"").append(escape(text)).append("\"/>\n")
-            }
-            i += 1
+    // zipWithIndex supplies the global 1-based ItemGroupDataSeq and runs a
+    // partition-size job before the write job. Do NOT cache the Row RDD
+    // across the two: caching 600k boxed Rows in the block store costs
+    // 7-15s at sf0.1 (measured r9 — it was the whole e3 export regression)
+    // while the sort's shuffle files are reused across jobs anyway, so only
+    // the cheap post-shuffle within-partition sort re-executes (~0.5s).
+    // Both jobs read identical shuffle output, so the order — and with it
+    // ItemGroupDataSeq — is deterministic.
+    PartFiles.assemble(ordered.rdd.zipWithIndex(), path,
+      head = _.write(prologue.getBytes(StandardCharsets.UTF_8)),
+      tail = (out, _) => out.write(epilogue.getBytes(StandardCharsets.UTF_8))) { (rows, out) =>
+      val w = new OutputStreamWriter(out, StandardCharsets.UTF_8)
+      val sb = new java.lang.StringBuilder(96 + 48 * itemOids.length)
+      var n = 0L
+      rows.foreach { case (r, idx) =>
+        sb.setLength(0)
+        sb.append(openPrefix).append(idx + 1).append("\">\n")
+        var i = 0
+        while (i < itemOids.length) {
+          renderValue(if (r.isNullAt(i)) null else r.get(i)).foreach { text =>
+            sb.append("      <ItemData ItemOID=\"").append(itemOids(i))
+              .append("\" Value=\"").append(escape(text)).append("\"/>\n")
           }
-          sb.append("    </ItemGroupData>\n")
-          rowsInChunk += 1
-          if (sb.length >= chunkTarget) {
-            pending = (rowsInChunk, sb.toString); sb.setLength(0); rowsInChunk = 0
-          }
+          i += 1
         }
-        if (pending == null && rowsInChunk > 0) {
-          pending = (rowsInChunk, sb.toString); sb.setLength(0); rowsInChunk = 0
-        }
+        sb.append("    </ItemGroupData>\n")
+        w.append(sb)
+        n += 1
       }
-      def hasNext: Boolean = { fill(); pending != null }
-      def next(): (Long, String) = {
-        fill()
-        if (pending == null) throw new NoSuchElementException
-        val p = pending; pending = null; p
-      }
-    }
-  }
-
-  /**
-   * Write one domain as Dataset-XML: `ItemGroupData` per row with
-   * `data:ItemGroupDataSeq` = 1-based row index in `orderCol` order, one
-   * `ItemData` per non-empty cell, `ItemOID = IT.<ds>.<var>`.
-   */
-  def writeDatasetXml(df: DataFrame, w: Writer, datasetName: String, studyId: String,
-      igVersion: String, variables: Seq[String], orderCol: Option[String] = None,
-      isReferenceData: Boolean = false,
-      creationDateTime: String = "2020-01-01T00:00:00Z"): Long = {
-    val (prologue, epilogue) =
-      datasetXmlFrame(datasetName, studyId, igVersion, isReferenceData, creationDateTime)
-    val (ordered, itemOids, openPrefix) =
-      datasetXmlBody(df, datasetName, variables, orderCol)
-    w.write(prologue)
-    // zipWithIndex supplies the global 1-based ItemGroupDataSeq
-    // (order-preserving; costs one partition-size job); the driver streams
-    // the rendered chunks into the caller's Writer
-    val chunks = ordered.rdd.zipWithIndex()
-      .mapPartitions(renderChunks(_, itemOids, openPrefix))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var seq = 0L
-    try {
-      chunks.count() // parallel materialization of every partition's render
-      val it = chunks.toLocalIterator
-      while (it.hasNext) {
-        val (n, text) = it.next()
-        w.write(text)
-        seq += n
-      }
-    } finally chunks.unpersist()
-    w.write(epilogue)
-    w.flush()
-    seq
-  }
-
-  private def utf8Writer(path: String): Writer =
-    new BufferedWriter(new OutputStreamWriter(
-      new FileOutputStream(path), StandardCharsets.UTF_8), 1 << 20)
-
-  /** File variant: each partition renders AND UTF-8-encodes its blocks
-    * into a part file beside the destination in one parallel job, and the
-    * driver assembles prologue + parts + epilogue with zero-copy
-    * `FileChannel.transferTo` — no persisted chunk RDD holding ~the whole
-    * document in the block store, no re-encode on the driver. Bytes are
-    * identical to the Writer path (shared prologue/epilogue + renderer);
-    * the golden corpus pins them. Same reachability note as
-    * [[XptWriter.writeDataFrame]]: the destination's parent must be
-    * storage both executors and driver can reach. */
-  def writeDatasetXmlFile(df: DataFrame, path: String, datasetName: String,
-      studyId: String, igVersion: String, variables: Seq[String],
-      orderCol: Option[String] = None, isReferenceData: Boolean = false): Long = {
-    val (prologue, epilogue) =
-      datasetXmlFrame(datasetName, studyId, igVersion, isReferenceData,
-        "2020-01-01T00:00:00Z")
-    val (ordered, itemOids, openPrefix) =
-      datasetXmlBody(df, datasetName, variables, orderCol)
-    val partsDir = java.nio.file.Paths.get(path + ".parts")
-    XptWriter.deleteRecursively(partsDir)
-    java.nio.file.Files.createDirectories(partsDir)
-    // zipWithIndex runs a partition-size job before the write job. Do NOT
-    // persist the Row RDD across the two: caching 600k boxed Rows in the
-    // block store costs 7-15s at sf0.1 (measured r9 — it was the whole
-    // e3 export regression) while the sort's shuffle files are reused
-    // across jobs anyway, so only the cheap post-shuffle within-partition
-    // sort re-executes (~0.5s). Both jobs read identical shuffle output,
-    // so the order — and with it ItemGroupDataSeq — is deterministic.
-    val sortedRdd = ordered.rdd
-    try {
-      val partsDirStr = partsDir.toString
-      val manifest = sortedRdd.zipWithIndex().mapPartitionsWithIndex { (pidx, it) =>
-        val part = new XptWriter.PartFile(partsDirStr, pidx)
-        var rows = 0L
-        try {
-          renderChunks(it, itemOids, openPrefix).foreach { case (n, text) =>
-            part.stream.write(text.getBytes(StandardCharsets.UTF_8))
-            rows += n
-          }
-          part.commit()
-        } catch { case e: Throwable => part.abort(); throw e }
-        Iterator.single((pidx, rows))
-      }.collect().sortBy(_._1)
-      val fos = new FileOutputStream(path)
-      try {
-        fos.write(prologue.getBytes(StandardCharsets.UTF_8))
-        val ch = fos.getChannel
-        manifest.foreach { case (pidx, rows) =>
-          if (rows > 0) XptWriter.transferFile(partsDir.resolve(f"part-$pidx%05d"), ch)
-        }
-        fos.write(epilogue.getBytes(StandardCharsets.UTF_8))
-      } finally fos.close()
-      manifest.map(_._2).sum
-    } finally {
-      XptWriter.deleteRecursively(partsDir)
+      w.flush()
+      n
     }
   }
 
@@ -397,7 +291,8 @@ object XmlSinks {
   def writeDefineXmlFile(path: String, studyId: String, igVersion: String,
       datasets: Seq[DefineDataset], codelists: Seq[XmlCodelist],
       ctStandards: Seq[CtStandard] = Nil): Unit = {
-    val w = utf8Writer(path)
+    val w = new BufferedWriter(new OutputStreamWriter(
+      new FileOutputStream(path), StandardCharsets.UTF_8), 1 << 20)
     try writeDefineXml(w, studyId, igVersion, datasets, codelists, ctStandards)
     finally w.close()
   }

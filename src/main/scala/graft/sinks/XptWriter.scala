@@ -1,14 +1,13 @@
 package graft.sinks
 
-import java.io.{BufferedOutputStream, FileOutputStream, OutputStream}
+import java.io.OutputStream
 import java.nio.charset.StandardCharsets
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
+import org.apache.spark.sql.types.NumericType
 
 import graft.functions.{IbmFloat, Numerics}
 
@@ -23,9 +22,9 @@ case class XptColumn(name: String, label: String, isNumeric: Boolean, length: In
  * container: 80-byte header records, 140-byte big-endian NAMESTRs, IBM
  * hex-float numerics, space-padded fixed-width rows.
  *
- * Scale note: submission datasets are driver-sized (the FDA caps XPT files
- * at 5 GB), so rows stream through `toLocalIterator` after the distributed
- * length aggregation — the one deliberate driver-side sink (SURVEY §7.4).
+ * Scale note: rows are encoded in the executors, one part file per
+ * partition, and assembled into the single member file on the driver
+ * ([[PartFiles]]); the driver never holds the row bytes.
  */
 object XptWriter {
 
@@ -81,8 +80,7 @@ object XptWriter {
   }
 
   /** Library + member + NAMESTR + OBS header records — everything before
-    * the row bytes. Shared by the iterator and distributed write paths so
-    * the two emit identical containers. */
+    * the row bytes. */
   private def writeHeaders(out: OutputStream, dsName: String, dsLabel: String,
       columns: Seq[XptColumn], created: LocalDateTime): Unit = {
     val date = sasDate(created)
@@ -138,73 +136,11 @@ object XptWriter {
     if (tailPad > 0) out.write((" " * tailPad).getBytes(StandardCharsets.US_ASCII))
   }
 
-  /**
-   * Stream rows into an XPT member. `rows` yields one `Seq[Any]` per row
-   * aligned with `columns`: numerics as Double (null/None/NaN → missing),
-   * chars as String (null → blank).
-   */
-  def write(out: OutputStream, dsName: String, dsLabel: String,
-      columns: Seq[XptColumn], rows: Iterator[Seq[Any]],
-      created: LocalDateTime = LocalDateTime.of(2020, 1, 1, 0, 0, 0)): Unit = {
-    writeHeaders(out, dsName, dsLabel, columns, created)
-    val rowLen = columns.map(_.length).sum
-    // hot loop over rows×columns: index arrays, one reused row buffer, and
-    // in-place IBM encode — the per-value allocations (zip pairs, fresh
-    // 8-byte arrays) dominated large members before
-    val nCols = columns.size
-    val colArr = columns.toArray
-    val buf = new Array[Byte](rowLen)
-    var written = 0L
-    var rowIdx = 0L
-    rows.foreach { row =>
-      var off = 0
-      var i = 0
-      while (i < nCols) {
-        val c = colArr(i)
-        val v = row(i)
-        if (c.isNumeric) {
-          val d = v match {
-            case null => Double.NaN
-            case None => Double.NaN
-            case Some(x: Double) => x
-            case x: Double => x
-            case x: Number => x.doubleValue()
-            case s: String => Numerics.parse(s).getOrElse(Double.NaN)
-          }
-          // annotate range failures with the offending variable and row so
-          // the user can locate the datum (the kernel only knows the value)
-          try IbmFloat.toIbmBytesInto(d, buf, off)
-          catch {
-            case e: IllegalArgumentException =>
-              throw new IllegalArgumentException(
-                s"XPT write failed at variable ${c.name}, data row $rowIdx: ${e.getMessage}", e)
-          }
-        } else {
-          val s = v match {
-            case null => ""
-            case None => ""
-            case Some(x) => x.toString
-            case x => x.toString
-          }
-          val b = s.getBytes(StandardCharsets.US_ASCII)
-          java.util.Arrays.fill(buf, off, off + c.length, ' '.toByte)
-          System.arraycopy(b, 0, buf, off, math.min(b.length, c.length))
-        }
-        off += c.length
-        i += 1
-      }
-      out.write(buf)
-      written += rowLen
-      rowIdx += 1
-    }
-    writeTailPad(out, written)
-    out.flush()
-  }
-
-  /** Encode one Spark Row (schema aligned with `colArr`) into `buf` —
-    * identical bytes to the iterator path's loop above. Runs in EXECUTORS
-    * for the distributed write; range failures carry the variable name and
-    * offending value (the global row number isn't known partition-side). */
+  /** Encode one Spark Row (schema aligned with `colArr`) into `buf`:
+    * numerics as IBM doubles (null → missing, strings parsed), chars
+    * space-padded or truncated to their length. Runs in the EXECUTORS;
+    * range failures carry the variable name and offending value (the
+    * global row number isn't known partition-side). */
   private def encodeRowInto(r: Row, colArr: Array[XptColumn], buf: Array[Byte]): Unit = {
     var off = 0
     var i = 0
@@ -236,72 +172,25 @@ object XptWriter {
     }
   }
 
-  /** Open partition `idx`'s part file for writing via an attempt-unique
-    * temp name; `commit()` atomically renames it into place. Speculative
-    * or zombie duplicate attempts of the same partition then race only on
-    * the rename — last COMPLETE file wins, a half-written attempt is never
-    * visible under the final name (the FileOutputCommitter pattern). */
-  private[sinks] final class PartFile(partsDir: String, idx: Int) {
-    private val attempt =
-      Option(org.apache.spark.TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
-    private val finalPath = java.nio.file.Paths.get(partsDir, f"part-$idx%05d")
-    private val tmpPath = java.nio.file.Paths.get(partsDir, f"part-$idx%05d.a$attempt")
-    val stream = new BufferedOutputStream(
-      new FileOutputStream(tmpPath.toFile), 1 << 20)
-    def commit(): Unit = {
-      stream.close()
-      java.nio.file.Files.move(tmpPath, finalPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    def abort(): Unit = {
-      scala.util.Try(stream.close())
-      scala.util.Try(java.nio.file.Files.deleteIfExists(tmpPath))
-    }
-  }
-
-  /** Concatenate `src` onto `dst` with zero-copy kernel transfers. */
-  private[sinks] def transferFile(src: java.nio.file.Path,
-      dst: java.nio.channels.FileChannel): Unit = {
-    val in = java.nio.channels.FileChannel.open(src)
-    try {
-      val size = in.size()
-      var pos = 0L
-      while (pos < size) pos += in.transferTo(pos, size - pos, dst)
-    } finally in.close()
-  }
-
-  private[sinks] def deleteRecursively(dir: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(dir)) {
-      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-
   /**
    * Column metadata for a DataFrame: numeric Spark types → Num(8); strings →
    * Char with declared length or max observed trimmed byte length, min 1
-   * (`export/common.rs:83-119`). One fused aggregation computes every
-   * observed length — the only cluster job in the sink.
+   * (`export/common.rs:83-119`). Observed lengths come from
+   * [[XmlSinks.varStats]] — the same numbers Define-XML declares — and
+   * that aggregate runs only when some char column has no declared length.
    */
   def columnsFor(df: DataFrame, labels: Map[String, String] = Map.empty,
       declaredLengths: Map[String, Int] = Map.empty): Seq[XptColumn] = {
     val charCols = df.schema.fields.filter {
       f => !f.dataType.isInstanceOf[NumericType] && !declaredLengths.contains(f.name)
     }.map(_.name)
-    val observed: Map[String, Int] =
-      if (charCols.isEmpty) Map.empty
-      else {
-        val row = df.agg(
-          max(length(rtrim(coalesce(col(charCols.head).cast("string"), lit(""))))).as(charCols.head),
-          charCols.tail.toIndexedSeq.map(c =>
-            max(length(rtrim(coalesce(col(c).cast("string"), lit(""))))).as(c)): _*).head()
-        charCols.map(c => c -> Option(row.getAs[Integer](c)).map(_.toInt).getOrElse(0)).toMap
-      }
+    val observed = XmlSinks.varStats(df, charCols.toSeq)
     df.schema.fields.map { f =>
       val numeric = f.dataType.isInstanceOf[NumericType]
       val len =
         if (numeric) 8
-        else declaredLengths.getOrElse(f.name, math.max(observed.getOrElse(f.name, 1), 1))
+        else declaredLengths.getOrElse(f.name,
+          math.max(observed.get(f.name).fold(0)(_.maxLength), 1))
       XptColumn(f.name, labels.getOrElse(f.name, f.name), numeric, len)
     }.toSeq
   }
@@ -309,55 +198,26 @@ object XptWriter {
   /** Write a DataFrame as one XPT member file. Numeric parity: integral
     * doubles and longs share the same IBM encoding; `--SEQ` longs become
     * doubles exactly as the reference casts at write (`xpt.rs:100-120`).
-    *
-    * Row encoding runs in the EXECUTORS: each partition encodes and writes
-    * its rows to a part file beside the destination in ONE parallel job
-    * (`toLocalIterator` alone runs one single-partition job at a time,
-    * which would serialize the encode on one core; a persisted chunk RDD
-    * would hold the whole encoded dataset in the block store), then the
-    * driver assembles headers + parts + tail pad with zero-copy
-    * `FileChannel.transferTo` — pure kernel IO, no re-heap of the bytes.
-    * The destination's parent must be storage both executors and driver
-    * can reach (true in local mode and for the shared mounts a
-    * single-file regulatory artifact lands on in cluster mode). */
+    * Rows are encoded in the executors and assembled behind the headers
+    * by [[PartFiles.assemble]] (same reachability note there). */
   def writeDataFrame(df: DataFrame, path: String, dsName: String, dsLabel: String,
       labels: Map[String, String] = Map.empty,
       declaredLengths: Map[String, Int] = Map.empty): Seq[XptColumn] = {
     val cols = columnsFor(df, labels, declaredLengths)
     val colArr = cols.toArray
     val rowLen = colArr.map(_.length).sum
-    val partsDir = java.nio.file.Paths.get(path + ".parts")
-    deleteRecursively(partsDir)
-    java.nio.file.Files.createDirectories(partsDir)
-    try {
-      val partsDirStr = partsDir.toString
-      val manifest = df.rdd.mapPartitionsWithIndex { (idx, rows) =>
-        val part = new PartFile(partsDirStr, idx)
-        val buf = new Array[Byte](rowLen)
-        var n = 0L
-        try {
-          while (rows.hasNext) {
-            encodeRowInto(rows.next(), colArr, buf)
-            part.stream.write(buf)
-            n += 1
-          }
-          part.commit()
-        } catch { case e: Throwable => part.abort(); throw e }
-        Iterator.single((idx, n))
-      }.collect().sortBy(_._1)
-      val fos = new FileOutputStream(path)
-      try {
-        val bos = new BufferedOutputStream(fos, 1 << 16)
-        writeHeaders(bos, dsName, dsLabel, cols, LocalDateTime.of(2020, 1, 1, 0, 0, 0))
-        bos.flush() // channel writes below share the stream's file position
-        val ch = fos.getChannel
-        manifest.foreach { case (idx, n) =>
-          if (n > 0) transferFile(partsDir.resolve(f"part-$idx%05d"), ch)
-        }
-        writeTailPad(bos, manifest.map(_._2).sum * rowLen)
-        bos.flush()
-      } finally fos.close()
-    } finally deleteRecursively(partsDir)
+    PartFiles.assemble(df.rdd, path,
+      head = writeHeaders(_, dsName, dsLabel, cols, LocalDateTime.of(2020, 1, 1, 0, 0, 0)),
+      tail = (out, rows) => writeTailPad(out, rows * rowLen)) { (rows, out) =>
+      val buf = new Array[Byte](rowLen)
+      var n = 0L
+      while (rows.hasNext) {
+        encodeRowInto(rows.next(), colArr, buf)
+        out.write(buf)
+        n += 1
+      }
+      n
+    }
     cols
   }
 }

@@ -15,21 +15,14 @@ class PlanFactsSpec extends SparkSpec {
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     val qe = df.queryExecution
     qe.toRdd.count()
-    // negative pins (no-BNL, no-HOF) must not trip on operators AQE
-    // REPLACED: the toString appends the pre-adaptive Initial Plan — keep
-    // only what actually ran (same truncation as PlanCheck)
-    qe.executedPlan.toString.split("== Initial Plan ==").head
+    PlanCheck.finalPlan(qe.executedPlan)
   }
-
-  /** Distinct whole-stage-codegen stages: Spark 4 renders them as "*(n)". */
-  private def wscg(plan: String): Int =
-    "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
 
   test("hot projection queries run inside whole-stage codegen") {
     assume(haveData)
     for (q <- Seq("t1_token_counts", "n4_iso_datetime", "n6_duration")) {
       val p = finalPlan(SparkEntry.queries(q)(spark, sfDir))
-      assert(wscg(p) > 0, s"$q lost whole-stage codegen:\n$p")
+      assert(PlanCheck.codegenStages(p) > 0, s"$q lost whole-stage codegen:\n$p")
     }
   }
 

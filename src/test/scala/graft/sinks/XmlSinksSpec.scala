@@ -1,6 +1,8 @@
 package graft.sinks
 
 import java.io.StringWriter
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 
@@ -9,6 +11,15 @@ import graft.SparkSpec
 class XmlSinksSpec extends SparkSpec {
 
   import spark.implicits._
+
+  private val tmp = {
+    val d = Paths.get("target", "tmp", "xmlsinksspec")
+    Files.createDirectories(d)
+    d
+  }
+
+  private def read(path: String): String =
+    new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
 
   test("varStats: one pass for max trimmed length + has-data") {
     val df = Seq(("abc  ", ""), ("x", " "), ("", "")).toDF("A", "B")
@@ -23,10 +34,10 @@ class XmlSinksSpec extends SparkSpec {
       (2L, "S2", 40.0, ""),
       (1L, "S1", 2.5, "note"))
       .toDF("_row_id", "USUBJID", "WEIGHT", "COMMENT")
-    val w = new StringWriter
-    val n = XmlSinks.writeDatasetXml(df, w, "DM", "STUDY1", "3.4",
+    val path = tmp.resolve("seq.xml").toString
+    val n = XmlSinks.writeDatasetXmlFile(df, path, "DM", "STUDY1", "3.4",
       Seq("USUBJID", "WEIGHT", "COMMENT"), orderCol = Some("_row_id"))
-    val xml = w.toString
+    val xml = read(path)
     assert(n == 2)
     // row order follows _row_id: S1 first
     val s1 = xml.indexOf("""Value="S1"""")
@@ -43,9 +54,9 @@ class XmlSinksSpec extends SparkSpec {
 
   test("Dataset-XML escapes attribute values") {
     val df = Seq(Tuple1("""a<b>&"c""")).toDF("V")
-    val w = new StringWriter
-    XmlSinks.writeDatasetXml(df, w, "DM", "S", "3.4", Seq("V"))
-    assert(w.toString.contains("Value=\"a&lt;b&gt;&amp;&quot;c\""))
+    val path = tmp.resolve("escape.xml").toString
+    XmlSinks.writeDatasetXmlFile(df, path, "DM", "S", "3.4", Seq("V"))
+    assert(read(path).contains("Value=\"a&lt;b&gt;&amp;&quot;c\""))
   }
 
   test("Define-XML: item groups, origin types, codelists") {
@@ -100,9 +111,11 @@ class XmlSinksSpec extends SparkSpec {
 
   test("Dataset-XML: reference-data domains ride in ReferenceData container") {
     val df = Seq(Tuple1("TA1")).toDF("ETCD")
-    val w = new StringWriter
-    XmlSinks.writeDatasetXml(df, w, "TA", "S", "3.4", Seq("ETCD"), isReferenceData = true)
-    assert(w.toString.contains("<ReferenceData StudyOID="))
-    assert(!w.toString.contains("<ClinicalData"))
+    val path = tmp.resolve("refdata.xml").toString
+    XmlSinks.writeDatasetXmlFile(df, path, "TA", "S", "3.4", Seq("ETCD"),
+      isReferenceData = true)
+    val xml = read(path)
+    assert(xml.contains("<ReferenceData StudyOID="))
+    assert(!xml.contains("<ClinicalData"))
   }
 }

@@ -2,13 +2,11 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.SparkSpec
 import graft.functions.IbmFloat
 
 /** IBM hex-float encoding against published bit patterns + round trips. */
-class IbmFloatSpec extends AnyFunSuite {
+class IbmFloatSpec extends SparkSpec {
 
   private def hex(b: Array[Byte]): String = b.map("%02X".format(_)).mkString
 
@@ -50,14 +48,19 @@ class IbmFloatSpec extends AnyFunSuite {
     assert(IbmFloat.fromIbmBytes(IbmFloat.toIbmBytes(7.2e75)) == 7.2e75)
   }
 
-  test("writer annotates range failures with variable name and row index") {
-    val out = new java.io.ByteArrayOutputStream()
-    val cols = Seq(XptColumn("AVAL", "Analysis Value", isNumeric = true, 8))
-    val rows = Iterator[Seq[Any]](Seq(1.0), Seq(1e80))
-    val e = intercept[IllegalArgumentException](
-      XptWriter.write(out, "AD", "label", cols, rows))
-    assert(e.getMessage.contains("AVAL"), e.getMessage)
-    assert(e.getMessage.contains("row 1"), e.getMessage)
+  test("writer annotates range failures with variable name and value") {
+    import spark.implicits._
+    val df = Seq(1.0, 1e80).toDF("AVAL")
+    val path = Paths.get("target", "tmp", "ibmfloatspec", "range.xpt")
+    Files.createDirectories(path.getParent)
+    val e = intercept[Exception](
+      XptWriter.writeDataFrame(df, path.toString, "AD", "label"))
+    // the executor-side annotation reaches the caller inside Spark's
+    // task-failure wrapping: search the whole cause chain
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(chain.contains("variable AVAL"), chain)
+    assert(chain.contains("value 1.0E80"), chain)
   }
 }
 
