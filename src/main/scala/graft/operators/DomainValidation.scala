@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Graft.{isBlank, txt}
+import graft.expressions.{CtExpressions, CtIndex}
 import graft.standards.{SdtmDomain, Standards, VariableType}
 
 /**
@@ -47,6 +48,9 @@ object DomainValidation {
 
     val presentVars = vars.filter(v => present.contains(v.name.toUpperCase))
     if (presentVars.isEmpty) return issues.result()
+    // V8 codelists with terms, by variable name
+    val ctIndexes = presentVars.flatMap(v => v.firstCodelistCode
+      .map(code => v.name -> CtIndex(ct, code)).filterNot(_._2.isEmpty)).toMap
 
     // one fused aggregation: blanks, type conformance, ISO shape, lengths,
     // CT membership counts + samples
@@ -66,13 +70,10 @@ object DomainValidation {
         aggs += sum(when(length(txt(c)) > len, 1L).otherwise(0L)).as(s"${n}__overlen")
         aggs += max(length(txt(c))).as(s"${n}__maxlen")
       }
-      v.firstCodelistCode.foreach { code =>
-        val allowed = ct.lookupMap(code).keys.toSeq
-        if (allowed.nonEmpty) {
-          val bad = !isBlank(c) && !upper(txt(c)).isin(allowed: _*)
-          aggs += sum(when(bad, 1L).otherwise(0L)).as(s"${n}__badct")
-          aggs += slice(sort_array(collect_set(when(bad, txt(c)))), 1, 5).as(s"${n}__ctsamples")
-        }
+      ctIndexes.get(n).foreach { index =>
+        val bad = !isBlank(c) && !CtExpressions.member(c, index)
+        aggs += sum(when(bad, 1L).otherwise(0L)).as(s"${n}__badct")
+        aggs += slice(sort_array(collect_set(when(bad, txt(c)))), 1, 5).as(s"${n}__ctsamples")
       }
     }
     val row = df.agg(aggs.result().head, aggs.result().tail: _*).head()
@@ -104,15 +105,13 @@ object DomainValidation {
           issues += Issue(domain.name, n, "LengthExceeded", "Warning", over,
             Seq(s"max=${row.getAs[Int](s"${n}__maxlen")}", s"declared=$len"))
       }
-      v.firstCodelistCode.foreach { code =>
-        if (ct.lookupMap(code).nonEmpty) {
-          val bad = row.getAs[Long](s"${n}__badct")
-          if (bad > 0) {
-            val extensible = ct.get(code).exists(_.extensible)
-            val samples = row.getSeq[String](row.fieldIndex(s"${n}__ctsamples"))
-            issues += Issue(domain.name, n, "InvalidCtValue",
-              if (extensible) "Info" else "Error", bad, samples)
-          }
+      ctIndexes.get(n).foreach { index =>
+        val bad = row.getAs[Long](s"${n}__badct")
+        if (bad > 0) {
+          val extensible = ct.get(index.code).exists(_.extensible)
+          val samples = row.getSeq[String](row.fieldIndex(s"${n}__ctsamples"))
+          issues += Issue(domain.name, n, "InvalidCtValue",
+            if (extensible) "Info" else "Error", bad, samples)
         }
       }
     }
@@ -141,18 +140,24 @@ object DomainValidation {
     // past this point
     val dm = upper.getOrElse("DM", return Nil)
 
-    if (dm.columns.contains("USUBJID")) {
-      upper.filterNot(_._1 == "DM").foreach { case (code, df) =>
-        if (df.columns.contains("USUBJID")) {
-          // blank USUBJIDs are skipped — they belong to the per-domain
-          // identifier-null check, not X1 (cross_domain.rs:62-64)
-          val scoped = df.where(txt(col("USUBJID")) =!= "")
-          val orphans = Validate.orphanSubjects(scoped, dm, "USUBJID")
-          val r = orphans.agg(count(lit(1)),
-            slice(sort_array(collect_set(col("USUBJID"))), 1, 5)).head()
-          if (r.getLong(0) > 0)
-            issues += Issue(code, "USUBJID", "SubjectNotInDm", "Error",
-              r.getLong(0), r.getSeq[String](1))
+    // X1 — every domain's subjects in one action: (domain, USUBJID) rows of
+    // all non-DM domains, anti-joined to DM's keys, grouped by domain
+    val subjectDomains = upper.filterNot(_._1 == "DM").keys.toSeq
+      .filter(code => upper(code).columns.contains("USUBJID"))
+    if (dm.columns.contains("USUBJID") && subjectDomains.nonEmpty) {
+      // blank USUBJIDs are skipped — they belong to the per-domain
+      // identifier-null check, not X1 (cross_domain.rs:62-64)
+      val subjects = subjectDomains
+        .map(code => upper(code).select(lit(code).as("domain"), txt(col("USUBJID")).as("USUBJID")))
+        .reduce(_ unionByName _)
+        .where(col("USUBJID") =!= "")
+      val orphans = Validate.orphanSubjects(subjects, dm, "USUBJID")
+        .groupBy(col("domain"))
+        .agg(count(lit(1)), slice(sort_array(collect_set(col("USUBJID"))), 1, 5))
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getSeq[String](2))).toMap
+      subjectDomains.foreach { code =>
+        orphans.get(code).foreach { case (n, samples) =>
+          issues += Issue(code, "USUBJID", "SubjectNotInDm", "Error", n, samples)
         }
       }
     }

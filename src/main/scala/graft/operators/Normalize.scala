@@ -1,12 +1,12 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Graft.txt
+import graft.expressions.{CtExpressions, CtIndex}
 import graft.functions.{Iso8601, IsoDuration, Numerics}
 
 /**
@@ -115,42 +115,13 @@ object Normalize {
 
   /**
    * N8 — controlled-terminology normalization: case-insensitive lookup of
-   * submission value or synonym → canonical submission value; misses preserve
-   * the original (executor.rs:354-396, ct.rs:78-112). The codelist is tiny →
-   * shipped as a broadcast map, keeping the hot path a single hash probe
-   * inside one task (no shuffle, no join).
+   * submission value or synonym → canonical submission value; misses keep
+   * the `txt` form of the original (executor.rs:354-396, ct.rs:78-112). The
+   * lookup is the native CT expression: the plan carries the codelist's
+   * label, not its terms.
    */
-  def ctNormalize(c: Column, lookup: Broadcast[Map[String, String]]): Column = {
-    val f = udf { (v: String) =>
-      if (v == null) "" else {
-        val t = v.trim
-        if (t.isEmpty) "" else lookup.value.getOrElse(t.toUpperCase, t)
-      }
-    }
-    f(c.cast(StringType))
-  }
-
-  /** N8 via closure capture instead of an explicit Broadcast handle:
-    * codelists are metadata-sized, so shipping the map inside the task
-    * closure costs the same as a broadcast WITHOUT leaking a broadcast
-    * variable per normalizeDomain call (broadcasts are never auto-destroyed;
-    * a long-lived session re-planning previews leaked one per CT rule). */
-  def ctNormalize(c: Column, lookup: Map[String, String]): Column = {
-    val f = udf { (v: String) =>
-      if (v == null) "" else {
-        val t = v.trim
-        if (t.isEmpty) "" else lookup.getOrElse(t.toUpperCase, t)
-      }
-    }
-    f(c.cast(StringType))
-  }
-
-  /** N8 variant without Spark plumbing, for tests / driver-side use. */
-  def ctNormalizeLocal(v: String, lookup: Map[String, String]): String = {
-    if (v == null) return ""
-    val t = v.trim
-    if (t.isEmpty) "" else lookup.getOrElse(t.toUpperCase, t)
-  }
+  def ctTerm(c: Column, index: CtIndex): Column =
+    coalesce(CtExpressions.lookup(c, index), txt(c))
 
   /** N9 — numeric conversion (thousands separators, nan/inf; null on fail).
     * Pure-builtin path for plain shapes; UDF for the rest. */

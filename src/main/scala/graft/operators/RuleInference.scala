@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
+import graft.expressions.CtIndex
 import graft.sources.CsvIngest
 import graft.standards.{SdtmDomain, SdtmVariable, Standards, VariableType}
 
@@ -127,10 +128,7 @@ object RuleInference {
       case Iso8601DateTime | Iso8601Date => Normalize.iso8601(source)
       case Iso8601Duration => Normalize.isoDuration(source)
       case CtNormalization(code) =>
-        // closure-captured map (metadata-sized) — a per-call broadcast here
-        // leaked one broadcast variable per CT rule per re-planned preview
-        Normalize.ctNormalize(source,
-          Standards.ct(ctx.standard, ctx.ctVersion).lookupMap(code))
+        Normalize.ctTerm(source, CtIndex(Standards.ct(ctx.standard, ctx.ctVersion), code))
       case NumericConversion => Normalize.numeric(source)
       case CopyDirect =>
         sourceOpt.map(c => Normalize.copyDirect(df, c)).getOrElse(lit(""))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Graft.table
+import graft.expressions.CtIndex
 import graft.operators.Normalize
 
 /**
@@ -83,12 +84,12 @@ object NormalizeQueries {
     // N8 — controlled-terminology normalization with synonyms; misses
     // preserve the original value
     "n8_ct" -> ((s, dir) => {
-      val lookup = s.sparkContext.broadcast(Map(
+      val lookup = CtIndex.adHoc(Map(
         "AFRICA" -> "AFR", "AMERICA" -> "AMER", "ASIA" -> "ASIA",
         "EUROPE" -> "EUR", "THE AMERICAS" -> "AMER"))
       val r = table(s, dir, "region")
       r.select(col("r_regionkey"),
-          Normalize.ctNormalize(col("r_name"), lookup).as("r_ct"))
+          Normalize.ctTerm(col("r_name"), lookup).as("r_ct"))
         .orderBy("r_regionkey")
     }),
 

@@ -1,5 +1,7 @@
 package graft.standards
 
+import java.util.Locale
+
 import scala.io.Source
 
 import graft.sources.CsvIngest.parseCsvLine
@@ -78,15 +80,23 @@ case class Codelist(
     * ct/types.rs:187-205 checks submission values first). */
   lazy val index: Map[String, String] = {
     val m = scala.collection.mutable.Map[String, String]()
-    terms.foreach(t => m.getOrElseUpdate(t.submissionValue.toUpperCase, t.submissionValue))
+    terms.foreach(t => m.getOrElseUpdate(Codelist.fold(t.submissionValue), t.submissionValue))
     terms.foreach(t =>
-      t.synonyms.foreach(s => m.getOrElseUpdate(s.trim.toUpperCase, t.submissionValue)))
+      t.synonyms.foreach(s => m.getOrElseUpdate(Codelist.fold(s.trim), t.submissionValue)))
     m.toMap
   }
 
   /** Case-insensitive resolve of a raw value (`find_submission_value` —
     * `ct/types.rs:187-205`). */
-  def resolve(value: String): Option[String] = index.get(value.trim.toUpperCase)
+  def resolve(value: String): Option[String] = index.get(Codelist.fold(value.trim))
+}
+
+object Codelist {
+  /** The one CT case fold: [[Codelist.index]] keys, [[Codelist.resolve]]
+    * and the CT expressions (`graft.expressions.CtIndex`) all go through it.
+    * `Locale.ROOT`, never the default locale — under a Turkish default
+    * `"mild".toUpperCase` is `MİLD` and misses `MILD`. */
+  def fold(s: String): String = s.toUpperCase(Locale.ROOT)
 }
 
 /** One CT publication file's worth of codelists (`TerminologyCatalog` —
@@ -103,8 +113,10 @@ case class TerminologyCatalog(
   * orders the study's own publishing set first, then SDTM CT, SEND CT, and
   * the remaining catalogs alphabetically, mirroring `catalogs_in_order`
   * (`ct/types.rs:379-398`); `get` returns the first catalog's definition of
-  * a codelist code. */
-case class TerminologyRegistry(catalogs: Seq[TerminologyCatalog]) {
+  * a codelist code. `id` names the registry (`sdtm@2024-03-29`, standard
+  * and CT publication): the CT expressions print it, and registries with
+  * different ids may resolve a code to different terms. */
+case class TerminologyRegistry(id: String, catalogs: Seq[TerminologyCatalog]) {
   // delegates to getWithCatalog so the trim/uppercase/first-catalog-wins
   // rule exists exactly once — get and Define-XML's def:StandardOID can
   // never resolve a code through different catalogs
@@ -118,7 +130,8 @@ case class TerminologyRegistry(catalogs: Seq[TerminologyCatalog]) {
     catalogs.iterator
       .flatMap(c => c.codelists.get(key).map(_ -> c)).nextOption()
   }
-  /** Broadcastable lookup map for one codelist. */
+  /** Folded spelling → submission value for one codelist; Spark plans reach
+    * it only through `graft.expressions.CtIndex`. */
   def lookupMap(code: String): Map[String, String] =
     get(code).map(_.index).getOrElse(Map.empty)
   /** Codes resolvable through any catalog. */
@@ -380,7 +393,7 @@ object Standards {
           }
         (rank, c.label.toUpperCase)
       }
-      TerminologyRegistry(ordered)
+      TerminologyRegistry(s"${standard.toLowerCase}@$version", ordered)
     })
   }
   private val ctCache =

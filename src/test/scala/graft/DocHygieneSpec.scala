@@ -72,4 +72,18 @@ class DocHygieneSpec extends AnyFunSuite {
         "query — call Graft.materialize instead:\n  " +
         offenders.mkString("\n  "))
   }
+
+  test("codelist terms reach a plan only through the CT expression") {
+    // split needle, as above: an inlined codelist (`isin`/`typedLit` of its
+    // terms) makes plan rendering, analysis and AQE re-planning scale with
+    // the term count — take a CtIndex and graft_ct_member/graft_ct_lookup
+    val needle = "lookup" + "Map("
+    val allowed = Set("Standards.scala", "CtExpressions.scala")
+    val offenders = scalaSources("src/main/scala")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
+      .filterNot(p => allowed.contains(p.getFileName.toString))
+    assert(offenders.isEmpty,
+      "codelist maps are read only by Standards and the CT expression:\n  " +
+        offenders.mkString("\n  "))
+  }
 }

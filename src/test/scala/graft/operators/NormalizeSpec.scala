@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.expressions.CtIndex
 
 /** Normalization operator semantics over real DataFrames
   * (executor.rs:24-463 behavior pins). */
@@ -61,9 +62,9 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("N8 ct normalize: synonym hit, miss preserves original") {
-    val lookup = spark.sparkContext.broadcast(Map("MALE" -> "M", "M" -> "M"))
+    val lookup = CtIndex.adHoc(Map("MALE" -> "M", "M" -> "M"))
     val df = Seq("male", " M ", "unknown", "").toDF("v")
-    val out = df.select(Normalize.ctNormalize(col("v"), lookup).as("v"))
+    val out = df.select(Normalize.ctTerm(col("v"), lookup).as("v"))
       .collect().map(_.getString(0)).toSeq
     assert(out == Seq("M", "M", "unknown", ""))
   }
