@@ -4,15 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Graft.{isBlank, txt}
-import graft.expressions.{CtExpressions, CtIndex}
-import graft.standards.{SdtmDomain, Standards, VariableType}
+import graft.expressions.CtIndex
+import graft.standards.{Codelist, SdtmDomain, Standards, VariableType}
 
 /**
- * Per-domain validation driver (`checks/mod.rs:24-77` — checks 1-8 in
- * order) producing a typed `Seq[Issue]`. Every per-variable statistic
- * rides ONE fused aggregation over the frame; only the V5 duplicate-SEQ
- * check needs its own groupBy job. Cross-domain checks live in
- * [[Validate]] (X1-X5 anti-joins).
+ * Validation driver producing typed `Seq[Issue]`s: composes [[Validate]],
+ * which defines every check expression, and decides which check applies to
+ * which variable. Per domain (`checks/mod.rs:24-77` — checks 1-8 in order)
+ * every per-variable statistic rides ONE fused aggregation over the frame;
+ * only the V5 duplicate-SEQ check needs its own groupBy job. Study-wide,
+ * X1-X5 are one anti-join each, with the join strategy left to Spark.
  */
 object DomainValidation {
 
@@ -21,10 +22,7 @@ object DomainValidation {
   private val DateSuffixes =
     Seq("DTC", "DTM", "DT", "TM", "STDTC", "ENDTC", "STDT", "ENDT")
 
-  private def isDateVar(name: String): Boolean = {
-    val u = name.toUpperCase
-    DateSuffixes.exists(u.endsWith)
-  }
+  private def isDateVar(name: String): Boolean = DateSuffixes.exists(Codelist.fold(name).endsWith)
 
   /** Run V1-V8 over one domain frame. `declaredLengths` feeds V6; `ct` is
     * the study's CT registry (standard-aware — a SEND study validates
@@ -34,19 +32,19 @@ object DomainValidation {
       declaredLengths: Map[String, Int] = Map.empty,
       ct: graft.standards.TerminologyRegistry = Standards.ctRegistry): Seq[Issue] = {
     val issues = Seq.newBuilder[Issue]
-    val present = df.columns.map(c => c.toUpperCase -> c).toMap
+    val present = df.columns.map(c => Codelist.fold(c) -> c).toMap
     val vars = domain.orderedVariables
 
     // V1/V2 absence checks need no scan
     vars.foreach { v =>
-      val here = present.contains(v.name.toUpperCase)
+      val here = present.contains(Codelist.fold(v.name))
       if (!here && v.isRequired)
         issues += Issue(domain.name, v.name, "RequiredMissing", "Reject", 0, Nil)
       if (!here && v.isExpected && !notCollected.contains(v.name))
         issues += Issue(domain.name, v.name, "ExpectedMissing", "Warning", 0, Nil)
     }
 
-    val presentVars = vars.filter(v => present.contains(v.name.toUpperCase))
+    val presentVars = vars.filter(v => present.contains(Codelist.fold(v.name)))
     if (presentVars.isEmpty) return issues.result()
     // V8 codelists with terms, by variable name
     val ctIndexes = presentVars.flatMap(v => v.firstCodelistCode
@@ -55,28 +53,25 @@ object DomainValidation {
     // one fused aggregation: blanks, type conformance, ISO shape, lengths,
     // CT membership counts + samples
     val aggs = Seq.newBuilder[Column]
-    aggs += count(lit(1)).as("__total")
     presentVars.foreach { v =>
-      val c = col(present(v.name.toUpperCase))
+      val c = col(present(Codelist.fold(v.name)))
       val n = v.name
-      aggs += sum(when(isBlank(c), 1L).otherwise(0L)).as(s"${n}__blank")
+      aggs += Validate.blankCount(c).as(s"${n}__blank")
       if (v.dataType == VariableType.Num)
-        aggs += sum(when(!isBlank(c) && !txt(c).rlike(Validate.NumericRegex), 1L)
-          .otherwise(0L)).as(s"${n}__badnum")
+        aggs += Validate.nonNumericCount(c).as(s"${n}__badnum")
       if (isDateVar(n))
-        aggs += sum(when(!isBlank(c) && !txt(c).rlike(Validate.IsoDateRegex), 1L)
-          .otherwise(0L)).as(s"${n}__baddate")
+        aggs += Validate.nonIsoDateCount(c).as(s"${n}__baddate")
       declaredLengths.get(n).foreach { len =>
-        aggs += sum(when(length(txt(c)) > len, 1L).otherwise(0L)).as(s"${n}__overlen")
-        aggs += max(length(txt(c))).as(s"${n}__maxlen")
+        aggs += Validate.lengthViolations(c, len).as(s"${n}__overlen")
+        aggs += Validate.maxObservedLength(c).as(s"${n}__maxlen")
       }
       ctIndexes.get(n).foreach { index =>
-        val bad = !isBlank(c) && !CtExpressions.member(c, index)
-        aggs += sum(when(bad, 1L).otherwise(0L)).as(s"${n}__badct")
-        aggs += slice(sort_array(collect_set(when(bad, txt(c)))), 1, 5).as(s"${n}__ctsamples")
+        val bad = Validate.ctViolation(c, index)
+        aggs += Validate.countOf(bad).as(s"${n}__badct")
+        aggs += Validate.samples(c, bad).as(s"${n}__ctsamples")
       }
     }
-    val row = df.agg(aggs.result().head, aggs.result().tail: _*).head()
+    val row = df.agg(count(lit(1)).as("__total"), aggs.result(): _*).head()
     val total = row.getAs[Long]("__total")
 
     presentVars.foreach { v =>
@@ -117,7 +112,7 @@ object DomainValidation {
     }
 
     // V5 — duplicate SEQ (own groupBy; shuffles on the subject key only)
-    val seqVar = s"${domain.name.toUpperCase}SEQ"
+    val seqVar = s"${Codelist.fold(domain.name)}SEQ"
     for {
       seqCol <- present.get(seqVar)
       subjCol <- present.get("USUBJID")
@@ -135,7 +130,7 @@ object DomainValidation {
     * skipped, exactly like the reference (validate/mod.rs:102-112). */
   def validateCrossDomain(domains: Map[String, DataFrame]): Seq[Issue] = {
     val issues = Seq.newBuilder[Issue]
-    val upper = domains.map { case (k, v) => k.toUpperCase -> v }
+    val upper = domains.map { case (k, v) => Codelist.fold(k) -> v }
     // DM is the subject reference for everything below — guaranteed present
     // past this point
     val dm = upper.getOrElse("DM", return Nil)
@@ -153,7 +148,7 @@ object DomainValidation {
         .where(col("USUBJID") =!= "")
       val orphans = Validate.orphanSubjects(subjects, dm, "USUBJID")
         .groupBy(col("domain"))
-        .agg(count(lit(1)), slice(sort_array(collect_set(col("USUBJID"))), 1, 5))
+        .agg(count(lit(1)), Validate.samples(col("USUBJID")))
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getSeq[String](2))).toMap
       subjectDomains.foreach { code =>
         orphans.get(code).foreach { case (n, samples) =>
@@ -178,7 +173,7 @@ object DomainValidation {
         val r = Validate.orphanSubjects(
             rs.select(txt(col("RSUBJID")).as("USUBJID")).where(col("USUBJID") =!= ""),
             dm, "USUBJID")
-          .agg(count(lit(1)), slice(sort_array(collect_set(col("USUBJID"))), 1, 5)).head()
+          .agg(count(lit(1)), Validate.samples(col("USUBJID"))).head()
         if (r.getLong(0) > 0)
           issues += Issue("RELSUB", "RSUBJID", "RsubjidNotInDm", "Error",
             r.getLong(0), r.getSeq[String](1))
@@ -195,17 +190,12 @@ object DomainValidation {
     // reference, not per distinct pair. A RELSPEC without a REFID column means
     // no parent can resolve — every non-empty PARENT row is broken.
     upper.get("RELSPEC").foreach { rsp =>
-      val cols = rsp.columns.map(_.toUpperCase).toSet
+      val cols = rsp.columns.map(Codelist.fold).toSet
       if (cols.contains("USUBJID") && cols.contains("PARENT")) {
         val withRef = if (cols.contains("REFID")) rsp else rsp.withColumn("REFID", lit(""))
-        val refids = withRef
-          .select(txt(col("USUBJID")).as("USUBJID"), txt(col("REFID")).as("PARENT"))
-          .where(col("PARENT") =!= "").distinct()
-        val broken = withRef.where(!isBlank(col("PARENT")))
-          .select(txt(col("USUBJID")).as("USUBJID"), txt(col("PARENT")).as("PARENT"))
-          .join(broadcast(refids), Seq("USUBJID", "PARENT"), "left_anti")
-        val r = broken.agg(count(lit(1)), slice(sort_array(
-          collect_set(concat_ws(":", col("USUBJID"), col("PARENT")))), 1, 5)).head()
+        val r = Validate.brokenParentChain(withRef, "USUBJID", "PARENT", "REFID")
+          .agg(count(lit(1)), Validate.samples(concat_ws(":", col("USUBJID"), col("PARENT"))))
+          .head()
         if (r.getLong(0) > 0)
           issues += Issue("RELSPEC", "PARENT", "BrokenParentChain", "Error",
             r.getLong(0), r.getSeq[String](1))
@@ -217,7 +207,7 @@ object DomainValidation {
     // --REFID/--LNKID + VISITNUM values (cross_domain.rs:300-384); one issue
     // per referenced RDOMAIN, like the reference's per-domain grouping.
     upper.get("RELREC").foreach { rr =>
-      val cols = rr.columns.map(_.toUpperCase).toSet
+      val cols = rr.columns.map(Codelist.fold).toSet
       if (Seq("RDOMAIN", "IDVAR", "IDVARVAL").forall(cols.contains)) {
         val keySources = upper.filterNot(_._1 == "RELREC").map { case (code, df) =>
           code -> (df, Seq(s"${code}SEQ", s"${code}GRPID", s"${code}REFID",
@@ -230,8 +220,8 @@ object DomainValidation {
           val scoped = rr.where(!isBlank(col("RDOMAIN")) && !isBlank(col("IDVAR")))
           val dangling = Validate.danglingRecordRefs(scoped, keys, "RDOMAIN", "IDVAR", "IDVARVAL")
           dangling.groupBy(col("rdomain"))
-            .agg(count(lit(1)).as("n"), slice(sort_array(
-              collect_set(concat_ws("=", col("idvar"), col("idvarval")))), 1, 5).as("samples"))
+            .agg(count(lit(1)).as("n"),
+              Validate.samples(concat_ws("=", col("idvar"), col("idvarval"))).as("samples"))
             .orderBy(col("rdomain"))
             .collect().foreach { row =>
               issues += Issue("RELREC", row.getString(0), "DanglingRecordRef", "Error",

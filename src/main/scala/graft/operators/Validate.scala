@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Graft.{isBlank, txt}
+import graft.expressions.{CtExpressions, CtIndex}
+import graft.standards.Codelist
 
 /** Typed validation finding — the shared shape (domain, variable, kind,
   * severity, count, samples) of every reference issue variant
@@ -27,14 +29,16 @@ case class Issue(
 
 /**
  * Per-domain validation checks V1-V8 (SURVEY §2.5) and cross-domain checks
- * X1-X5 (§2.6), re-expressed as Spark aggregations and broadcast anti-joins.
+ * X1-X5 (§2.6): the one home of every check expression. Each per-domain
+ * check is a predicate plus one `Column` aggregate, so ALL checks over a
+ * domain fuse into a single scan (`df.agg(exprs:_*)`) — one pass, no
+ * collect, samples via `slice(sort_array(collect_set))` capped at 5. Each
+ * cross-domain check is one anti-join; the join strategy is left to
+ * Spark's `autoBroadcastJoinThreshold` and AQE. [[DomainValidation]] and
+ * the validation queries only compose these.
  *
  * Shape studied from the check modules under `crates/tss-submit/src/validate/checks/` and
- * `validate/cross_domain.rs`. The reference walks every column row-by-row;
- * here each per-domain check is one `Column` aggregate so ALL checks over a
- * domain fuse into a single scan (`df.agg(exprs:_*)`) — the design that
- * survives 100 TB: one pass, no collect, samples via `slice(sort_array(
- * collect_set))` capped at 5.
+ * `validate/cross_domain.rs`. The reference walks every column row-by-row.
  */
 object Validate {
 
@@ -47,68 +51,32 @@ object Validate {
   /** Numeric-shape regex shared by V3 and hints. */
   val NumericRegex: String = "^[+-]?((\\d+\\.?\\d*)|(\\.\\d+))([eE][+-]?\\d+)?$"
 
-  // ---- V1/V2/V7: null-or-blank population counts ---------------------------
-  def blankCount(c: Column): Column = sum(when(isBlank(c), 1L).otherwise(0L))
-
-  def nonBlankCount(c: Column): Column = sum(when(isBlank(c), 0L).otherwise(1L))
-
-  // ---- V3: type conformance -------------------------------------------------
-  def nonNumericCount(c: Column): Column =
-    sum(when(!isBlank(c) && !txt(c).rlike(NumericRegex), 1L).otherwise(0L))
-
-  // ---- V4: ISO-8601 conformance --------------------------------------------
-  def nonIsoDateCount(c: Column): Column =
-    sum(when(!isBlank(c) && !txt(c).rlike(IsoDateRegex), 1L).otherwise(0L))
-
-  // ---- V6: declared-length violations ---------------------------------------
-  def lengthViolations(c: Column, maxLen: Int): Column =
-    sum(when(length(txt(c)) > maxLen, 1L).otherwise(0L))
-
-  def maxObservedLength(c: Column): Column = max(length(txt(c)))
+  /** Rows matching a check predicate, as one aggregate. */
+  def countOf(bad: Column): Column = sum(when(bad, 1L).otherwise(0L))
 
   /** Up to five deterministic sample values matching a predicate — the
     * reference's MAX_INVALID_VALUES=5 samples, made order-stable. */
-  def samples(c: Column, bad: Column, n: Int = 5): Column =
+  def samples(c: Column, bad: Column = lit(true), n: Int = 5): Column =
     slice(sort_array(collect_set(when(bad, txt(c)))), 1, n)
 
-  /** Config key gating the X1/X5 broadcast hints (plain bytes or a Spark
-    * size spelling like "64m"; 0 or any negative value disables the hint
-    * entirely). */
-  val BroadcastThresholdKey = "spark.graft.validate.broadcastThreshold"
-  val BroadcastThresholdDefault: Long = 64L << 20
+  // ---- V1/V2/V7: null-or-blank population counts ---------------------------
+  def blankCount(c: Column): Column = countOf(isBlank(c))
 
-  /** Broadcast hint only when Catalyst's size estimate fits the configured
-    * threshold. At submission scale the subject/key dimensions are tiny and
-    * the hint wins; at 100× the estimate (derived from the scan size)
-    * exceeds the threshold, the hint is withheld, and AQE picks the join
-    * strategy from ACTUAL runtime sizes — an unconditional hint would force
-    * a driver-side collect of an unbounded table and OOM instead.
-    *
-    * Known tradeoffs, deliberate: (a) a source with no stats (e.g. a
-    * LogicalRDD from createDataFrame) estimates sizeInBytes = defaultSize =
-    * Long.MaxValue and is treated as too-big — conservative, AQE still
-    * recovers the broadcast at runtime; (b) reading `.stats` optimizes the
-    * dimension subtree on the driver once per call — these dimensions are
-    * distinct-of-a-column plans, small to optimize. The threshold accepts
-    * Spark size spellings ("64m", "1g") or plain bytes. */
-  def maybeBroadcast(df: DataFrame): DataFrame = {
-    val raw = df.sparkSession.conf
-      .get(BroadcastThresholdKey, BroadcastThresholdDefault.toString)
-    // negative values disable the hint (the documented contract predating
-    // size-suffix support — byteStringAsBytes alone would reject them)
-    val threshold =
-      if (raw.trim.startsWith("-")) 0L
-      else
-        try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-        catch {
-          case e: NumberFormatException => throw new IllegalArgumentException(
-            s"$BroadcastThresholdKey: cannot parse '$raw' as a byte size " +
-              "(use plain bytes or a size suffix like 64m)", e)
-        }
-    if (threshold > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold)
-      broadcast(df)
-    else df
-  }
+  def nonBlankCount(c: Column): Column = countOf(!isBlank(c))
+
+  // ---- V3: type conformance -------------------------------------------------
+  def nonNumeric(c: Column): Column = !isBlank(c) && !txt(c).rlike(NumericRegex)
+
+  def nonNumericCount(c: Column): Column = countOf(nonNumeric(c))
+
+  // ---- V4: ISO-8601 conformance --------------------------------------------
+  def nonIsoDateCount(c: Column): Column =
+    countOf(!isBlank(c) && !txt(c).rlike(IsoDateRegex))
+
+  // ---- V6: declared-length violations ---------------------------------------
+  def lengthViolations(c: Column, maxLen: Int): Column = countOf(length(txt(c)) > maxLen)
+
+  def maxObservedLength(c: Column): Column = max(length(txt(c)))
 
   // ---- V5: duplicate sequence numbers within a subject ----------------------
   /** Count of surplus rows: sum(count-1) over duplicated (subject, seq). */
@@ -120,26 +88,25 @@ object Validate {
         count(lit(1)).as("dup_keys"))
 
   // ---- V8: controlled terminology --------------------------------------------
-  /** Distinct values of `c` that resolve to no submission value or synonym.
-    * codelistDf: one column `allowed` of uppercased valid spellings; tiny →
-    * broadcast left-anti. */
-  def invalidCtValues(df: DataFrame, c: Column, codelistDf: DataFrame): DataFrame = {
-    val vals = df.select(upper(txt(c)).as("v")).where(col("v") =!= "").distinct()
-    vals.join(broadcast(codelistDf.select(upper(col("allowed")).as("v"))), Seq("v"), "left_anti")
-  }
+  /** A non-blank value that resolves to no submission value or synonym of
+    * the codelist. */
+  def ctViolation(c: Column, index: CtIndex): Column =
+    !isBlank(c) && !CtExpressions.member(c, index)
+
+  /** Distinct upper-cased values of `c` that violate the codelist. */
+  def invalidCtValues(df: DataFrame, c: Column, index: CtIndex): DataFrame =
+    df.where(ctViolation(c, index)).select(upper(txt(c)).as("v")).distinct()
 
   // ---- X1: USUBJID referential integrity vs DM -------------------------------
-  /** Rows of `domain` whose subject key is absent from `dm` — keys side is
-    * distinct + broadcast (subject dimension ≪ facts). */
+  /** Rows of `domain` whose subject key is absent from `dm`. */
   def orphanSubjects(domain: DataFrame, dm: DataFrame, key: String): DataFrame = {
     val dmKeys = dm.select(txt(col(key)).as(key)).distinct()
-    domain.withColumn(key, txt(col(key)))
-      .join(maybeBroadcast(dmKeys), Seq(key), "left_anti")
+    domain.withColumn(key, txt(col(key))).join(dmKeys, Seq(key), "left_anti")
   }
 
   // ---- X2: RDOMAIN must name a submitted domain ------------------------------
   def invalidRdomain(df: DataFrame, rdomain: String, domains: Seq[String]): DataFrame =
-    df.where(!isBlank(col(rdomain)) && !upper(txt(col(rdomain))).isin(domains.map(_.toUpperCase): _*))
+    df.where(!isBlank(col(rdomain)) && !upper(txt(col(rdomain))).isin(domains.map(Codelist.fold): _*))
 
   // ---- X3: bidirectional relationship pairs ----------------------------------
   /** Pairs (u, r) with no reciprocal (r, u) in the same frame — a self
@@ -155,11 +122,12 @@ object Validate {
   }
 
   // ---- X4: parent chain within a subject --------------------------------------
-  /** Rows whose non-empty PARENT matches no REFID of the same subject. */
+  /** Rows whose non-empty PARENT matches no REFID of the same subject, as
+    * trimmed (subject, parent) pairs — one per row, not per distinct pair. */
   def brokenParentChain(df: DataFrame, subject: String, parent: String, refid: String): DataFrame = {
     val refids = df.select(txt(col(subject)).as(subject), txt(col(refid)).as(parent)).distinct()
     df.where(!isBlank(col(parent)))
-      .select(txt(col(subject)).as(subject), txt(col(parent)).as(parent)).distinct()
+      .select(txt(col(subject)).as(subject), txt(col(parent)).as(parent))
       .join(refids, Seq(subject, parent), "left_anti")
   }
 
@@ -172,7 +140,7 @@ object Validate {
     val frames = for {
       (code, (df, cols)) <- domains.toSeq.sortBy(_._1)
       c <- cols if df.columns.contains(c)
-    } yield df.select(lit(code.toUpperCase).as("rdomain"), lit(c.toUpperCase).as("idvar"),
+    } yield df.select(lit(Codelist.fold(code)).as("rdomain"), lit(Codelist.fold(c)).as("idvar"),
       txt(col(c)).as("idvarval")).where(col("idvarval") =!= "").distinct()
     frames match {
       case Nil =>
@@ -191,5 +159,5 @@ object Validate {
       .select(upper(txt(col(rdomain))).as("rdomain"), upper(txt(col(idvar))).as("idvar"),
         txt(col(idvarval)).as("idvarval"))
       .where(col("idvarval") =!= "")
-      .join(maybeBroadcast(keys), Seq("rdomain", "idvar", "idvarval"), "left_anti")
+      .join(keys, Seq("rdomain", "idvar", "idvarval"), "left_anti")
 }

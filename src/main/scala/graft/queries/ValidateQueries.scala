@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Graft.{table, txt}
+import graft.expressions.CtIndex
 import graft.operators.Validate
 
 /**
@@ -11,7 +12,7 @@ import graft.operators.Validate
  * testdata. Dirty inputs are derived deterministically (key-modulo blanking,
  * malformed date spellings) so the DuckDB oracle can state expectations in
  * plain SQL. All per-domain checks are single-scan aggregates; cross-domain
- * checks are broadcast anti-joins — the shapes that hold at 100 TB.
+ * checks are anti-joins — the shapes that hold at 100 TB.
  */
 object ValidateQueries {
 
@@ -37,12 +38,10 @@ object ValidateQueries {
       val v = when(col("o_orderkey") % 5 === 0, lit("abc"))
         .when(col("o_orderkey") % 5 === 1, lit("1,234"))
         .otherwise(col("o_totalprice").cast("string"))
-      val d = o.select(v.as("v"))
-      val bad = !txt(col("v")).rlike(Validate.NumericRegex) && txt(col("v")) =!= ""
-      d.agg(
+      o.select(v.as("v")).agg(
         Validate.nonNumericCount(col("v")).as("n_bad"),
         count(lit(1)).as("n_rows"),
-        array_join(Validate.samples(col("v"), bad), ",").as("sample_bad"))
+        array_join(Validate.samples(col("v"), Validate.nonNumeric(col("v"))), ",").as("sample_bad"))
     }),
 
     // V4 — anchored ISO-8601 conformance (partial precision allowed,
@@ -77,15 +76,12 @@ object ValidateQueries {
 
     // V8 — controlled-terminology membership: distinct unresolvable values
     "v8_ct_invalid" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val allowed = s.createDataFrame(
-        Seq("CLICK", "VIEW", "PURCHASE", "SIGNUP").map(Tuple1(_)))
-        .toDF("allowed")
-      Validate.invalidCtValues(ev, col("event_type"), allowed)
+      val allowed = CtIndex.adHoc(Seq("CLICK", "VIEW", "PURCHASE", "SIGNUP").map(t => t -> t).toMap)
+      Validate.invalidCtValues(table(s, dir, "events"), col("event_type"), allowed)
         .orderBy("v")
     }),
 
-    // X1 — subject referential integrity (left_anti vs broadcast DM keys)
+    // X1 — subject referential integrity (left_anti vs distinct DM keys)
     "x1_orphan_subjects" -> ((s, dir) => {
       val orders = table(s, dir, "orders")
         .select(col("o_custkey").cast("string").as("usubjid"), col("o_orderkey"))
@@ -123,7 +119,7 @@ object ValidateQueries {
           col("l_linenumber").cast("string").as("refid"),
           when(col("l_linenumber") > 1, (col("l_linenumber") - 1).cast("string"))
             .otherwise(lit("6")).as("parent"))
-      Validate.brokenParentChain(d, "usubjid", "parent", "refid")
+      Validate.brokenParentChain(d, "usubjid", "parent", "refid").distinct()
         .agg(count(lit(1)).as("n_broken"),
           countDistinct(col("usubjid")).as("n_subjects"))
     }),

@@ -299,13 +299,13 @@ class StudySession(val spark: SparkSession, val studyId: String,
     val written = Seq.newBuilder[String]
 
     // only domains with IG metadata can export (preview needs the variable
-    // list); unknown codes were ingestable for mapping work but are skipped.
-    // Building the previews here also materializes the DM reference-date
-    // memo on this thread — the forked tasks below only run the plans.
+    // list); unknown codes were ingestable for mapping work but are skipped
     val exportable = domainCodes.sorted.filter(c =>
-      domainMetaFor(c).isDefined && preview(c).isDefined)
+      domainMetaFor(c).isDefined && domainState(c).isDefined)
 
-    // per-domain plan + metadata, resolved serially (cheap, driver-only)
+    // per-domain plan + metadata, resolved serially (cheap, driver-only);
+    // building the previews here also materializes the DM reference-date
+    // memo on this thread — the forked tasks below only run the plans
     case class DomainPlan(code: String, domain: SdtmDomain, frame: DataFrame,
         presentVars: Seq[graft.standards.SdtmVariable], isRefData: Boolean)
     val plans = exportable.map { code =>

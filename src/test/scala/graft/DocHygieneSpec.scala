@@ -86,4 +86,17 @@ class DocHygieneSpec extends AnyFunSuite {
       "codelist maps are read only by Standards and the CT expression:\n  " +
         offenders.mkString("\n  "))
   }
+
+  test("the only graft conf key is spark.graft.csv.transcodeDir") {
+    // split needle, as above: a knob is an option every deployment must
+    // understand — a new one is justified in the README configuration table
+    // and listed here, not added in passing
+    val key = java.util.regex.Pattern.compile("spark" + """\.graft\.[A-Za-z0-9_.]+""")
+    val found = scalaSources("src/main/scala").flatMap { p =>
+      val m = key.matcher(new String(Files.readAllBytes(p), "UTF-8"))
+      Iterator.continually(m.find()).takeWhile(identity).map(_ => p.getFileName -> m.group()).toVector
+    }
+    assert(found.map(_._2).toSet == Set("spark.graft.csv.transcodeDir"),
+      "conf keys under src/main: " + found.mkString(", "))
+  }
 }

@@ -1,8 +1,13 @@
 package graft.operators
 
+import java.util.Locale
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{PlanCheck, SparkSpec}
+import graft.expressions.CtIndex
+import graft.standards.Standards
 
 /** Validation check semantics (validate/checks and cross_domain.rs pins). */
 class ValidateSpec extends SparkSpec {
@@ -41,14 +46,13 @@ class ValidateSpec extends SparkSpec {
 
   test("V8 invalid CT values: distinct, case-folded, blank-excluded") {
     val df = Seq("male", "MALE", "other", "", null).toDF("sex")
-    val allowed = Seq("MALE", "FEMALE").toDF("allowed")
+    val allowed = CtIndex.adHoc(Map("MALE" -> "MALE", "FEMALE" -> "FEMALE"))
     val out = Validate.invalidCtValues(df, col("sex"), allowed)
       .collect().map(_.getString(0)).toSeq
     assert(out == Seq("OTHER"))
   }
 
   test("SEND-only codelist (DM.SPECIES C77808) validates through the SEND registry") {
-    import graft.standards.Standards
     val dm = Seq(("STUDY1", "S1", "RAT"), ("STUDY1", "S2", "SPARKLEDOG"))
       .toDF("STUDYID", "USUBJID", "SPECIES")
     val domain = Standards.domain("send", "DM").get
@@ -67,40 +71,29 @@ class ValidateSpec extends SparkSpec {
     assert(out == Seq("S2"))
   }
 
-  test("X1/X5 broadcast hint is withheld under threshold 0, results identical") {
+  test("X1/X5 anti-joins broadcast under Spark's own threshold; rows identical without it") {
     val dom = Seq(("S1", 1), ("S2", 2), ("S3", 3)).toDF("usubjid", "n")
     val dm = Seq("S1", "S3").toDF("usubjid")
     val refs = Seq(("AE", "AESEQ", "1"), ("AE", "AESEQ", "9")).toDF("rdomain", "idvar", "idvarval")
     val keys = Seq(("AE", "AESEQ", "1")).toDF("rdomain", "idvar", "idvarval")
-    def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.analyzed.collect {
-        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-      }.nonEmpty
-    // default threshold: tiny dimensions get the hint
-    assert(hinted(Validate.orphanSubjects(dom, dm, "usubjid")))
-    assert(hinted(Validate.danglingRecordRefs(refs, keys)))
-    spark.conf.set(Validate.BroadcastThresholdKey, "0")
+    def run(df: DataFrame, c: String): (Seq[String], String) = {
+      val rows = df.select(c).collect().map(_.getString(0)).toSeq
+      (rows, PlanCheck.finalPlan(df.queryExecution.executedPlan))
+    }
+    def x1 = run(Validate.orphanSubjects(dom, dm, "usubjid"), "usubjid")
+    def x5 = run(Validate.danglingRecordRefs(refs, keys), "idvarval")
+    // session defaults: the tiny key sides fit autoBroadcastJoinThreshold
+    Seq(x1 -> Seq("S2"), x5 -> Seq("9")).foreach { case ((rows, plan), want) =>
+      assert(rows == want)
+      assert(plan.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftAnti")),
+        plan)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
     try {
-      // threshold 0: no hint anywhere — AQE owns the join strategy — and
-      // the shuffled plan returns the same rows
-      val x1 = Validate.orphanSubjects(dom, dm, "usubjid")
-      val x5 = Validate.danglingRecordRefs(refs, keys)
-      assert(!hinted(x1) && !hinted(x5))
-      assert(x1.select("usubjid").collect().map(_.getString(0)).toSeq == Seq("S2"))
-      assert(x5.select("idvarval").collect().map(_.getString(0)).toSeq == Seq("9"))
-    } finally spark.conf.unset(Validate.BroadcastThresholdKey)
-  }
-
-  test("broadcast threshold accepts size spellings and names the key on bad input") {
-    val dm = Seq("S1").toDF("usubjid")
-    spark.conf.set(Validate.BroadcastThresholdKey, "64m")
-    try assert(Validate.maybeBroadcast(dm) ne dm) // hinted: 1 row << 64m
-    finally spark.conf.unset(Validate.BroadcastThresholdKey)
-    spark.conf.set(Validate.BroadcastThresholdKey, "sixty-four")
-    try {
-      val e = intercept[IllegalArgumentException](Validate.maybeBroadcast(dm))
-      assert(e.getMessage.contains(Validate.BroadcastThresholdKey))
-    } finally spark.conf.unset(Validate.BroadcastThresholdKey)
+      assert(x1._1 == Seq("S2"))
+      assert(x5._1 == Seq("9"))
+    } finally spark.conf.unset(key)
   }
 
   test("X3 reciprocal pairs") {
@@ -159,5 +152,54 @@ class ValidateSpec extends SparkSpec {
     // without DM there is no subject reference — the reference returns
     // nothing at all (validate/mod.rs:102-112)
     assert(DomainValidation.validateCrossDomain(Map("RELSUB" -> rs)).isEmpty)
+  }
+
+  test("column and domain names fold locale-free: a Turkish default finds usubjid") {
+    val dm = Seq(("STUDY1", "S1"), ("STUDY1", "")).toDF("studyid", "usubjid")
+    val saved = Locale.getDefault
+    Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+    try {
+      val issues = DomainValidation.validateDomain(dm, Standards.domain("DM").get)
+      assert(!issues.exists(i => i.variable == "USUBJID" && i.kind == "RequiredMissing"),
+        issues.toString)
+      assert(issues.exists(i => i.variable == "USUBJID" && i.kind == "RequiredEmpty" &&
+        i.count == 1), issues.toString)
+    } finally Locale.setDefault(saved)
+  }
+
+  private def dmS = Seq("S1", "S2", "S3").toDF("USUBJID")
+
+  test("cross-domain X2: RDOMAIN of CO and RELREC must name a submitted domain") {
+    val co = Seq("AE", "ae", "XX", "", "YY").toDF("RDOMAIN")
+    val rr = Seq("DM", "ZZ").toDF("RDOMAIN")
+    val issues = DomainValidation.validateCrossDomain(
+      Map("DM" -> dmS, "AE" -> dmS, "CO" -> co, "RELREC" -> rr))
+      .filter(_.kind == "InvalidRdomain")
+    assert(issues.toSet == Set(
+      Issue("CO", "RDOMAIN", "InvalidRdomain", "Error", 2, Nil),
+      Issue("RELREC", "RDOMAIN", "InvalidRdomain", "Error", 1, Nil)), issues)
+  }
+
+  test("cross-domain X3: a RELSUB pair without its reciprocal is counted") {
+    val rs = Seq(("S1", "S2"), ("S2", "S1"), ("S1", "S3"), ("S3", "S2"), ("S3", ""))
+      .toDF("USUBJID", "RSUBJID")
+    val issues = DomainValidation.validateCrossDomain(Map("DM" -> dmS, "RELSUB" -> rs))
+    assert(issues == Seq(Issue("RELSUB", "RSUBJID", "MissingReciprocal", "Warning", 2, Nil)),
+      issues)
+  }
+
+  test("cross-domain X4: without REFID every non-empty PARENT is broken") {
+    val rsp = Seq(("S1", "P1"), ("S1", ""), ("S2", "P2"), ("S2", " ")).toDF("USUBJID", "PARENT")
+    val issues = DomainValidation.validateCrossDomain(Map("DM" -> dmS, "RELSPEC" -> rsp))
+    assert(issues == Seq(
+      Issue("RELSPEC", "PARENT", "BrokenParentChain", "Error", 2, Seq("S1:P1", "S2:P2"))), issues)
+  }
+
+  test("cross-domain X4 counts rows: two identical broken rows count 2") {
+    val rsp = Seq(("S1", "R1", ""), ("S1", "R2", "R1"), ("S1", "R3", "R9"), ("S1", "R3", "R9"))
+      .toDF("USUBJID", "REFID", "PARENT")
+    val issues = DomainValidation.validateCrossDomain(Map("DM" -> dmS, "RELSPEC" -> rsp))
+    assert(issues == Seq(
+      Issue("RELSPEC", "PARENT", "BrokenParentChain", "Error", 2, Seq("S1:R9"))), issues)
   }
 }
