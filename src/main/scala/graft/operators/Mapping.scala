@@ -1,11 +1,14 @@
 package graft.operators
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Graft.{isBlank, txt}
 import graft.functions.JaroWinkler
 import graft.operators.Validate.NumericRegex
+import graft.standards.Codelist
 
 /** Per-column statistics driving the schema matcher (ColumnHint —
   * `crates/tss-standards/src/lib.rs:136`, built in
@@ -101,7 +104,7 @@ object Mapping {
   /** Name normalization for comparison (score.rs:286-293): trim, lowercase,
     * separators → space, squeeze whitespace. */
   def normalizeName(s: String): String =
-    s.trim.toLowerCase.replaceAll("[_\\-.]", " ").split("\\s+").filter(_.nonEmpty).mkString(" ")
+    s.trim.toLowerCase(Locale.ROOT).replaceAll("[_\\-.]", " ").split("\\s+").filter(_.nonEmpty).mkString(" ")
 
   /** F3 — explainable pair score (score.rs:161-278): Jaro-Winkler base on
     * normalized names; ×1.10 label boost when label JW > 0.85; SEQ suffix
@@ -123,8 +126,8 @@ object Mapping {
       if (labelSim > 0.85) { score *= 1.10; components += ("label" -> 0.10) }
     }
 
-    val cu = column.toUpperCase
-    val vu = variable.name.toUpperCase
+    val cu = Codelist.fold(column)
+    val vu = Codelist.fold(variable.name)
     if (cu.endsWith("SEQ")) {
       if (vu.endsWith("SEQ")) { score *= 1.05; components += ("seq_match" -> 0.05) }
       else { score *= 0.6; components += ("seq_mismatch" -> -0.4) }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Graft.{isBlank, txt}
+import graft.standards.Codelist
 
 /** Per-source-column SUPP config (SuppColumnConfig — the QNAM/QLABEL/QORIG/
   * QEVAL a user assigns to an extra column routed to SUPP--). */
@@ -43,7 +44,7 @@ object Reshape {
     // reference (export.rs treats a missing subject column as all-empty)
     if (included.isEmpty || !df.columns.contains("USUBJID")) return None
 
-    val seqVar = s"${domainCode.toUpperCase}SEQ"
+    val seqVar = s"${Codelist.fold(domainCode)}SEQ"
     val (idvar, idvarCol) =
       if (df.columns.contains(seqVar)) (seqVar, Normalize.copyDirect(df, seqVar))
       else ("USUBJID", txt(col("USUBJID")))
@@ -63,7 +64,7 @@ object Reshape {
       .where(!isBlank(col("QVAL")))
       .select(
         lit(studyId).as("STUDYID"),
-        lit(domainCode.toUpperCase).as("RDOMAIN"),
+        lit(Codelist.fold(domainCode)).as("RDOMAIN"),
         col("USUBJID"),
         lit(idvar).as("IDVAR"),
         col("IDVARVAL"),
@@ -72,14 +73,6 @@ object Reshape {
         col("QORIG"), col("QEVAL"))
     Some(stacked)
   }
-
-  // ---- G2: SUPP domain definition ------------------------------------------
-
-  /** Clone-and-rename of the SUPPQUAL template (`export.rs:394-415`). */
-  def suppDomainName(parentCode: String): String = s"SUPP${parentCode.toUpperCase}"
-
-  def suppDomainLabel(parentCode: String, parentLabel: Option[String]): String =
-    s"Supplemental Qualifiers for ${parentLabel.getOrElse(parentCode)}"
 
   // ---- G3: RELSUB reciprocal augmentation ----------------------------------
 
@@ -185,7 +178,7 @@ object Reshape {
     * into `SEX`, anything else into `<col>_DECODED`; lookup misses yield
     * null (`application.rs:38-125`). Codelists are tiny → broadcast map. */
   def decodeTargetName(colName: String): String =
-    if (colName.toUpperCase.endsWith("CD")) colName.dropRight(2)
+    if (Codelist.fold(colName).endsWith("CD")) colName.dropRight(2)
     else s"${colName}_DECODED"
 
   def decodeColumn(c: Column, codelist: Map[String, String]): Column = {

@@ -1,12 +1,14 @@
 package graft.operators
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
 import graft.expressions.CtIndex
 import graft.sources.CsvIngest
-import graft.standards.{SdtmDomain, SdtmVariable, Standards, VariableType}
+import graft.standards.{Codelist, SdtmDomain, SdtmVariable, Standards, VariableType}
 
 /** The inferred transform for one target variable (NormalizationType —
   * `normalize/types.rs:18-64`). */
@@ -59,7 +61,7 @@ object RuleInference {
 
   def inferType(variable: SdtmVariable, domainCode: String): NormalizationType = {
     val name = variable.name
-    val dvd = variable.describedValueDomain.getOrElse("").toLowerCase
+    val dvd = variable.describedValueDomain.getOrElse("").toLowerCase(Locale.ROOT)
 
     if (name == "STUDYID" || name == "DOMAIN") return Constant
     if (name == "USUBJID") return UsubjidPrefix
@@ -104,7 +106,7 @@ object RuleInference {
     val out: Column = rule.transformType match {
       case Constant =>
         if (rule.targetVariable == "STUDYID") lit(ctx.studyId)
-        else lit(ctx.domainCode.toUpperCase)
+        else lit(Codelist.fold(ctx.domainCode))
       case UsubjidPrefix =>
         // derive from the SUBJID mapping, falling back to a direct USUBJID
         // mapping; no mapping ⇒ all-empty (executor.rs:124-174)

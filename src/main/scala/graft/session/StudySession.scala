@@ -1,6 +1,8 @@
 package graft.session
 
 import java.nio.file.{Files, Paths}
+import java.util.Locale
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -8,7 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sinks.{CtStandard, XmlSinks, XmlVariable, XmlCodelist, XptWriter}
 import graft.sources.{CsvIngest, ItemMeta, ItemsMetadata}
-import graft.standards.{SdtmDomain, Standards, VariableType}
+import graft.standards.{Codelist, SdtmDomain, SdtmVariable, Standards, VariableType}
 
 /** Per-domain state inside a session (DomainState —
   * `crates/tss-gui/src/service/study.rs:122-142`). */
@@ -25,10 +27,11 @@ case class DomainState(
  *  - E1 create: per-domain CSV scans (parallel plans), ONE hints
  *    aggregation per domain, driver-side scoring/suggestion;
  *  - E2 preview+validate: normalization is a single unexecuted projection;
- *    validation fires one fused aggregate per domain + broadcast anti-joins
- *    study-wide;
+ *    validation fires one fused aggregate per domain + study-wide
+ *    anti-joins whose join strategy Spark chooses;
  *  - E3 export: per-domain XPT / Dataset-XML / Define-XML with one
- *    stats aggregate per domain feeding the writers.
+ *    stats aggregate per domain feeding the writers, and SUPP-- datasets
+ *    built from the same cached normalized frames.
  *
  * Mirrors `service/study.rs:27-153`, `service/preview.rs:46-86`,
  * `service/export.rs:127-276`.
@@ -100,7 +103,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
       val (cdf, _) = CsvIngest.readCsvTable(spark, p, codeListsHeaderRows)
       val byFormat = ItemsMetadata.loadCodelists(cdf.drop(CsvIngest.RowIdCol))
       itemsForRouting.values.flatMap(m => m.formatName.flatMap(f =>
-        byFormat.get(f.toUpperCase).map(m.id -> _))).toMap
+        byFormat.get(Codelist.fold(f)).map(m.id -> _))).toMap
     }.getOrElse(Map.empty)
     stateLock.synchronized {
       detected.foreach(itemsMetadata = _)
@@ -109,7 +112,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     }
   }
 
-  def domainState(code: String): Option[DomainState] = domains.get(code.toUpperCase)
+  def domainState(code: String): Option[DomainState] = domains.get(Codelist.fold(code))
   def domainCodes: Seq[String] = domains.keys.toSeq
 
   /** Split-domain dataset names: a >2-char code whose 2-letter prefix is a
@@ -118,7 +121,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     * name, and Define-XML ItemGroupDefs keep the dataset name
     * (`export/types.rs:12-72`). */
   def baseDomainCode(code: String): String = {
-    val u = code.toUpperCase
+    val u = Codelist.fold(code)
     if (u.length > 2 && StudySession.SplitBases.contains(u.take(2))) u.take(2) else u
   }
 
@@ -128,7 +131,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
   /** Route extra source columns of a domain to SUPP-- (G1 config). */
   def configureSupp(code: String, configs: Seq[(String, SuppColumnConfig)]): Unit =
     stateLock.synchronized {
-      suppConfigs(code.toUpperCase) = configs
+      suppConfigs(Codelist.fold(code)) = configs
       dirtyTracker.markDirty()
     }
 
@@ -148,7 +151,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     * snapshot lock; only the domains-map publish does. */
   private def buildDomainState(code: String, csvPath: String,
       headerRows: Int): DomainState = {
-    val codeU = code.toUpperCase
+    val codeU = Codelist.fold(code)
     val (raw, headers) = CsvIngest.readCsvTable(spark, csvPath, headerRows)
     val augmented = if (codeU == "RELSUB") Reshape.ensureRelsubBidirectional(raw) else raw
     // M1/M2 — study-codelist decode for coded columns present in the frame
@@ -159,8 +162,11 @@ class StudySession(val spark: SparkSession, val studyId: String,
     val headerLabels = headers.labels
       .map(ls => headers.columns.zip(ls).toMap).getOrElse(Map.empty)
     val itemLabels = dataCols.flatMap(c => itemsMetadata.get(c).map(c -> _.label)).toMap
-    val hints = Mapping.columnHints(df.select(dataCols.map(col): _*),
+    // a build cancelled mid-job (a sibling in create failed) frees its own
+    // cache: it returns no DomainState for the caller to unpersist
+    val hints = try Mapping.columnHints(df.select(dataCols.map(col): _*),
       itemLabels ++ headerLabels)
+    catch { case e: Throwable => df.unpersist(); throw e }
 
     val domainMeta = domainMetaFor(codeU).getOrElse(
       SdtmDomain(codeU, None, None, None, Nil))
@@ -276,27 +282,32 @@ class StudySession(val spark: SparkSession, val studyId: String,
     * into the XML writers' MDV OIDs and descriptions (the reference takes
     * this as a caller option, `define_xml.rs:27-35`; deriving it from the
     * session's standard selector keeps the two always consistent). */
-  def igVersion: String = standard.toLowerCase match {
+  def igVersion: String = standard.toLowerCase(Locale.ROOT) match {
     case "send" => "3.1.1"
     case "adam" => "1.3"
     case _ => "3.4"
   }
 
-  /** E3 — export every domain: XPT + Dataset-XML per domain, one
-    * Define-XML over all. Returns written paths.
+  /** E3 — export every domain: XPT + Dataset-XML per domain, an XPT per
+    * configured SUPP-- dataset, one Define-XML over all. Returns the
+    * written paths: each domain's `.xpt`, `.xml` pair in sorted-code order,
+    * then the SUPP-- `.xpt`s in parent-code order, then `define.xml`.
     *
-    * The per-domain sink work runs CONCURRENTLY — two tasks per domain
-    * (stats+XPT, Dataset-XML) on a bounded pool, no task ever waiting on
-    * another, so the long pole (the largest domain's Dataset-XML) overlaps
-    * everything else instead of the whole export running serially. All
-    * session-state reads (previews, metadata, the DM reference date) happen
-    * on the caller's thread BEFORE the fork; the forked tasks touch only
-    * their own frames and the write paths, and every output byte is
-    * assembled in sorted-domain order afterwards, so the produced files are
-    * identical to the serial loop's (golden SHA-256 pins). */
+    * The sink work is ONE ordered task list on the session's fan-out
+    * ([[StudySession.inParallel]]): per domain a stats+XPT+Define-row task
+    * and a Dataset-XML task, then one task per SUPP-- dataset. No task ever
+    * waits on another, so the long pole (the largest domain's Dataset-XML)
+    * overlaps everything else instead of the whole export running serially.
+    * Each domain's normalized frame is cached once and shared by its two
+    * sinks and its SUPP-- join. All session-state reads (previews,
+    * metadata, SUPP configs and template, the DM reference date) happen on
+    * the caller's thread BEFORE the fork; the tasks touch only their own
+    * frames and write paths, and every output byte is assembled in task
+    * order afterwards, so the produced files are identical to a serial
+    * loop's (golden SHA-256 pins). */
   def exportAll(outDir: String): Seq[String] = {
     Files.createDirectories(Paths.get(outDir))
-    val written = Seq.newBuilder[String]
+    val ct = ctRegistry
 
     // only domains with IG metadata can export (preview needs the variable
     // list); unknown codes were ingestable for mapping work but are skipped
@@ -307,7 +318,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     // building the previews here also materializes the DM reference-date
     // memo on this thread — the forked tasks below only run the plans
     case class DomainPlan(code: String, domain: SdtmDomain, frame: DataFrame,
-        presentVars: Seq[graft.standards.SdtmVariable], isRefData: Boolean)
+        presentVars: Seq[SdtmVariable], isRefData: Boolean)
     val plans = exportable.map { code =>
       val domain = domainMetaFor(code).get
       // cached PRE-SORTED by the export order: both sinks (XPT `typed`,
@@ -326,164 +337,125 @@ class StudySession(val spark: SparkSession, val studyId: String,
       DomainPlan(code, domain, frame, presentVars, isRefData)
     }
 
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(plans.size * 2, 8)))
-    val (defineByCode, codesByCode) =
-      try {
-        def submit[A](f: => A): () => A = {
-          val fut = pool.submit(new java.util.concurrent.Callable[A] { def call(): A = f })
-          // surface the task's own exception type (e.g. XPT overflow errors
-          // with variable context), not the pool's ExecutionException wrapper
-          () => try fut.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-
-        // task A per domain: the shared stats aggregate, then XPT (which
-        // needs the observed char lengths) and the DefineDataset row
-        val statsXpt = plans.map { p =>
-          p.code -> submit {
-            val varNames = p.presentVars.map(_.name)
-            // ONE stats aggregate per domain feeds both writers: the XPT
-            // observed lengths and the Define-XML maxLength/has_data come
-            // from the same numbers, so the two artifacts can never
-            // disagree (and export runs one scan fewer per domain)
-            val stats = XmlSinks.varStats(p.frame, varNames)
-            val charLengths = p.presentVars.filter(_.dataType != VariableType.Num)
-              .flatMap(v => stats.get(v.name).map(s => v.name -> math.max(s.maxLength, 1)))
-              .toMap
-            // XPT (numeric SDTM vars ride as doubles; file order = source
-            // order). try_cast, not cast: normalization emits UNMAPPED
-            // variables as empty strings (the reference's total-function
-            // behavior), and under ANSI a plain cast of "" aborts the
-            // export — empty/unparseable numeric cells are missing values,
-            // exactly what XptWriter writes for a null (its own string
-            // fallback uses Numerics.parse the same way)
-            val typed = p.frame.orderBy(col(CsvIngest.RowIdCol)).select(p.presentVars.map { v =>
-              if (v.dataType == VariableType.Num) col(v.name).try_cast("double").as(v.name)
-              else col(v.name)
-            }: _*)
-            // same label fallback as the DefineDataset below — XPT and
-            // Define-XML must agree on the dataset label
-            XptWriter.writeDataFrame(typed, s"$outDir/${p.code.toLowerCase}.xpt",
-              p.code, p.domain.label.getOrElse(p.code),
-              labels = p.presentVars.map(v => v.name -> v.label.getOrElse(v.name)).toMap,
-              declaredLengths = charLengths)
-            val codes = Seq.newBuilder[String]
-            val define = XmlSinks.DefineDataset(
-              name = p.code, domain = baseDomainCode(p.code),
-              label = p.domain.label.getOrElse(p.code),
-              structure = p.domain.structure.getOrElse(""),
-              klass = p.domain.className.getOrElse(""),
-              isReferenceData = p.isRefData,
-              variables = p.domain.variablesByRole
-                .filter(v => p.frame.columns.contains(v.name))
-                .map { v =>
-                  // only reference codelists the CT catalog can actually
-                  // define — a CodeListRef without a matching CodeList
-                  // element is a broken OID that fails define.xml validation
-                  val resolved = v.firstCodelistCode
-                    .filter(c => ctRegistry.get(c).isDefined)
-                  resolved.foreach(codes += _)
-                  XmlVariable(v.name, v.label.getOrElse(""),
-                    isNumeric = v.dataType == VariableType.Num,
-                    required = v.isRequired, identifier = v.isIdentifier,
-                    expected = v.isExpected,
-                    codelistOid = resolved.map(c => s"CL.$c"))
-                },
-              stats = stats)
-            (define, codes.result())
-          }
-        }
-        // task B per domain: Dataset-XML (independent of stats)
-        val xmls = plans.map { p =>
-          submit {
-            XmlSinks.writeDatasetXmlFile(p.frame, s"$outDir/${p.code.toLowerCase}.xml",
-              p.code, studyId, igVersion, p.presentVars.map(_.name),
-              orderCol = Some(CsvIngest.RowIdCol), isReferenceData = p.isRefData)
-          }
-        }
-        val a = statsXpt.map { case (code, f) => code -> f() }.toMap
-        xmls.foreach(_())
-        (a.map { case (c, (d, _)) => c -> d }, a.map { case (c, (_, cs)) => c -> cs })
-      } finally {
-        // on failure, sibling tasks must stop BEFORE this method returns —
-        // a zombie sink still writing part files into outDir would race a
-        // caller's retry into the same directory. shutdownNow interrupts
-        // the tasks' Spark-job waits; the bounded drain is belt-and-braces
-        // (on the success path both are no-ops: every task already ran)
-        pool.shutdownNow()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        plans.foreach(_.frame.unpersist())
-      }
-
-    val defineDatasets = Seq.newBuilder[XmlSinks.DefineDataset]
-    val usedCodelists = scala.collection.mutable.LinkedHashSet[String]()
-    exportable.foreach { code =>
-      written += s"$outDir/${code.toLowerCase}.xpt"
-      written += s"$outDir/${code.toLowerCase}.xml"
-      defineDatasets += defineByCode(code)
-      codesByCode(code).foreach(usedCodelists += _)
+    // SUPP-- plans: the parent's plan, raw source and configs, and the
+    // SUPPQUAL template clone that names, labels and describes the dataset
+    // (the SDTM-IG template is embedded, so every standard resolves one)
+    lazy val suppTemplate = Standards.domain(standard, "SUPPQUAL")
+      .orElse(Standards.domain("SUPPQUAL")).get
+    val supps = suppConfigs.toSeq.sortBy(_._1).flatMap { case (code, configs) =>
+      plans.find(_.code == code).map(p => (p, domains(code).source, configs,
+        suppTemplate.asSuppDomain(code, p.domain.label)))
     }
 
-    // SUPP-- datasets: source extras joined to the normalized USUBJID/SEQ on
-    // _row_id, unpivoted via stack (G1), written as SUPP{code}.xpt
-    suppConfigs.toSeq.sortBy(_._1).foreach { case (code, configs) =>
-      (domainState(code), preview(code)) match {
-        case (Some(ds), Some(normalized)) =>
-          val idCols = Seq("USUBJID", s"${code}SEQ").filter(normalized.columns.contains)
-          // select ONLY the configured supp columns from the raw side: a
-          // source that itself carries USUBJID/--SEQ columns must not
-          // collide with the normalized ids on the join output
-          val suppSrcCols = (configs.map(_._1)
-            .filter(ds.source.columns.contains)
-            .filterNot(idCols.contains) :+ CsvIngest.RowIdCol).distinct
-          val joined = ds.source.select(suppSrcCols.map(col): _*).join(
-            normalized.select((idCols :+ CsvIngest.RowIdCol).map(col): _*),
-            Seq(CsvIngest.RowIdCol))
-          Reshape.buildSupp(code, studyId, joined, configs).foreach { supp =>
-            val suppName = Reshape.suppDomainName(code)
-            val suppLabel = Reshape.suppDomainLabel(code,
-              domainMetaFor(code).flatMap(_.label))
-            val path = s"$outDir/${suppName.toLowerCase}.xpt"
-            val orderedSupp = supp.orderBy("QNAM", "USUBJID", "IDVARVAL")
-            // one stats aggregate feeds both the XPT lengths and Define-XML,
-            // as on the per-domain path
-            val stats = XmlSinks.varStats(supp, supp.columns.toSeq)
-            XptWriter.writeDataFrame(orderedSupp, path, suppName, suppLabel,
-              declaredLengths = stats.map { case (v, st) => v -> math.max(st.maxLength, 1) })
-            written += path
-            // the define.xml must describe every dataset in the package —
-            // SUPP-- gets an ItemGroupDef from the SUPPQUAL template
-            // (SdtmDomain.asSuppDomain), variables limited to the frame
-            Standards.domain(standard, "SUPPQUAL")
-              .orElse(Standards.domain("SUPPQUAL")).foreach { tmpl =>
-              val suppDomain = tmpl.asSuppDomain(code, domainMetaFor(code).flatMap(_.label))
-              val presentSupp = suppDomain.variablesByRole
-                .filter(v => supp.columns.contains(v.name))
-              defineDatasets += XmlSinks.DefineDataset(
-                name = suppName, domain = baseDomainCode(code),
-                label = suppLabel,
-                structure = suppDomain.structure.getOrElse(""),
-                klass = suppDomain.className.getOrElse("Relationship"),
-                variables = presentSupp.map { v =>
-                  XmlVariable(v.name, v.label.getOrElse(""),
-                    isNumeric = v.dataType == VariableType.Num,
-                    required = v.isRequired, identifier = v.isIdentifier,
-                    expected = v.isExpected, codelistOid = None)
-                },
-                stats = stats)
-            }
-          }
-        case _ =>
+    // one task's share of the package: the file it wrote, its Define-XML
+    // row, and the codelists that row references
+    case class Part(path: Option[String], define: Option[XmlSinks.DefineDataset],
+        codelists: Seq[String] = Nil)
+
+    val domainTasks = plans.flatMap { p =>
+      val fileStem = s"$outDir/${p.code.toLowerCase(Locale.ROOT)}"
+      Seq(
+        // the shared stats aggregate, then XPT (which needs the observed
+        // char lengths) and the DefineDataset row
+        () => {
+          val varNames = p.presentVars.map(_.name)
+          // ONE stats aggregate per domain feeds both writers: the XPT
+          // observed lengths and the Define-XML maxLength/has_data come
+          // from the same numbers, so the two artifacts can never
+          // disagree (and export runs one scan fewer per domain)
+          val stats = XmlSinks.varStats(p.frame, varNames)
+          val charLengths = p.presentVars.filter(_.dataType != VariableType.Num)
+            .flatMap(v => stats.get(v.name).map(s => v.name -> math.max(s.maxLength, 1)))
+            .toMap
+          // XPT (numeric SDTM vars ride as doubles; file order = source
+          // order). try_cast, not cast: normalization emits UNMAPPED
+          // variables as empty strings (the reference's total-function
+          // behavior), and under ANSI a plain cast of "" aborts the
+          // export — empty/unparseable numeric cells are missing values,
+          // exactly what XptWriter writes for a null (its own string
+          // fallback uses Numerics.parse the same way)
+          val typed = p.frame.orderBy(col(CsvIngest.RowIdCol)).select(p.presentVars.map { v =>
+            if (v.dataType == VariableType.Num) col(v.name).try_cast("double").as(v.name)
+            else col(v.name)
+          }: _*)
+          // same label fallback as the DefineDataset below — XPT and
+          // Define-XML must agree on the dataset label
+          XptWriter.writeDataFrame(typed, s"$fileStem.xpt",
+            p.code, p.domain.label.getOrElse(p.code),
+            labels = p.presentVars.map(v => v.name -> v.label.getOrElse(v.name)).toMap,
+            declaredLengths = charLengths)
+          val codes = Seq.newBuilder[String]
+          val define = XmlSinks.DefineDataset(
+            name = p.code, domain = baseDomainCode(p.code),
+            label = p.domain.label.getOrElse(p.code),
+            structure = p.domain.structure.getOrElse(""),
+            klass = p.domain.className.getOrElse(""),
+            isReferenceData = p.isRefData,
+            variables = p.domain.variablesByRole
+              .filter(v => p.frame.columns.contains(v.name))
+              .map { v =>
+                // only reference codelists the CT catalog can actually
+                // define — a CodeListRef without a matching CodeList
+                // element is a broken OID that fails define.xml validation
+                val resolved = v.firstCodelistCode.filter(c => ct.get(c).isDefined)
+                resolved.foreach(codes += _)
+                xmlVariable(v, resolved.map(c => s"CL.$c"))
+              },
+            stats = stats)
+          Part(Some(s"$fileStem.xpt"), Some(define), codes.result())
+        },
+        // Dataset-XML (independent of stats)
+        () => {
+          XmlSinks.writeDatasetXmlFile(p.frame, s"$fileStem.xml",
+            p.code, studyId, igVersion, p.presentVars.map(_.name),
+            orderCol = Some(CsvIngest.RowIdCol), isReferenceData = p.isRefData)
+          Part(Some(s"$fileStem.xml"), None)
+        })
+    }
+    // SUPP-- datasets: source extras joined on _row_id to the USUBJID/SEQ
+    // of the parent's cached normalized frame, unpivoted via stack (G1)
+    val suppTasks = supps.map { case (p, source, configs, suppDomain) => () =>
+      val idCols = Seq("USUBJID", s"${p.code}SEQ").filter(p.frame.columns.contains)
+      // select ONLY the configured supp columns from the raw side: a
+      // source that itself carries USUBJID/--SEQ columns must not
+      // collide with the normalized ids on the join output
+      val suppSrcCols = (configs.map(_._1)
+        .filter(source.columns.contains)
+        .filterNot(idCols.contains) :+ CsvIngest.RowIdCol).distinct
+      val joined = source.select(suppSrcCols.map(col): _*).join(
+        p.frame.select((idCols :+ CsvIngest.RowIdCol).map(col): _*),
+        Seq(CsvIngest.RowIdCol))
+      Reshape.buildSupp(p.code, studyId, joined, configs).fold(Part(None, None)) { supp =>
+        val path = s"$outDir/${suppDomain.name.toLowerCase(Locale.ROOT)}.xpt"
+        val label = suppDomain.label.getOrElse(suppDomain.name)
+        // one stats aggregate feeds both the XPT lengths and Define-XML,
+        // as on the per-domain path
+        val stats = XmlSinks.varStats(supp, supp.columns.toSeq)
+        XptWriter.writeDataFrame(supp.orderBy("QNAM", "USUBJID", "IDVARVAL"), path,
+          suppDomain.name, label,
+          declaredLengths = stats.map { case (v, st) => v -> math.max(st.maxLength, 1) })
+        // the define.xml must describe every dataset in the package —
+        // variables limited to the frame, no CodeListRefs
+        Part(Some(path), Some(XmlSinks.DefineDataset(
+          name = suppDomain.name, domain = baseDomainCode(p.code),
+          label = label,
+          structure = suppDomain.structure.getOrElse(""),
+          klass = suppDomain.className.getOrElse("Relationship"),
+          variables = suppDomain.variablesByRole
+            .filter(v => supp.columns.contains(v.name)).map(xmlVariable(_, None)),
+          stats = stats)))
       }
     }
+    val parts =
+      try StudySession.inParallel(domainTasks ++ suppTasks)(_ => ())
+      finally plans.foreach(_.frame.unpersist())
 
     // each codelist links to the CT publication it resolved from; the
     // distinct publications become the def:Standards section
     // (define_xml.rs:377-400: OID = STD.CT.{publishingSet}.{version})
     val ctStandards = scala.collection.mutable.LinkedHashMap[String, CtStandard]()
-    val codelists = usedCodelists.toSeq.flatMap(code =>
-      ctRegistry.getWithCatalog(code).map { case (cl, cat) =>
+    val codelists = parts.flatMap(_.codelists).distinct.flatMap(code =>
+      ct.getWithCatalog(code).map { case (cl, cat) =>
         val stdOid = for (set <- cat.publishingSet; ver <- cat.version) yield {
           val oid = s"STD.CT.${XmlSinks.sanitizeOid(set)}.${XmlSinks.sanitizeOid(ver)}"
           ctStandards.getOrElseUpdate(oid,
@@ -495,10 +467,17 @@ class StudySession(val spark: SparkSession, val studyId: String,
       })
     val definePath = s"$outDir/define.xml"
     XmlSinks.writeDefineXmlFile(definePath, studyId, igVersion,
-      defineDatasets.result(), codelists, ctStandards.values.toSeq)
-    written += definePath
-    written.result()
+      parts.flatMap(_.define), codelists, ctStandards.values.toSeq)
+    parts.flatMap(_.path) :+ definePath
   }
+
+  /** One variable's Define-XML ItemDef: the same for domain and SUPP--
+    * datasets, save the codelist reference SUPP-- never carries. */
+  private def xmlVariable(v: SdtmVariable, codelistOid: Option[String]): XmlVariable =
+    XmlVariable(v.name, v.label.getOrElse(""),
+      isNumeric = v.dataType == VariableType.Num,
+      required = v.isRequired, identifier = v.isIdentifier,
+      expected = v.isExpected, codelistOid = codelistOid)
 }
 
 object StudySession {
@@ -506,6 +485,32 @@ object StudySession {
   /** 2-letter SDTM parents whose datasets are commonly split into named
     * subsets (export/types.rs:60-66). */
   val SplitBases: Set[String] = Set("LB", "FA", "QS", "VS", "EG", "PC", "PP")
+
+  /** The session's one fan-out: run `tasks` on at most 8 threads and return
+    * their results in input order. The first task to fail stops the rest
+    * (`shutdownNow` interrupts their Spark-job waits, then a bounded drain)
+    * BEFORE this returns, so no sibling keeps writing into a directory the
+    * caller may retry into; every task that did complete has its result
+    * passed to `abandon`, and the failure is rethrown as the task's own
+    * exception (e.g. an XPT overflow error with its variable context), not
+    * the pool's `ExecutionException` wrapper. */
+  private def inParallel[A](tasks: Seq[() => A])(abandon: A => Unit): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(tasks.size, 8)))
+    val completion = new ExecutorCompletionService[A](pool)
+    val futures = tasks.map(t => completion.submit(() => t()))
+    try {
+      // completion order: a late task's failure surfaces without waiting
+      // for the slow tasks queued before it
+      futures.foreach(_ => completion.take().get())
+      futures.map(_.get())
+    } catch {
+      case e: Throwable =>
+        pool.shutdownNow()
+        pool.awaitTermination(60, TimeUnit.SECONDS)
+        futures.foreach(f => if (f.isDone) scala.util.Try(abandon(f.get())))
+        throw (e match { case x: ExecutionException => x.getCause; case _ => e })
+    } finally pool.shutdown()
+  }
 
   /** E1 — create a session from a folder + domain→file assignments
     * (`study.rs:27-153`). `standard` selects the implementation guide the
@@ -516,39 +521,15 @@ object StudySession {
       standard: String = "sdtm",
       ctVersion: String = graft.standards.Standards.DefaultCtVersion): StudySession = {
     val s = new StudySession(spark, studyId, standard, ctVersion)
-    val sorted = assignments.toSeq.sortBy(_._1)
     // the per-domain builds (CSV scan, cache, hints aggregate, scoring)
     // are independent Spark jobs over different files — run them
     // concurrently, then publish in sorted-code order so domainCodes and
-    // snapshot serialization are identical to a serial loop's
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(sorted.size, 8)))
-    val built = sorted.map { case (code, file) =>
-      pool.submit(new java.util.concurrent.Callable[DomainState] {
-        def call(): DomainState =
-          s.buildDomainState(code, Paths.get(folder, file).toString, headerRows)
-      })
-    }
-    try {
-      built.foreach { f =>
-        val ds = try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        s.publishDomain(ds)
-      }
-      pool.shutdown()
-    } catch {
-      case e: Throwable =>
-        // the session is being abandoned: stop in-flight builds, then
-        // unpersist every frame any build cached (published or not —
-        // the caller never receives `s`, so nothing would ever free them)
-        pool.shutdownNow()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        built.foreach { f =>
-          if (f.isDone && !f.isCancelled)
-            scala.util.Try(f.get().source.unpersist())
-        }
-        throw e
-    }
+    // snapshot serialization are identical to a serial loop's. A failed
+    // create abandons the session: the caller never receives `s`, so every
+    // frame a finished build cached is unpersisted here
+    inParallel(assignments.toSeq.sortBy(_._1).map { case (code, file) =>
+      () => s.buildDomainState(code, Paths.get(folder, file).toString, headerRows)
+    })(_.source.unpersist()).foreach(s.publishDomain)
     s
   }
 }

@@ -67,7 +67,7 @@ object XptWriter {
     writeShort(out, 2, 0)                         // nhfun
     writeShort(out, 4, c.length)                  // nlng
     writeShort(out, 6, varNum)                    // nvar0
-    writeAscii(out, 8, c.name.toUpperCase, 8)     // nname
+    writeAscii(out, 8, c.name.toUpperCase(Locale.ROOT), 8) // nname
     writeAscii(out, 16, c.label, 40)              // nlabel
     writeAscii(out, 56, "", 8)                    // nform
     writeShort(out, 64, 0); writeShort(out, 66, 0); writeShort(out, 68, 0)
@@ -106,7 +106,7 @@ object XptWriter {
     val mem1 = new Array[Byte](80)
     java.util.Arrays.fill(mem1, ' '.toByte)
     writeAscii(mem1, 0, "SAS", 8)
-    writeAscii(mem1, 8, dsName.toUpperCase, 8)
+    writeAscii(mem1, 8, dsName.toUpperCase(Locale.ROOT), 8)
     writeAscii(mem1, 16, "SASDATA", 8)
     writeAscii(mem1, 24, SasVersion, 8); writeAscii(mem1, 32, SasOs, 8)
     writeAscii(mem1, 64, date, 16)

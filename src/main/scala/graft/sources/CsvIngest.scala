@@ -3,6 +3,7 @@ package graft.sources
 import java.io.{BufferedReader, FileInputStream, InputStreamReader}
 import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.{Files, Path, Paths}
+import java.util.Locale
 
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -264,7 +265,7 @@ object CsvIngest {
       import scala.jdk.CollectionConverters._
       s.iterator().asScala
         .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.toLowerCase.endsWith(".csv"))
+          p.getFileName.toString.toLowerCase(Locale.ROOT).endsWith(".csv"))
         .toSeq.sortBy(_.getFileName.toString)
     } finally s.close()
   }

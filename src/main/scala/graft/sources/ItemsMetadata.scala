@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Graft.{isBlank, txt}
 import graft.operators.Validate.NumericRegex
+import graft.standards.Codelist
 
 /** Statistical profile of one column (ColumnScores —
   * `crates/tss-ingest/src/metadata/detection.rs:40-57`). */
@@ -150,13 +151,13 @@ object ItemsMetadata {
    * ingestion gap.
    */
   def loadCodelists(df: DataFrame): Map[String, Map[String, String]] = {
-    val byNorm = df.columns.map(c => c.replaceAll("\\s", "").toUpperCase -> c).toMap
+    val byNorm = df.columns.map(c => Codelist.fold(c.replaceAll("\\s", "")) -> c).toMap
     (byNorm.get("FORMATNAME"), byNorm.get("CODEVALUE"), byNorm.get("CODETEXT")) match {
       case (Some(f), Some(v), Some(t)) =>
         df.select(txt(col(f)).as("f"), txt(col(v)).as("v"), txt(col(t)).as("t"))
           .where(col("f") =!= "" && col("v") =!= "")
           .collect()
-          .groupBy(_.getString(0).toUpperCase)
+          .groupBy(r => Codelist.fold(r.getString(0)))
           .map { case (fmt, rows) =>
             fmt -> rows.map(r => r.getString(1) -> r.getString(2)).toMap
           }

@@ -59,7 +59,7 @@ case class SdtmDomain(
   /** SUPP-- template clone (`sdtm/domain.rs:220`). */
   def asSuppDomain(parentCode: String, parentLabel: Option[String]): SdtmDomain =
     copy(
-      name = s"SUPP${parentCode.toUpperCase}",
+      name = s"SUPP${Codelist.fold(parentCode)}",
       label = Some(s"Supplemental Qualifiers for ${parentLabel.getOrElse(parentCode)}"))
 }
 
@@ -95,7 +95,7 @@ object Codelist {
   /** The one CT case fold: [[Codelist.index]] keys, [[Codelist.resolve]]
     * and the CT expressions (`graft.expressions.CtIndex`) all go through it.
     * `Locale.ROOT`, never the default locale — under a Turkish default
-    * `"mild".toUpperCase` is `MİLD` and misses `MILD`. */
+    * locale `mild` upper-cases to `MİLD` and misses `MILD`. */
   def fold(s: String): String = s.toUpperCase(Locale.ROOT)
 }
 
@@ -126,7 +126,7 @@ case class TerminologyRegistry(id: String, catalogs: Seq[TerminologyCatalog]) {
     * (`TerminologyRegistry::resolve` returns the catalog too —
     * ct/types.rs:296-330, consumed at define_xml.rs:377-400). */
   def getWithCatalog(code: String): Option[(Codelist, TerminologyCatalog)] = {
-    val key = code.trim.toUpperCase
+    val key = Codelist.fold(code.trim)
     catalogs.iterator
       .flatMap(c => c.codelists.get(key).map(_ -> c)).nextOption()
   }
@@ -217,8 +217,8 @@ object Standards {
     val structures = parseCsv(readResource("/standards/adam/DataStructures.csv"))
       .filter(_("Data Structure Name").trim.nonEmpty)
     val longToShort = structures.flatMap { s =>
-      val short = s("Data Structure Name").trim.toUpperCase
-      val long = s("Data Structure Description").trim.toUpperCase
+      val short = Codelist.fold(s("Data Structure Name").trim)
+      val long = Codelist.fold(s("Data Structure Description").trim)
       val entries = Seq.newBuilder[(String, String)]
       if (long.nonEmpty) {
         entries += long -> short
@@ -229,11 +229,11 @@ object Standards {
     }.toMap
     val variables = parseCsv(readResource("/standards/adam/Variables.csv"))
     val varsByStructure = variables.groupBy { v =>
-      val key = v("Data Structure Name").trim.toUpperCase
+      val key = Codelist.fold(v("Data Structure Name").trim)
       longToShort.getOrElse(key, key)
     }
     structures.map { s =>
-      val short = s("Data Structure Name").trim.toUpperCase
+      val short = Codelist.fold(s("Data Structure Name").trim)
       // order = 1-based position WITHIN the structure (matching how the
       // SDTM/SEND CSVs number per dataset), not the global file row
       val vars = varsByStructure.getOrElse(short, Nil).zipWithIndex.map { case (v, i) =>
@@ -259,7 +259,7 @@ object Standards {
   }
 
   /** Standard selector: "sdtm" | "send" | "adam". */
-  def domains(standard: String): Seq[SdtmDomain] = standard.toLowerCase match {
+  def domains(standard: String): Seq[SdtmDomain] = standard.toLowerCase(Locale.ROOT) match {
     case "sdtm" => sdtmIg
     case "send" => sendIg
     case "adam" => adamIg
@@ -308,16 +308,16 @@ object Standards {
   private def parseCtCodelists(lines: Seq[String]): Map[String, Codelist] = {
     val rows = parseCsv(lines)
     val (clRows, termRows) = rows.partition(_("Codelist Code").trim.isEmpty)
-    val termsByParent = termRows.groupBy(_("Codelist Code").trim.toUpperCase)
+    val termsByParent = termRows.groupBy(t => Codelist.fold(t("Codelist Code").trim))
     clRows.map { cl =>
       val code = cl("Code").trim
-      val terms = termsByParent.getOrElse(code.toUpperCase, Nil).map { t =>
+      val terms = termsByParent.getOrElse(Codelist.fold(code), Nil).map { t =>
         CtTerm(
           code = t("Code").trim,
           submissionValue = t("CDISC Submission Value").trim,
           synonyms = t("CDISC Synonym(s)").split(";").map(_.trim).filter(_.nonEmpty).toSeq)
       }
-      code.toUpperCase -> Codelist(
+      Codelist.fold(code) -> Codelist(
         code = code,
         name = cl("Codelist Name").trim,
         extensible = cl("Codelist Extensible (Yes/No)").trim.equalsIgnoreCase("Yes"),
@@ -375,15 +375,15 @@ object Standards {
     * `ct/types.rs:379-398` order; version selection `registry.rs:20`
     * `ct_version` + `ct/loader.rs:88-103`). */
   def ct(standard: String, version: String): TerminologyRegistry = ctCache.synchronized {
-    ctCache.getOrElseUpdate((standard.toLowerCase, requireCtVersion(version)), {
-      val primary = standard.toLowerCase match {
+    ctCache.getOrElseUpdate((standard.toLowerCase(Locale.ROOT), requireCtVersion(version)), {
+      val primary = standard.toLowerCase(Locale.ROOT) match {
         case "sdtm" => "SDTM"
         case "send" => "SEND"
         case "adam" => "ADAM"
-        case other => other.toUpperCase
+        case other => Codelist.fold(other)
       }
       val ordered = ctCatalogs(version).sortBy { c =>
-        val set = c.publishingSet.getOrElse("").toUpperCase
+        val set = Codelist.fold(c.publishingSet.getOrElse(""))
         val rank =
           if (set == primary) 0
           else set match {
@@ -391,9 +391,9 @@ object Standards {
             case "SEND" => 2
             case _ => 3
           }
-        (rank, c.label.toUpperCase)
+        (rank, Codelist.fold(c.label))
       }
-      TerminologyRegistry(s"${standard.toLowerCase}@$version", ordered)
+      TerminologyRegistry(s"${standard.toLowerCase(Locale.ROOT)}@$version", ordered)
     })
   }
   private val ctCache =

@@ -99,4 +99,38 @@ class DocHygieneSpec extends AnyFunSuite {
     assert(found.map(_._2).toSet == Set("spark.graft.csv.transcodeDir"),
       "conf keys under src/main: " + found.mkString(", "))
   }
+
+  test("one thread pool in src/main: StudySession's fan-out helper") {
+    // split needle, as above: a second pool restates the concurrency policy
+    // (bound, unwrap, cancel-and-drain, abandon) — call the helper instead
+    val needle = "newFixed" + "ThreadPool"
+    val sites = scalaSources("src/main/scala").flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      Seq.fill(text.sliding(needle.length).count(_ == needle))(p.getFileName.toString)
+    }
+    assert(sites == Seq("StudySession.scala"), "thread pools built in: " + sites.mkString(", "))
+  }
+
+  test("case folds in the clinical path name a Locale") {
+    // under a Turkish default locale `ie` upper-cases to `İE` and `USUBJID`
+    // lower-cases to `usubjıd`: fold with Codelist.fold or a named Locale
+    val bare = java.util.regex.Pattern.compile(
+      """\.to(Upper|Lower)Case\b(?!\s*\(\s*(java\.util\.)?Locale\.)""")
+    val operators = Set("Mapping", "Reshape", "RuleInference", "Normalize",
+      "Validate", "DomainValidation").map(_ + ".scala")
+    val files = Seq("session", "sources", "standards", "sinks")
+      .flatMap(d => scalaSources(s"src/main/scala/graft/$d")) ++
+      scalaSources("src/main/scala/graft/operators")
+        .filter(p => operators.contains(p.getFileName.toString))
+    assert(files.count(p => operators.contains(p.getFileName.toString)) == operators.size)
+    val offenders = files.flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      val m = bare.matcher(text)
+      Iterator.continually(m.find()).takeWhile(identity).map { _ =>
+        s"$p:${text.substring(0, m.start()).count(_ == '\n') + 1}"
+      }.toVector
+    }
+    assert(offenders.isEmpty,
+      "default-locale case folds:\n  " + offenders.mkString("\n  "))
+  }
 }

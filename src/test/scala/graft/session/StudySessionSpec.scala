@@ -369,6 +369,85 @@ class StudySessionSpec extends SparkSpec {
       if (worker.isAlive) worker.interrupt()
     }
   }
+
+  test("E3: SUPP-- datasets follow the domains in written paths and define.xml") {
+    val d = Paths.get("target", "tmp", "study_supp2")
+    Files.createDirectories(d)
+    Files.write(d.resolve("dm.csv"),
+      ("SUBJID,RFSTDTC,SEX,SEXLBL\n101,2024-01-10,M,Male\n" +
+        "102,2024-01-12,F,Female\n103,2024-01-15,M,Male\n").getBytes)
+    // one blank AENOTE: SUPPAE carries a row per non-blank value only
+    Files.write(d.resolve("ae.csv"),
+      ("SUBJID,AETERM,AESEV,AESTDTC,AENOTE\n" +
+        "101,Headache,MILD,2024-01-12,resolved\n" +
+        "101,Nausea,MODERATE,2024-01-20,\n" +
+        "102,Fatigue,SEVERE,2024-01-14,ongoing\n" +
+        "103,Rash,MILD,2024-01-16,treated\n").getBytes)
+    val s = StudySession.create(spark, "SUPP2", d.toString,
+      Map("DM" -> "dm.csv", "AE" -> "ae.csv"))
+    s.configureSupp("DM", Seq(
+      "SEXLBL" -> graft.operators.SuppColumnConfig("QSEXLBL", "Sex Label", "CRF")))
+    s.configureSupp("AE", Seq(
+      "AENOTE" -> graft.operators.SuppColumnConfig("AENOTE", "AE Note", "CRF")))
+    val out = "target/tmp/study_supp2_out"
+    val written = s.exportAll(out)
+    assert(written == Seq("ae.xpt", "ae.xml", "dm.xpt", "dm.xml",
+      "suppae.xpt", "suppdm.xpt", "define.xml").map(f => s"$out/$f"))
+    val suppae = XptReader.read(s"$out/suppae.xpt")
+    assert(suppae.name == "SUPPAE")
+    assert(suppae.rows.size == 3)
+    val idvarIdx = suppae.columns.indexWhere(_.name == "IDVAR")
+    assert(suppae.rows.map(_(idvarIdx)).toSet == Set("AESEQ"))
+    assert(XptReader.read(s"$out/suppdm.xpt").rows.size == 3)
+    val define = new String(Files.readAllBytes(Paths.get(s"$out/define.xml")), "UTF-8")
+    val groups = """<ItemGroupDef OID="IG\.([A-Z]+)"""".r
+      .findAllMatchIn(define).map(_.group(1)).toSeq
+    assert(groups == Seq("AE", "DM", "SUPPAE", "SUPPDM"))
+    assert(define.contains("Supplemental Qualifiers for Adverse Events"))
+  }
+
+  test("create: a failed build rethrows its own exception and leaves nothing cached") {
+    spark.catalog.clearCache()
+    val e = intercept[Exception](StudySession.create(spark, "FAIL1", studyDir,
+      Map("AE" -> "ae.csv", "DM" -> "dm.csv", "ZZ" -> "no_such.csv")))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e.toString)
+    assert(e.getMessage.contains("no_such.csv"), e.toString)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "an abandoned create must unpersist every frame its builds cached")
+  }
+
+  test("exportAll: a failed sink rethrows its own exception and frees the export frames") {
+    spark.catalog.clearCache()
+    val s = StudySession.create(spark, "FAIL2", studyDir,
+      Map("AE" -> "ae.csv", "DM" -> "dm.csv"))
+    val out = Paths.get("target", "tmp", "study_fail_out")
+    // dm.xpt is a directory: the XPT sink cannot open it for writing
+    Files.createDirectories(out.resolve("dm.xpt"))
+    intercept[java.io.FileNotFoundException](s.exportAll(out.toString))
+    // the session's own source frames stay cached; nothing else may
+    s.domainCodes.foreach(c => s.domainState(c).get.source.unpersist())
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed export must unpersist the frames it cached")
+  }
+
+  test("domain codes fold under Locale.ROOT, not the default locale") {
+    val d = Paths.get("target", "tmp", "study_locale")
+    Files.createDirectories(d)
+    Files.write(d.resolve("ie.csv"),
+      ("SUBJID,IETESTCD,IETEST,IECAT,IEORRES,IEDTC\n" +
+        "101,IN01,Age 18 or over,INCLUSION,N,2024-01-09\n").getBytes)
+    val saved = java.util.Locale.getDefault
+    try {
+      // under tr-TR a default-locale fold turns ie into İE (dotted capital I)
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      val s = StudySession.create(spark, "LOC1", d.toString, Map("ie" -> "ie.csv"))
+      assert(s.baseDomainCode("ie") == "IE")
+      assert(s.domainCodes == Seq("IE"))
+      val pv = s.preview("ie")
+      assert(pv.isDefined, "the IE domain must resolve its IG metadata")
+      assert(pv.get.select("DOMAIN").collect().map(_.getString(0)).toSeq == Seq("IE"))
+    } finally java.util.Locale.setDefault(saved)
+  }
 }
 
 /** Standards loader pins (S8/S9). */
