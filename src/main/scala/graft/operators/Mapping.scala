@@ -2,10 +2,10 @@ package graft.operators
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Graft.{isBlank, txt}
+import graft.Graft.txt
 import graft.functions.JaroWinkler
 import graft.operators.Validate.NumericRegex
 import graft.standards.Codelist
@@ -18,6 +18,12 @@ case class ColumnHint(
     uniqueRatio: Double,
     nullRatio: Double,
     label: Option[String] = None)
+
+/** Text statistics of one column over the normal form `txt(value)`: rows,
+  * blank rows, distinct non-blank values, numeric non-blank rows, and the
+  * sum and maximum of the non-blank lengths. */
+private[graft] case class ColumnProfile(total: Long, blanks: Long, distinct: Long,
+    numeric: Long, lengthSum: Long, maxLength: Int)
 
 /** Target-variable metadata for the scorer (subset of SdtmVariable —
   * `crates/tss-standards/src/sdtm_ig.rs`). `isNumeric` is the IG's
@@ -33,48 +39,63 @@ case class Suggestion(sourceColumn: String, targetVariable: String, score: Doubl
 /**
  * Schema-matching engine F1-F4 (SURVEY §2.4).
  *
- * Hint building is the only part that touches data — ONE fused aggregation
- * pass per table (every per-column statistic is a `Column` aggregate, so the
- * whole hints build is a single scan regardless of column count; at 100 TB
- * that is one map-side-combined job, no shuffle beyond the final reduce).
- * Scoring and assignment run on the driver over column *names* (≤ hundreds
- * of strings) — semantics studied from
+ * Hint building is the only part that touches data: one column profile
+ * per table ([[Mapping.columnProfile]]), whose plan grows linearly with the
+ * column count. Scoring and assignment run on the driver over column
+ * *names* (≤ hundreds of strings) — semantics studied from
  * `crates/tss-submit/src/map/score.rs:120-293`.
  */
 object Mapping {
 
-  // ---- F1: column hints (one fused scan) -----------------------------------
+  // ---- F1: column hints (one column profile) -------------------------------
 
-  /** Aggregate expressions for one column: [blanks, distinct-non-blank,
-    * numeric-count]. Distinct uses exact countDistinct to match the
-    * reference's BTreeSet semantics (swap for approx_count_distinct at
-    * extreme cardinality). */
-  private def hintExprs(c: String): Seq[Column] = {
-    val v = col(c)
-    Seq(
-      sum(when(isBlank(v), 1L).otherwise(0L)).as(s"${c}__blank"),
-      countDistinct(when(!isBlank(v), txt(v))).as(s"${c}__uniq"),
-      sum(when(!isBlank(v) && txt(v).rlike(NumericRegex), 1L).otherwise(0L)).as(s"${c}__num"))
+  /** The profile of each of `cols`, in order — the one place E1 counts
+    * distinct values ([[columnHints]], `ItemsMetadata.analyzeColumns`).
+    * The cells become `(i, v)` rows — the column's index and the value's
+    * normal form `txt(value)` — counted per `(i, v)` and folded per index.
+    * Every statistic is a function of `txt(value)` and its count, so no
+    * per-column distinct aggregate is needed (Spark plans several as one
+    * `Expand` whose size grows as the square of the column count): the plan
+    * is one `explode` and two aggregates, linear in the columns, and the
+    * shuffle carries the distinct `(i, v)` pairs after the map-side
+    * combine. A zero-row frame profiles every column as all zeros. */
+  private[graft] def columnProfile(df: DataFrame, cols: Seq[String]): Seq[ColumnProfile] = {
+    if (cols.isEmpty) return Nil
+    val cells = array(cols.zipWithIndex.map { case (c, i) =>
+      struct(lit(i).as("i"), txt(col(c)).as("v"))
+    }: _*)
+    val v = col("v")
+    val n = col("n")
+    val filled = v =!= ""
+    val byIndex = df.select(explode(cells).as("cell"))
+      .select(col("cell.i").as("i"), col("cell.v").as("v"))
+      .groupBy("i", "v").agg(count(lit(1)).as("n"))
+      .groupBy("i").agg(
+        sum(n).as("total"),
+        sum(when(filled, 0L).otherwise(n)).as("blanks"),
+        count(when(filled, 1)).as("distinct"),
+        sum(when(filled && v.rlike(NumericRegex), n).otherwise(0L)).as("numeric"),
+        sum(when(filled, length(v).cast("long") * n).otherwise(0L)).as("lengthSum"),
+        max(when(filled, length(v))).as("maxLength"))
+      .collect().map { r =>
+        r.getInt(0) -> ColumnProfile(r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), if (r.isNullAt(6)) 0 else r.getInt(6))
+      }.toMap
+    cols.indices.map(byIndex.getOrElse(_, ColumnProfile(0L, 0L, 0L, 0L, 0L, 0)))
   }
 
-  /** F1 — build hints for every column in one pass (hints.rs:14-103):
+  /** F1 — build hints for every column (hints.rs:14-103):
     * null_ratio counts blank-after-trim as null; unique_ratio is distinct
     * trimmed values over non-null count; is_numeric when >90% of non-null
     * values parse as f64. */
   def columnHints(df: DataFrame, labels: Map[String, String] = Map.empty): Map[String, ColumnHint] = {
     val cols = df.columns.toSeq
-    if (cols.isEmpty) return Map.empty
-    val row = df.agg(count(lit(1)).as("__total"), cols.flatMap(hintExprs): _*).head()
-    val total = row.getAs[Long]("__total")
-    cols.map { c =>
-      val blanks = row.getAs[Long](s"${c}__blank")
-      val uniq = row.getAs[Long](s"${c}__uniq")
-      val num = row.getAs[Long](s"${c}__num")
-      val nonNull = total - blanks
+    cols.zip(columnProfile(df, cols)).map { case (c, p) =>
+      val nonNull = p.total - p.blanks
       c -> ColumnHint(
-        isNumeric = nonNull > 0 && num.toDouble / nonNull > 0.9,
-        uniqueRatio = if (nonNull > 0) uniq.toDouble / nonNull else 0.0,
-        nullRatio = if (total > 0) blanks.toDouble / total else 1.0,
+        isNumeric = nonNull > 0 && p.numeric.toDouble / nonNull > 0.9,
+        uniqueRatio = if (nonNull > 0) p.distinct.toDouble / nonNull else 0.0,
+        nullRatio = if (p.total > 0) p.blanks.toDouble / p.total else 1.0,
         label = labels.get(c))
     }.toMap
   }

@@ -1,10 +1,10 @@
 package graft.session
 
 import java.nio.file.{Files, Paths}
-import java.util.Locale
+import java.util.{Locale, UUID}
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -24,8 +24,8 @@ case class DomainState(
 /**
  * E1/E2/E3 — study lifecycle orchestration (SURVEY §3), Spark-first:
  *
- *  - E1 create: per-domain CSV scans (parallel plans), ONE hints
- *    aggregation per domain, driver-side scoring/suggestion;
+ *  - E1 create: per-domain CSV scans (parallel plans), one column
+ *    profile per domain for the hints, driver-side scoring/suggestion;
  *  - E2 preview+validate: normalization is a single unexecuted projection;
  *    validation fires one fused aggregate per domain + study-wide
  *    anti-joins whose join strategy Spark chooses;
@@ -415,7 +415,10 @@ class StudySession(val spark: SparkSession, val studyId: String,
     // SUPP-- datasets: source extras joined on _row_id to the USUBJID/SEQ
     // of the parent's cached normalized frame, unpivoted via stack (G1)
     val suppTasks = supps.map { case (p, source, configs, suppDomain) => () =>
-      val idCols = Seq("USUBJID", s"${p.code}SEQ").filter(p.frame.columns.contains)
+      // a split dataset (LBCH) keys its SUPP-- on the parent domain: RDOMAIN
+      // and the --SEQ IDVAR are LB's (SDTMIG 3.4 §4.1.7)
+      val rdomain = baseDomainCode(p.code)
+      val idCols = Seq("USUBJID", s"${rdomain}SEQ").filter(p.frame.columns.contains)
       // select ONLY the configured supp columns from the raw side: a
       // source that itself carries USUBJID/--SEQ columns must not
       // collide with the normalized ids on the join output
@@ -425,7 +428,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
       val joined = source.select(suppSrcCols.map(col): _*).join(
         p.frame.select((idCols :+ CsvIngest.RowIdCol).map(col): _*),
         Seq(CsvIngest.RowIdCol))
-      Reshape.buildSupp(p.code, studyId, joined, configs).fold(Part(None, None)) { supp =>
+      Reshape.buildSupp(rdomain, studyId, joined, configs).fold(Part(None, None)) { supp =>
         val path = s"$outDir/${suppDomain.name.toLowerCase(Locale.ROOT)}.xpt"
         val label = suppDomain.label.getOrElse(suppDomain.name)
         // one stats aggregate feeds both the XPT lengths and Define-XML,
@@ -437,7 +440,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
         // the define.xml must describe every dataset in the package —
         // variables limited to the frame, no CodeListRefs
         Part(Some(path), Some(XmlSinks.DefineDataset(
-          name = suppDomain.name, domain = baseDomainCode(p.code),
+          name = suppDomain.name, domain = rdomain,
           label = label,
           structure = suppDomain.structure.getOrElse(""),
           klass = suppDomain.className.getOrElse("Relationship"),
@@ -447,7 +450,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
       }
     }
     val parts =
-      try StudySession.inParallel(domainTasks ++ suppTasks)(_ => ())
+      try StudySession.inParallel(spark, domainTasks ++ suppTasks)(_ => ())
       finally plans.foreach(_.frame.unpersist())
 
     // each codelist links to the CT publication it resolved from; the
@@ -486,18 +489,31 @@ object StudySession {
     * subsets (export/types.rs:60-66). */
   val SplitBases: Set[String] = Set("LB", "FA", "QS", "VS", "EG", "PC", "PP")
 
+  /** Prefix of the job tag each [[inParallel]] call gives its tasks' Spark
+    * jobs. */
+  private[graft] val FanOutTagPrefix = "graft-fanout-"
+
   /** The session's one fan-out: run `tasks` on at most 8 threads and return
-    * their results in input order. The first task to fail stops the rest
-    * (`shutdownNow` interrupts their Spark-job waits, then a bounded drain)
-    * BEFORE this returns, so no sibling keeps writing into a directory the
-    * caller may retry into; every task that did complete has its result
+    * their results in input order. Every task tags its Spark jobs with the
+    * call's one job tag. The first task to fail stops the rest BEFORE this
+    * returns: the tagged jobs are cancelled, `shutdownNow` interrupts the
+    * task threads, and a bounded drain waits for them, cancelling again
+    * until they are gone and no tagged job has started for 250 ms — so no
+    * sibling, and no Spark job of one, keeps writing into a directory the
+    * caller may retry into. Every task that did complete has its result
     * passed to `abandon`, and the failure is rethrown as the task's own
     * exception (e.g. an XPT overflow error with its variable context), not
     * the pool's `ExecutionException` wrapper. */
-  private def inParallel[A](tasks: Seq[() => A])(abandon: A => Unit): Seq[A] = {
+  private def inParallel[A](spark: SparkSession, tasks: Seq[() => A])(
+      abandon: A => Unit): Seq[A] = {
+    val sc = spark.sparkContext
+    val tag = FanOutTagPrefix + UUID.randomUUID()
     val pool = Executors.newFixedThreadPool(math.max(1, math.min(tasks.size, 8)))
     val completion = new ExecutorCompletionService[A](pool)
-    val futures = tasks.map(t => completion.submit(() => t()))
+    val futures = tasks.map(t => completion.submit { () =>
+      sc.addJobTag(tag)
+      try t() finally sc.removeJobTag(tag)
+    })
     try {
       // completion order: a late task's failure surfaces without waiting
       // for the slow tasks queued before it
@@ -505,8 +521,23 @@ object StudySession {
       futures.map(_.get())
     } catch {
       case e: Throwable =>
+        // cancel before the interrupt, so each task's wait ends with its
+        // job. Then keep cancelling until the tasks are gone and no tagged
+        // job has turned up for a quiet window: that stops a job submitted
+        // after a cancel, one an interrupted thread submitted (its wait
+        // returns at once and leaves the job running), and one from a
+        // broadcast thread Spark forked for a task's query, whose body can
+        // outlive that query's own cancel
+        GraftBridge.cancelJobsWithTag(spark, tag)
         pool.shutdownNow()
-        pool.awaitTermination(60, TimeUnit.SECONDS)
+        val quiet = TimeUnit.MILLISECONDS.toNanos(250)
+        val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+        var quietSince = System.nanoTime()
+        while (System.nanoTime() - quietSince < quiet && System.nanoTime() < deadline) {
+          val cancelled = GraftBridge.cancelJobsWithTag(spark, tag)
+          if (!pool.awaitTermination(20, TimeUnit.MILLISECONDS) || cancelled > 0)
+            quietSince = System.nanoTime()
+        }
         futures.foreach(f => if (f.isDone) scala.util.Try(abandon(f.get())))
         throw (e match { case x: ExecutionException => x.getCause; case _ => e })
     } finally pool.shutdown()
@@ -527,7 +558,7 @@ object StudySession {
     // snapshot serialization are identical to a serial loop's. A failed
     // create abandons the session: the caller never receives `s`, so every
     // frame a finished build cached is unpersisted here
-    inParallel(assignments.toSeq.sortBy(_._1).map { case (code, file) =>
+    inParallel(spark, assignments.toSeq.sortBy(_._1).map { case (code, file) =>
       () => s.buildDomainState(code, Paths.get(folder, file).toString, headerRows)
     })(_.source.unpersist()).foreach(s.publishDomain)
     s

@@ -1,8 +1,10 @@
 package graft.sinks
 
-import java.io.{BufferedOutputStream, FileOutputStream, OutputStream}
+import java.io.{BufferedOutputStream, FileOutputStream, IOException, OutputStream, UncheckedIOException}
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.Comparator
+import java.util.concurrent.TimeUnit
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
@@ -92,9 +94,25 @@ private[sinks] object PartFiles {
     } finally in.close()
   }
 
-  private def deleteRecursively(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    }
+  /** Delete `dir` and its files. The tasks of a failed or cancelled job can
+    * still be committing parts (a cancel does not wait for running tasks),
+    * so a delete that races a new file retries, for at most 10 s, until the
+    * directory is gone; after that no task can write into it, since a part
+    * opens only inside an existing directory. The retry spins instead of
+    * sleeping: the caller may be an interrupted fan-out thread. */
+  private def deleteRecursively(dir: Path): Unit = {
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(10)
+    def attempt(): Boolean =
+      try {
+        if (Files.exists(dir)) {
+          val paths = Files.walk(dir)
+          try paths.sorted(Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
+          finally paths.close()
+        }
+        true
+      } catch {
+        case _: IOException | _: UncheckedIOException if System.nanoTime() < deadline => false
+      }
+    while (!attempt()) Thread.onSpinWait()
+  }
 }

@@ -3,8 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Graft.{isBlank, txt}
-import graft.operators.Validate.NumericRegex
+import graft.Graft.txt
+import graft.operators.Mapping
 import graft.standards.Codelist
 
 /** Statistical profile of one column (ColumnScores —
@@ -47,47 +47,29 @@ case class ItemMeta(
  * text; DataType = cardinality 2-8 short values; Mandatory = binary/ternary
  * very short; FormatName = many empties; ContentLength = numeric short.
  *
- * All per-column statistics come from ONE fused aggregation pass (the
- * reference walks each column row-by-row); role assignment is driver-side
- * over the tiny stats vector.
+ * All per-column statistics come from the column profile the hints share
+ * (`Mapping.columnProfile`; the reference walks each column row-by-row);
+ * role assignment is driver-side over the tiny stats vector.
  */
 object ItemsMetadata {
 
-  private def statExprs(c: String): Seq[Column] = {
-    val v = col(c)
-    Seq(
-      countDistinct(when(!isBlank(v), txt(v))).as(s"${c}__uniq"),
-      sum(when(isBlank(v), 1L).otherwise(0L)).as(s"${c}__empty"),
-      sum(when(!isBlank(v), length(txt(v))).otherwise(0L)).as(s"${c}__len"),
-      sum(when(!isBlank(v) && txt(v).rlike(NumericRegex), 1L).otherwise(0L)).as(s"${c}__num"),
-      max(when(!isBlank(v), length(txt(v)))).as(s"${c}__maxlen"))
-  }
-
-  /** Profile every column in one scan. */
+  /** Profile every column but the ingest row id. */
   def analyzeColumns(df: DataFrame): Seq[ColumnScores] = {
     val cols = df.columns.toSeq.filterNot(_ == CsvIngest.RowIdCol)
-    if (cols.isEmpty) return Nil
-    val row = df.agg(count(lit(1)).as("__total"), cols.flatMap(statExprs): _*).head()
-    val total = row.getAs[Long]("__total")
-    cols.zipWithIndex.map { case (c, idx) =>
-      val uniq = row.getAs[Long](s"${c}__uniq")
-      val empty = row.getAs[Long](s"${c}__empty")
-      val len = row.getAs[Long](s"${c}__len")
-      val num = row.getAs[Long](s"${c}__num")
-      val maxLen = Option(row.getAs[Integer](s"${c}__maxlen")).map(_.toInt).getOrElse(0)
-      val nonNull = total - empty
+    Mapping.columnProfile(df, cols).zip(cols).zipWithIndex.map { case ((p, c), idx) =>
+      val nonNull = p.total - p.blanks
       // +1 for the empty "value" so cardinality matches the reference's
       // n_unique-over-all-rows (null counts as one distinct value)
-      val card = uniq + (if (empty > 0) 1L else 0L)
+      val card = p.distinct + (if (p.blanks > 0) 1L else 0L)
       ColumnScores(
         index = idx,
         name = c,
-        uniqueness = if (total > 0) card.toDouble / total else 0.0,
-        avgLength = if (nonNull > 0) len.toDouble / nonNull else 0.0,
-        numericRatio = if (nonNull > 0) num.toDouble / nonNull else 0.0,
+        uniqueness = if (p.total > 0) card.toDouble / p.total else 0.0,
+        avgLength = if (nonNull > 0) p.lengthSum.toDouble / nonNull else 0.0,
+        numericRatio = if (nonNull > 0) p.numeric.toDouble / nonNull else 0.0,
         cardinality = card,
-        emptyRatio = if (total > 0) empty.toDouble / total else 0.0,
-        allShortValues = nonNull > 0 && maxLen <= 10)
+        emptyRatio = if (p.total > 0) p.blanks.toDouble / p.total else 0.0,
+        allShortValues = nonNull > 0 && p.maxLength <= 10)
     }
   }
 

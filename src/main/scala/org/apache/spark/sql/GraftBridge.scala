@@ -5,9 +5,14 @@
  */
 package org.apache.spark.sql
 
+import java.util.concurrent.TimeUnit
+
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.ThreadUtils
 
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -17,6 +22,15 @@ object GraftBridge {
     * negative assertions ("no job ran") without sleeping. */
   def waitForListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Cancel every active job carrying `tag` and return, once the scheduler
+    * has failed them (at most 60 s later), how many there were (0 on a
+    * timeout) — the public `SparkContext.cancelJobsWithTag` only posts the
+    * request. */
+  def cancelJobsWithTag(spark: SparkSession, tag: String): Int =
+    scala.util.Try(ThreadUtils.awaitResult(
+      spark.sparkContext.cancelJobsWithTagWithFuture(tag, "a sibling fan-out task failed"),
+      Duration(60, TimeUnit.SECONDS)).size).getOrElse(0)
 
   /** True when the session's SQL cache manager holds no cached plans —
     * lets tests assert that operators release every `Dataset.cache()` they

@@ -111,6 +111,18 @@ class DocHygieneSpec extends AnyFunSuite {
     assert(sites == Seq("StudySession.scala"), "thread pools built in: " + sites.mkString(", "))
   }
 
+  test("E1 counts distinct values only in the column profile") {
+    // split needle, as above: one per-column distinct aggregate per column
+    // makes Spark plan an Expand whose size grows as the square of the
+    // column count — profile through Mapping.columnProfile instead
+    val needle = "count" + "Distinct"
+    val files = Seq("operators/Mapping.scala", "sources/ItemsMetadata.scala")
+      .map(f => Paths.get("src/main/scala/graft", f))
+    val offenders = files.filter(p =>
+      new String(Files.readAllBytes(p), "UTF-8").contains(needle))
+    assert(offenders.isEmpty, s"$needle in:\n  " + offenders.mkString("\n  "))
+  }
+
   test("case folds in the clinical path name a Locale") {
     // under a Turkish default locale `ie` upper-cases to `İE` and `USUBJID`
     // lower-cases to `usubjıd`: fold with Codelist.fold or a named Locale

@@ -1,9 +1,17 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.functions.JaroWinkler
+import graft.sources.{ColumnScores, CsvIngest, ItemsMetadata}
 
 /** Scorer/assignment semantics ported from `map/score.rs:295-391` and
   * state-machine invariants from `map/state.rs`. */
@@ -109,7 +117,9 @@ class MappingSpec extends AnyFunSuite {
   }
 }
 
-/** Hint building over a real DataFrame (hints.rs:14-103). */
+/** Hint building over a real DataFrame (hints.rs:14-103), and the column
+  * profile it shares with Items.csv detection checked against a driver-side
+  * brute force. */
 class MappingHintsSpec extends SparkSpec {
 
   test("columnHints: numeric / unique / null ratios with blank-as-null") {
@@ -138,5 +148,101 @@ class MappingHintsSpec extends SparkSpec {
     val df = Seq("1", "2", "3.5", "-4e2", "", "7", "8", "9", "10", "11", "12")
       .toDF("v")
     assert(Mapping.columnHints(df)("v").isNumeric)
+  }
+
+  // ---- the column profile against a driver-side brute force -------------
+
+  private val numericPattern = java.util.regex.Pattern.compile(Validate.NumericRegex)
+  private def isNumeric(s: String): Boolean = numericPattern.matcher(s).find()
+
+  /** Each column's values in the normal form `txt` gives them: null → "",
+    * leading and trailing spaces trimmed. */
+  private def normalForms(df: DataFrame, cols: Seq[String]): Seq[Seq[String]] = {
+    val rows = df.select(cols.map(col): _*).collect().toSeq
+    cols.indices.map(i => rows.map(r =>
+      Option(r.get(i)).map(_.toString).getOrElse("").replaceAll("^ +| +$", "")))
+  }
+
+  private def bruteHint(vs: Seq[String]): ColumnHint = {
+    val filled = vs.filter(_.nonEmpty)
+    val nonNull = filled.size.toLong
+    ColumnHint(
+      isNumeric = nonNull > 0 && filled.count(isNumeric).toDouble / nonNull > 0.9,
+      uniqueRatio = if (nonNull > 0) filled.distinct.size.toDouble / nonNull else 0.0,
+      nullRatio = if (vs.nonEmpty) (vs.size - nonNull).toDouble / vs.size else 1.0)
+  }
+
+  private def bruteScores(index: Int, name: String, vs: Seq[String]): ColumnScores = {
+    val filled = vs.filter(_.nonEmpty)
+    val nonNull = filled.size.toLong
+    val total = vs.size.toLong
+    val card = filled.distinct.size.toLong + (if (nonNull < total) 1L else 0L)
+    ColumnScores(index, name,
+      uniqueness = if (total > 0) card.toDouble / total else 0.0,
+      avgLength = if (nonNull > 0) filled.map(_.length.toLong).sum.toDouble / nonNull else 0.0,
+      numericRatio = if (nonNull > 0) filled.count(isNumeric).toDouble / nonNull else 0.0,
+      cardinality = card,
+      emptyRatio = if (total > 0) (total - nonNull).toDouble / total else 0.0,
+      allShortValues = nonNull > 0 && filled.map(_.length).max <= 10)
+  }
+
+  private def assertMatchesBruteForce(df: DataFrame): Unit = {
+    val cols = df.columns.toSeq.filterNot(_ == CsvIngest.RowIdCol)
+    val values = normalForms(df, cols)
+    val hints = Mapping.columnHints(df.select(cols.map(col): _*))
+    cols.zip(values).foreach { case (c, vs) =>
+      assert(hints(c) == bruteHint(vs), s"hint of $c over ${vs.mkString("[", "|", "]")}")
+    }
+    assert(ItemsMetadata.analyzeColumns(df) ==
+      cols.zip(values).zipWithIndex.map { case ((c, vs), i) => bruteScores(i, c, vs) })
+  }
+
+  private lazy val edgeFrame = {
+    import spark.implicits._
+    Seq[(String, String, String, Option[Int])](
+      (null, null, " 7", Some(1)),
+      ("", "", "7", None),
+      ("  ", "  ", "7 ", Some(7)),
+      (" 7", null, "1e3", Some(7)),
+      ("7", "", "-.5", Some(-3)),
+      ("1e3", " ", "+2.", Some(0)),
+      ("-.5", "   ", ".5e-2", Some(12)),
+      ("abc", "", "8", Some(100))
+    ).toDF("mixed", "blank", "num", "typed")
+      .withColumn(CsvIngest.RowIdCol, monotonically_increasing_id())
+  }
+
+  private lazy val wideFrame = spark.range(10).select((0 until 60).map { j =>
+    val v = when((col("id") + j) % 5 === 0, lit(null).cast("string"))
+      .otherwise((col("id") * j % (j + 1)).cast("string"))
+    (if (j % 3 == 0) concat(lit(" "), v) else v).as(s"c$j")
+  }: _*)
+
+  test("profile: null, blanks, padded duplicates, numerics, all-blank and typed columns") {
+    assertMatchesBruteForce(edgeFrame)
+  }
+
+  test("profile: a zero-row frame") {
+    assertMatchesBruteForce(edgeFrame.limit(0))
+  }
+
+  test("profile: 60 columns") {
+    assertMatchesBruteForce(wideFrame)
+  }
+
+  test("the hints plan counts distinct values without an Expand") {
+    val plans = ArrayBuffer.empty[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.optimizedPlan }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Mapping.columnHints(wideFrame)
+      GraftBridge.waitForListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.nonEmpty)
+    plans.foreach(p => assert(p.collectFirst { case e: Expand => e }.isEmpty, s"Expand in:\n$p"))
   }
 }

@@ -2,6 +2,9 @@ package graft.session
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
+
 import graft.SparkSpec
 import graft.sinks.XptReader
 import graft.standards.Standards
@@ -207,6 +210,32 @@ class StudySessionSpec extends SparkSpec {
     val define = new String(Files.readAllBytes(Paths.get(s"$outDir/define.xml")), "UTF-8")
     assert(define.contains("""<ItemGroupDef OID="IG.LBCH" Name="LBCH""""))
     assert(define.contains("""Domain="LB""""))
+  }
+
+  test("E3: SUPP-- of a split dataset keys on the parent domain") {
+    val d = Paths.get("target", "tmp", "study_split_supp")
+    Files.createDirectories(d)
+    Files.write(d.resolve("dm.csv"),
+      ("SUBJID,RFSTDTC,SEX\n101,2024-01-10,M\n").getBytes)
+    Files.write(d.resolve("lbch.csv"),
+      ("SUBJID,LBTESTCD,LBORRES,LBDTC,LBNOTE\n" +
+        "101,ALT,34,2024-01-11,fasting\n101,AST,28,2024-01-11,fasting\n").getBytes)
+    val s = StudySession.create(spark, "SPLIT2", d.toString,
+      Map("DM" -> "dm.csv", "LBCH" -> "lbch.csv"))
+    s.configureSupp("LBCH", Seq(
+      "LBNOTE" -> graft.operators.SuppColumnConfig("LBNOTE", "Lab Note", "CRF")))
+    val out = "target/tmp/study_split_supp_out"
+    s.exportAll(out)
+    val supp = XptReader.read(s"$out/supplbch.xpt")
+    assert(supp.name == "SUPPLBCH")
+    def values(v: String): Seq[String] = {
+      val i = supp.columns.indexWhere(_.name == v)
+      supp.rows.map(_(i).toString.trim)
+    }
+    assert(values("RDOMAIN") == Seq("LB", "LB"))
+    assert(values("IDVAR") == Seq("LBSEQ", "LBSEQ"))
+    // the two rows of one subject stay apart by their LBSEQ
+    assert(values("IDVARVAL").toSet == Set("1", "2"))
   }
 
   test("E3: export produces readable XPT + both XML documents + SUPP") {
@@ -423,7 +452,28 @@ class StudySessionSpec extends SparkSpec {
     val out = Paths.get("target", "tmp", "study_fail_out")
     // dm.xpt is a directory: the XPT sink cannot open it for writing
     Files.createDirectories(out.resolve("dm.xpt"))
-    intercept[java.io.FileNotFoundException](s.exportAll(out.toString))
+    // every job a fan-out task submits carries the call's tag; record which
+    // of those jobs start and which end
+    val started = scala.collection.mutable.Set.empty[Int]
+    val ended = scala.collection.mutable.Set.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        if (tags.exists(_.split(",").exists(_.startsWith(StudySession.FanOutTagPrefix))))
+          started.synchronized(started += e.jobId)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.synchronized(ended += e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[java.io.FileNotFoundException](s.exportAll(out.toString))
+      GraftBridge.waitForListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // no tagged job outlives the failed export, and no sibling sink left
+    // its part files behind
+    assert(started.nonEmpty, "the export's jobs carry the fan-out tag")
+    assert((started -- ended).isEmpty, s"tagged jobs still active: ${started -- ended}")
+    assert(!Files.exists(out.resolve("ae.xml.parts")))
     // the session's own source frames stay cached; nothing else may
     s.domainCodes.foreach(c => s.domainState(c).get.source.unpersist())
     assert(spark.sharedState.cacheManager.isEmpty,
