@@ -10,8 +10,8 @@ package graft
   * shard of the query list (so the expensive families spread across all
   * of them), and merges their results: every query runs in a JVM that is
   * at most one-shard old. Children replicate this JVM's args (classpath,
-  * add-opens, -Xmx) verbatim. GRAFT_BENCH_NO_FORK=1 or any fork failure
-  * falls back to the r9 single-JVM path, same output contract either way.
+  * add-opens, -Xmx) verbatim. Any fork failure falls back to the r9
+  * single-JVM path, same output contract either way.
   *
   * The child COUNT scales with the suite: ceil(n/125) children (min 2),
   * so each JVM benches ≤125 queries — the load the r10 two-way split
@@ -23,7 +23,7 @@ package graft
   * bench at its timeout and the round published NOTHING): the run fits
   * itself to `GRAFT_BENCH_WALL_SECS` (default 2400 s of shard time,
   * excluding JVM spawn) three ways, none of which can erase a query:
-  *  1. a query whose WARMUP exceeds `GRAFT_BENCH_DEMOTE_SECS` (30 s) is
+  *  1. a query whose WARMUP exceeds `DemoteSecs` (30 s) is
   *     demoted to ONE timed round — one honest sample beats three
   *     samples that blow the budget; `rounds_used` reports it;
   *  2. each shard gets remaining-budget / shards-remaining and SHEDS
@@ -42,8 +42,8 @@ object Bench {
 
   /** Timed rounds per query (`SPARK_GRAFT_BENCH_RUNS`, default 3). */
   private def benchRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-  private def demoteSecs =
-    sys.env.getOrElse("GRAFT_BENCH_DEMOTE_SECS", "30").toDouble
+  /** Warmup seconds past which a query gets one timed round. */
+  private val DemoteSecs = 30.0
 
   /** The `i/n` modulo shard of the sorted query list. */
   private def shardNames(spec: String): Vector[String] = {
@@ -63,17 +63,15 @@ object Bench {
         val budget = sys.env.get("GRAFT_BENCH_SHARD_BUDGET")
           .map(_.toDouble).getOrElse(Double.MaxValue)
         val res = runShard(shardNames(spec), sfDir, benchRuns, budget,
-          demoteSecs, Some(out))
+          DemoteSecs, Some(out))
         writeFile(out, shardTsv(res))
       case None =>
         val wall = sys.env.getOrElse("GRAFT_BENCH_WALL_SECS", "2400").toDouble
         val start = System.nanoTime()
         def remaining = wall - (System.nanoTime() - start) / 1e9
-        val merged =
-          if (sys.env.contains("GRAFT_BENCH_NO_FORK")) None
-          else forkShards(sfDir, () => remaining)
-        val res = merged.getOrElse(runShard(shardNames("1/1"), sfDir,
-          benchRuns, remaining, demoteSecs, Some("bench_shard_1of1.tsv")))
+        val res = forkShards(sfDir, () => remaining).getOrElse(
+          runShard(shardNames("1/1"), sfDir, benchRuns, remaining, DemoteSecs,
+            Some("bench_shard_1of1.tsv")))
         emit(res, sfDir)
     }
   }
@@ -179,7 +177,7 @@ object Bench {
     ShardResult(sent(1).toDouble, sent(2).toDouble, stats)
   }
 
-  /** The timing core shared by Bench and [[TimeQueries]], over `names`:
+  /** The timing core shared by Bench and `Tools time`, over `names`:
     * untimed warmup round, `runs` interleaved timed rounds, clearCache +
     * gc between queries, ambient-load sentinel before and after. Sheds
     * timed rounds past the first when `budgetSecs` of shard time is

@@ -123,4 +123,8 @@ object Graft {
 
   /** Null-or-blank predicate in the same normal form. */
   def isBlank(c: Column): Column = txt(c) === ""
+
+  /** A source column by its exact name: `col` would parse the dot of a CSV
+    * header such as `AE.TERM` as struct-field access. */
+  def sourceCol(name: String): Column = col("`" + name.replace("`", "``") + "`")
 }

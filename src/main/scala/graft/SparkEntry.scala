@@ -9,9 +9,11 @@ import graft.queries._
   * operator from SURVEY §2 (or a scale-path operator) with a DuckDB oracle. */
 object SparkEntry {
 
+  /** The smallest testdata scale: the smoke check's and `Tools plan`'s. */
+  val smokeSfDir = "/root/testdata/sf0.001"
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    RelationalQueries.defs("q1_agg")(spark, "/root/testdata/sf0.001")
+    RelationalQueries.defs("q1_agg")(spark, smokeSfDir)
 
   /** Merge query-group maps, failing LOUDLY on duplicate names — with plain
     * `++` a reused query name silently shadows the earlier entry and its

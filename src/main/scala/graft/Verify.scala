@@ -5,18 +5,18 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // the SAME session recipe as the tests, Bench and PlanCheck
+    // local iteration aid: GRAFT_VERIFY_ONLY=q1_agg,t8_repetition runs a
+    // subset (the correctness gate never sets it and runs everything); an
+    // unknown name fails here, before the session starts
+    val registered = Tools.queryNames(sys.env.get("GRAFT_VERIFY_ONLY").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)).distinct.sorted
+    val selected = registered.toSet
+    // the SAME session recipe as the tests, Bench and Tools
     // (Graft.session): a hand-rolled builder here once omitted
     // spark.sql.extensions, so a query using the SQL surface of the native
     // expressions would fail in the correctness gate only
     val spark = Graft.session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // local iteration aid: GRAFT_VERIFY_ONLY=q1_agg,t8_repetition runs a
-    // subset (the driver never sets it, so its gate always runs everything)
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
-    val registered = SparkEntry.queries.keys.filter(selected).toSeq.sorted
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -33,14 +33,6 @@ object Bucketing {
       key: String): DataFrame =
     spark.table(left).join(spark.table(right), key)
 
-  /** Count shuffle exchanges in a frame's executed plan (0 for a correctly
-    * co-located join) — the assertion hook for plan tests and CI. Matches
-    * every shuffle flavor (hash, range, single-partition); broadcast
-    * exchanges are not shuffles and are excluded. */
-  def shuffleExchanges(df: DataFrame): Int =
-    "Exchange (hashpartitioning|rangepartitioning|SinglePartition)".r
-      .findAllIn(df.queryExecution.executedPlan.toString).size
-
   /**
    * P131 — small-file compaction planner (next-fit bin packing): assign
    * id-ordered files to output bins so each bin holds ~`targetBytes` —

@@ -5,7 +5,7 @@ import java.util.Locale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Graft.txt
+import graft.Graft.{sourceCol, txt}
 import graft.functions.JaroWinkler
 import graft.operators.Validate.NumericRegex
 import graft.standards.Codelist
@@ -62,7 +62,7 @@ object Mapping {
   private[graft] def columnProfile(df: DataFrame, cols: Seq[String]): Seq[ColumnProfile] = {
     if (cols.isEmpty) return Nil
     val cells = array(cols.zipWithIndex.map { case (c, i) =>
-      struct(lit(i).as("i"), txt(col(c)).as("v"))
+      struct(lit(i).as("i"), txt(sourceCol(c)).as("v"))
     }: _*)
     val v = col("v")
     val n = col("n")
@@ -116,7 +116,7 @@ object Mapping {
   /** F2 — up to `limit` distinct non-empty values (hints.rs:105-133), made
     * deterministic by sorting (the reference returns scan order). */
   def sampleValues(df: DataFrame, column: String, limit: Int): Seq[String] =
-    df.select(txt(col(column)).as("v")).where(col("v") =!= "")
+    df.select(txt(sourceCol(column)).as("v")).where(col("v") =!= "")
       .distinct().orderBy("v").limit(limit)
       .collect().map(_.getString(0)).toSeq
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Graft.txt
+import graft.Graft.{sourceCol, txt}
 import graft.expressions.{CtExpressions, CtIndex}
 import graft.functions.{Iso8601, IsoDuration, Numerics}
 
@@ -136,7 +136,7 @@ object Normalize {
   /** N10 — direct copy with SDTM stringification: null → "", boolean → Y/N,
     * floats without trailing zeros (polars.rs:23-91). Schema-aware. */
   def copyDirect(df: DataFrame, name: String): Column = {
-    val c = col(name)
+    val c = sourceCol(name)
     df.schema(name).dataType match {
       case BooleanType => when(c.isNull, lit("")).when(c, "Y").otherwise("N")
       case DoubleType | FloatType => coalesce(formatNumericUdf(c.cast(DoubleType)), lit(""))
@@ -150,7 +150,7 @@ object Normalize {
     * Streams row batches (early exit on first hit) instead of capping the
     * scan, matching the reference's full-column walk. */
   def firstReferenceDate(dm: DataFrame, rfstdtcCol: String, rowId: String): Option[String] = {
-    val it = dm.select(txt(col(rfstdtcCol)).as("v"), col(rowId).as("_rid"))
+    val it = dm.select(txt(sourceCol(rfstdtcCol)).as("v"), col(rowId).as("_rid"))
       .where(col("v") =!= "")
       .orderBy(col("_rid"))
       .toLocalIterator()

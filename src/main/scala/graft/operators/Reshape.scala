@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Graft.{isBlank, txt}
+import graft.Graft.{isBlank, sourceCol, txt}
 import graft.standards.Codelist
 
 /** Per-source-column SUPP config (SuppColumnConfig — the QNAM/QLABEL/QORIG/
@@ -200,11 +200,11 @@ object Reshape {
     codelists.foldLeft(df) { case (acc, (colName, codelist)) =>
       if (!acc.columns.contains(colName)) acc
       else {
-        val decoded = decodeColumn(col(colName), codelist)
+        val decoded = decodeColumn(sourceCol(colName), codelist)
         val target = decodeTargetName(colName)
         if (acc.columns.contains(target))
           acc.withColumn(target,
-            when(!isBlank(col(target)), txt(col(target))).otherwise(decoded))
+            when(!isBlank(sourceCol(target)), txt(sourceCol(target))).otherwise(decoded))
         else acc.withColumn(target, decoded)
       }
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
+import graft.Graft.sourceCol
 import graft.expressions.CtIndex
 import graft.sources.CsvIngest
 import graft.standards.{Codelist, SdtmDomain, SdtmVariable, Standards, VariableType}
@@ -102,7 +103,7 @@ object RuleInference {
       df: DataFrame, rowId: Column): Column = {
     val sourceOpt = ctx.mappings.get(rule.targetVariable)
       .filter(df.columns.contains)
-    def source: Column = sourceOpt.map(col).getOrElse(lit(""))
+    def source: Column = sourceOpt.map(sourceCol).getOrElse(lit(""))
     val out: Column = rule.transformType match {
       case Constant =>
         if (rule.targetVariable == "STUDYID") lit(ctx.studyId)
@@ -111,12 +112,12 @@ object RuleInference {
         // derive from the SUBJID mapping, falling back to a direct USUBJID
         // mapping; no mapping ⇒ all-empty (executor.rs:124-174)
         subjidSource(ctx, df) match {
-          case Some(c) => Normalize.usubjid(ctx.studyId, col(c))
+          case Some(c) => Normalize.usubjid(ctx.studyId, sourceCol(c))
           case None => lit("")
         }
       case SequenceNumber =>
         val subj = subjidSource(ctx, df)
-          .map(c => Normalize.usubjid(ctx.studyId, col(c)))
+          .map(c => Normalize.usubjid(ctx.studyId, sourceCol(c)))
           .getOrElse(lit(""))
         Normalize.seqNumber(subj, rowId)
       case StudyDay(refDtc) =>
@@ -124,7 +125,7 @@ object RuleInference {
         // AESTDTC's source column), reference from DM.RFSTDTC
         // (inference.rs:71-75, executor.rs:300-351)
         ctx.mappings.get(refDtc).filter(df.columns.contains) match {
-          case Some(c) => Normalize.studyDay(col(c), ctx.referenceDate)
+          case Some(c) => Normalize.studyDay(sourceCol(c), ctx.referenceDate)
           case None => lit(null).cast(IntegerType)
         }
       case Iso8601DateTime | Iso8601Date => Normalize.iso8601(source)

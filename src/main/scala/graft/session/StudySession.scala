@@ -7,6 +7,7 @@ import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Exec
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Graft.sourceCol
 import graft.operators._
 import graft.sinks.{CtStandard, XmlSinks, XmlVariable, XmlCodelist, XptWriter}
 import graft.sources.{CsvIngest, ItemMeta, ItemsMetadata}
@@ -95,7 +96,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     val (df, _) = CsvIngest.readCsvTable(spark, itemsCsvPath, itemsHeaderRows)
     val dataCols = df.columns.filterNot(_ == CsvIngest.RowIdCol)
     val scores = ItemsMetadata.analyzeColumns(
-      df.select(dataCols.toIndexedSeq.map(col): _*))
+      df.select(dataCols.toIndexedSeq.map(sourceCol): _*))
     val detected = ItemsMetadata.detectSchema(scores)
       .map(schema => ItemsMetadata.loadItems(df, schema))
     val itemsForRouting = detected.getOrElse(itemsMetadata)
@@ -164,7 +165,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     val itemLabels = dataCols.flatMap(c => itemsMetadata.get(c).map(c -> _.label)).toMap
     // a build cancelled mid-job (a sibling in create failed) frees its own
     // cache: it returns no DomainState for the caller to unpersist
-    val hints = try Mapping.columnHints(df.select(dataCols.map(col): _*),
+    val hints = try Mapping.columnHints(df.select(dataCols.map(sourceCol): _*),
       itemLabels ++ headerLabels)
     catch { case e: Throwable => df.unpersist(); throw e }
 
@@ -425,7 +426,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
       val suppSrcCols = (configs.map(_._1)
         .filter(source.columns.contains)
         .filterNot(idCols.contains) :+ CsvIngest.RowIdCol).distinct
-      val joined = source.select(suppSrcCols.map(col): _*).join(
+      val joined = source.select(suppSrcCols.map(sourceCol): _*).join(
         p.frame.select((idCols :+ CsvIngest.RowIdCol).map(col): _*),
         Seq(CsvIngest.RowIdCol))
       Reshape.buildSupp(rdomain, studyId, joined, configs).fold(Part(None, None)) { supp =>

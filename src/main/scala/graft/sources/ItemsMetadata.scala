@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Graft.txt
+import graft.Graft.{sourceCol, txt}
 import graft.operators.Mapping
 import graft.standards.Codelist
 
@@ -136,7 +136,7 @@ object ItemsMetadata {
     val byNorm = df.columns.map(c => Codelist.fold(c.replaceAll("\\s", "")) -> c).toMap
     (byNorm.get("FORMATNAME"), byNorm.get("CODEVALUE"), byNorm.get("CODETEXT")) match {
       case (Some(f), Some(v), Some(t)) =>
-        df.select(txt(col(f)).as("f"), txt(col(v)).as("v"), txt(col(t)).as("t"))
+        df.select(txt(sourceCol(f)).as("f"), txt(sourceCol(v)).as("v"), txt(sourceCol(t)).as("t"))
           .where(col("f") =!= "" && col("v") =!= "")
           .collect()
           .groupBy(r => Codelist.fold(r.getString(0)))
@@ -154,7 +154,7 @@ object ItemsMetadata {
     // list — resolve against the same basis, wherever the ingest row id
     // happens to sit in this frame
     val cols = df.columns.filterNot(_ == CsvIngest.RowIdCol)
-    def c(r: ColumnRole): Column = txt(col(cols(r.index)))
+    def c(r: ColumnRole): Column = txt(sourceCol(cols(r.index)))
     val sel = df.select(
       c(schema.id).as("id"),
       c(schema.label).as("label"),

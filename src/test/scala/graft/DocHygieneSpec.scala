@@ -123,6 +123,27 @@ class DocHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"$needle in:\n  " + offenders.mkString("\n  "))
   }
 
+  test("src/main has three mains: Bench, Verify and Tools") {
+    // split needle, as above: a new measurement is a Tools subcommand, not
+    // another main with its own session and query loop
+    val main = java.util.regex.Pattern.compile("""def\s+""" + """main\s*\(""")
+    val mains = scalaSources("src/main/scala")
+      .filter(p => main.matcher(new String(Files.readAllBytes(p), "UTF-8")).find())
+      .map(_.getFileName.toString).sorted
+    assert(mains == Seq("Bench.scala", "Tools.scala", "Verify.scala"),
+      "mains in src/main: " + mains.mkString(", "))
+  }
+
+  test("plan text is parsed only in PlanFacts") {
+    // split needle, as above: the executed plan's text also carries AQE's
+    // Initial Plan section — read facts through PlanFacts, which cuts it
+    val needle = "executedPlan" + ".toString"
+    val offenders = scalaSources("src/main/scala")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
+      .map(_.getFileName.toString).filterNot(_ == "PlanFacts.scala")
+    assert(offenders.isEmpty, "plan text read in: " + offenders.mkString(", "))
+  }
+
   test("case folds in the clinical path name a Locale") {
     // under a Turkish default locale `ie` upper-cases to `İE` and `USUBJID`
     // lower-cases to `usubjıd`: fold with Codelist.fold or a named Locale

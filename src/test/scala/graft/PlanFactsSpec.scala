@@ -15,14 +15,46 @@ class PlanFactsSpec extends SparkSpec {
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     val qe = df.queryExecution
     qe.toRdd.count()
-    PlanCheck.finalPlan(qe.executedPlan)
+    PlanFacts.finalPlan(qe.executedPlan)
+  }
+
+  test("facts come from the final plan, never AQE's initial section") {
+    // the static size estimate of a filtered range is the whole range's,
+    // over the static threshold, so the join is planned sort-merge; the
+    // filtered side's runtime size is under the adaptive threshold, so AQE
+    // re-plans it as a broadcast hash join
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold" -> "1000",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val small = spark.range(0, 1000).where("id < 10")
+      val df = spark.range(0, 1000).join(small, "id")
+      assert(df.collect().length == 10)
+      val executed = df.queryExecution.executedPlan
+      val initial = executed.toString.split("== Initial Plan ==")
+      assert(initial.length == 2 && initial(1).contains("SortMergeJoin"), executed)
+      val facts = PlanFacts(executed)
+      assert(facts.smj == 0 && facts.bhj == 1, facts)
+    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("a global window counts as one unpartitioned window") {
+    import org.apache.spark.sql.expressions.{Window, WindowSpec}
+    import org.apache.spark.sql.functions.{col, row_number}
+    def windows(w: WindowSpec): Int = {
+      val df = spark.range(0, 10).withColumn("r", row_number().over(w))
+      assert(df.collect().length == 10)
+      PlanFacts(df.queryExecution.executedPlan).unpartitionedWindows
+    }
+    assert(windows(Window.orderBy("id")) == 1)
+    assert(windows(Window.partitionBy(col("id") % 2).orderBy("id")) == 0)
   }
 
   test("hot projection queries run inside whole-stage codegen") {
     assume(haveData)
     for (q <- Seq("t1_token_counts", "n4_iso_datetime", "n6_duration")) {
       val p = finalPlan(SparkEntry.queries(q)(spark, sfDir))
-      assert(PlanCheck.codegenStages(p) > 0, s"$q lost whole-stage codegen:\n$p")
+      assert(PlanFacts.codegenStages(p) > 0, s"$q lost whole-stage codegen:\n$p")
     }
   }
 

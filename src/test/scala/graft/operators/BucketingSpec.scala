@@ -1,13 +1,17 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{PlanFacts, SparkSpec}
 
 /** Bucketed co-located joins elide shuffles. */
 class BucketingSpec extends SparkSpec {
 
   import spark.implicits._
+
+  private def shuffleExchanges(df: DataFrame): Int =
+    PlanFacts(df.queryExecution.executedPlan).shuffleExchanges
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -32,8 +36,8 @@ class BucketingSpec extends SparkSpec {
 
     val joined = Bucketing.bucketedJoin(spark, "b_facts", "b_dims", "k")
     assert(joined.count() == 1000)
-    assert(Bucketing.shuffleExchanges(joined) == 0,
-      joined.queryExecution.executedPlan.toString.take(2000))
+    assert(shuffleExchanges(joined) == 0,
+      PlanFacts.finalPlan(joined.queryExecution.executedPlan).take(2000))
 
     // the same join on unbucketed frames shuffles (broadcast disabled to
     // expose the exchange)
@@ -41,14 +45,14 @@ class BucketingSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val plain = facts.join(dims, "k")
-      assert(Bucketing.shuffleExchanges(plain) > 0)
+      assert(shuffleExchanges(plain) > 0)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
   test("bucketed groupBy on the bucket key avoids the aggregation shuffle") {
     val agg = spark.table("b_facts").groupBy("k").count()
     assert(agg.count() == 50)
-    assert(Bucketing.shuffleExchanges(agg) == 0)
+    assert(shuffleExchanges(agg) == 0)
   }
 
   test("compactionPlan: next-fit bins, one-file overflow, giant files") {

@@ -5,7 +5,7 @@ import java.util.Locale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{PlanCheck, SparkSpec}
+import graft.{PlanFacts, SparkSpec}
 import graft.expressions.CtIndex
 import graft.standards.Standards
 
@@ -78,7 +78,7 @@ class ValidateSpec extends SparkSpec {
     val keys = Seq(("AE", "AESEQ", "1")).toDF("rdomain", "idvar", "idvarval")
     def run(df: DataFrame, c: String): (Seq[String], String) = {
       val rows = df.select(c).collect().map(_.getString(0)).toSeq
-      (rows, PlanCheck.finalPlan(df.queryExecution.executedPlan))
+      (rows, PlanFacts.finalPlan(df.queryExecution.executedPlan))
     }
     def x1 = run(Validate.orphanSubjects(dom, dm, "usubjid"), "usubjid")
     def x5 = run(Validate.danglingRecordRefs(refs, keys), "idvarval")

@@ -238,6 +238,28 @@ class StudySessionSpec extends SparkSpec {
     assert(values("IDVARVAL").toSet == Set("1", "2"))
   }
 
+  test("a dotted CSV header is a source column, not a struct field") {
+    val d = Paths.get("target", "tmp", "study_dotted")
+    Files.createDirectories(d)
+    Files.write(d.resolve("dm.csv"),
+      ("SUBJID,RFSTDTC,SEX\n101,2024-01-10,M\n102,2024-01-12,F\n").getBytes)
+    Files.write(d.resolve("ae.csv"),
+      ("SUBJID,AE.TERM,AESEV,AESTDTC\n101,Headache,MILD,2024-01-12\n" +
+        "102,Fatigue,SEVERE,2024-01-14\n").getBytes)
+    val s = StudySession.create(spark, "DOT1", d.toString,
+      Map("DM" -> "dm.csv", "AE" -> "ae.csv"))
+    val ae = s.domainState("AE").get
+    assert(ae.mapping.acceptManual("AETERM", "AE.TERM") == Right(()))
+    val pv = s.preview("AE").get.orderBy("_row_id").collect()
+    assert(pv.map(_.getAs[String]("AETERM")).toSeq == Seq("Headache", "Fatigue"))
+    assert(!s.validate("AE").exists(_.variable == "AETERM"))
+    val out = "target/tmp/study_dotted_out"
+    s.exportAll(out)
+    val xpt = XptReader.read(s"$out/ae.xpt")
+    val term = xpt.columns.indexWhere(_.name == "AETERM")
+    assert(xpt.rows.map(_(term).toString.trim) == Seq("Headache", "Fatigue"))
+  }
+
   test("E3: export produces readable XPT + both XML documents + SUPP") {
     val outDir = "target/tmp/study1_out"
     session.configureSupp("DM", Seq(

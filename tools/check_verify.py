@@ -31,6 +31,9 @@ if os.path.exists(manifest_path):
     produced = [n for n in registered
                 if glob.glob(f"{outdir}/{n}/*.parquet")]
     print(f"registered {len(registered)}, produced {len(produced)}")
+    # a run that registered nothing checked nothing: it must not read green
+    if not registered:
+        fails.append(("manifest", "no query registered"))
     for n in registered:
         if n not in produced:
             why = manifest.get("failed", {}).get(n, "no output dir")
