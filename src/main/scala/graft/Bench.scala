@@ -76,9 +76,9 @@ object Bench {
     }
   }
 
+  // a kill mid-write leaves the previous round's complete file
   private def writeFile(path: String, content: String): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      content.getBytes("UTF-8"))
+    Publish.bytes(java.nio.file.Paths.get(path), content.getBytes("UTF-8"))
 
   private def shardTsv(res: ShardResult): String =
     (s"sentinel\t${res.sentinelBefore}\t${res.sentinelAfter}" +:

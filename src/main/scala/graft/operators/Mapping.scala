@@ -274,4 +274,7 @@ class MappingState(val domain: String, variables: Seq[VarMeta]) {
     }.toMap
 
   def omitted: Set[String] = status.collect { case (v, Omitted) => v }.toSet
+
+  /** Validation skips these variables' Expected checks (`validate/mod.rs:77-84`). */
+  def notCollected: Set[String] = status.collect { case (v, NotCollected) => v }.toSet
 }

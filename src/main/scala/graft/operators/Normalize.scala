@@ -12,9 +12,10 @@ import graft.functions.{Iso8601, IsoDuration, Numerics}
 /**
  * Normalization operators N1-N12 (SURVEY.md §2.2), each as a declarative
  * `Column` expression so Catalyst can fold, prune, and codegen around it.
- * Only the ISO-8601 datetime/duration cascades are Scala UDFs (their
- * preserve-original-on-failure + partial-precision semantics are not
- * expressible with `to_date` chains); everything else is built-in functions.
+ * The ISO-8601 datetime/duration cascades are native Catalyst expressions
+ * (their preserve-original-on-failure + partial-precision semantics are
+ * not expressible with `to_date` chains); study day, numeric parse and
+ * numeric format are the Scala UDFs; everything else is built-in functions.
  *
  * Semantics studied from `crates/tss-submit/src/normalize/executor.rs:24-463`.
  */

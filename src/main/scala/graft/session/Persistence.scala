@@ -75,56 +75,18 @@ object Persistence {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Write the binary `.tss` container atomically (`io/save.rs:14-61`):
-    * serialize to a sibling temp file, fsync, then rename over the target
-    * so an interrupted save leaves the previous snapshot intact. */
+  /** Write the binary `.tss` container atomically and durably
+    * (`io/save.rs:14-61`) through [[graft.Publish]], so an interrupted
+    * save leaves the previous snapshot intact. */
   def save(snapshot: ProjectSnapshot, path: String): Unit = {
     val target = Paths.get(path)
-    val dir = Option(target.getParent).getOrElse(Paths.get("."))
-    Files.createDirectories(dir)
-    // unique temp per save: a FIXED sibling name would let two concurrent
-    // saves (autosave poller + manual save) open the same temp file and
-    // scribble into each other's rename. Created as a REGULAR file, not
-    // Files.createTempFile — temp-file creation forces owner-only 0600
-    // bits that would survive the rename and lock group/other readers out
-    // of a previously world-readable snapshot; CREATE_NEW honors the umask.
-    val tmp = dir.resolve(
-      target.getFileName.toString + "." + java.util.UUID.randomUUID() + ".tmp")
-    try {
-      val ch = java.nio.channels.FileChannel.open(tmp,
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val buf = java.nio.ByteBuffer.wrap(serialize(snapshot))
-        while (buf.hasRemaining) ch.write(buf) // write() may be partial
-        ch.force(true)
-      } finally ch.close()
-      // an existing snapshot's permission bits survive the replace (the
-      // user may have chmod'd it). Read-then-set both inside the Try, no
-      // exists() pre-check: a target vanishing concurrently degrades to
-      // umask defaults by design instead of by a swallowed race, and
-      // non-POSIX filesystems skip silently
-      scala.util.Try {
-        val perms = Files.getPosixFilePermissions(target)
-        Files.setPosixFilePermissions(tmp, perms)
-      }
-      try
-        Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      catch { // filesystems without atomic rename-over (some network mounts)
-        case _: java.nio.file.AtomicMoveNotSupportedException =>
-          Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    } catch {
-      case e: Throwable => // never leave a stale/truncated temp file behind
-        scala.util.Try(Files.deleteIfExists(tmp))
-        throw e
-    }
+    Files.createDirectories(Option(target.getParent).getOrElse(Paths.get(".")))
+    graft.Publish.bytes(target, serialize(snapshot), durable = true)
   }
 
   /** Human-readable save for debugging/diffing; `load` accepts both. */
   def saveJson(snapshot: ProjectSnapshot, path: String): Unit =
-    Files.write(Paths.get(path),
+    graft.Publish.bytes(Paths.get(path),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(snapshot))
 
   private[session] def serialize(snapshot: ProjectSnapshot): Array[Byte] = {

@@ -272,7 +272,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
       domain <- domainMetaFor(ds.code)
       frame <- preview(code)
     } yield DomainValidation.validateDomain(frame, domain,
-      ct = ctRegistry)).getOrElse(Nil)
+      notCollected = ds.mapping.notCollected, ct = ctRegistry)).getOrElse(Nil)
 
   /** E2 — study-wide cross-domain checks over normalized frames. */
   def validateCross(): Seq[Issue] =

@@ -1,13 +1,14 @@
 package graft.sinks
 
-import java.io.{BufferedOutputStream, FileOutputStream, IOException, OutputStream, UncheckedIOException}
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.io.{BufferedOutputStream, IOException, OutputStream, UncheckedIOException}
+import java.nio.channels.{Channels, FileChannel}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 import java.util.concurrent.TimeUnit
 
-import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
+
+import graft.Publish
 
 /**
  * Single-file assembly shared by the XPT and Dataset-XML sinks. Each
@@ -18,10 +19,12 @@ import org.apache.spark.rdd.RDD
  * The driver then writes the head, concatenates the non-empty parts in
  * partition order with zero-copy `FileChannel.transferTo` (pure kernel
  * IO, no re-heap of the bytes; the collected manifest is one row count
- * per partition) and writes the tail. The destination's parent must be
- * storage both executors and driver can reach (true in local mode and
- * for the shared mounts a single-file regulatory artifact lands on in
- * cluster mode).
+ * per partition) and writes the tail. Parts and the destination appear
+ * whole through [[Publish]]: duplicate attempts of one part race only on
+ * the rename, and a failed assembly leaves the previous artifact intact.
+ * The destination's parent must be storage both executors and driver can
+ * reach (true in local mode and for the shared mounts a single-file
+ * regulatory artifact lands on in cluster mode).
  */
 private[sinks] object PartFiles {
 
@@ -38,51 +41,30 @@ private[sinks] object PartFiles {
     try {
       val partsDirStr = partsDir.toString
       val manifest = rows.mapPartitionsWithIndex { (idx, it) =>
-        val part = new PartFile(partsDirStr, idx)
-        val n =
-          try { val n = writePart(it, part.stream); part.commit(); n }
-          catch { case e: Throwable => part.abort(); throw e }
+        val n = Publish.file(Paths.get(partsDirStr, partName(idx))) { ch =>
+          val out = new BufferedOutputStream(Channels.newOutputStream(ch), 1 << 20)
+          val n = writePart(it, out)
+          out.flush()
+          n
+        }
         Iterator.single((idx, n))
       }.collect().sortBy(_._1)
       val total = manifest.map(_._2).sum
-      val fos = new FileOutputStream(path)
-      try {
-        val out = new BufferedOutputStream(fos, 1 << 16)
+      Publish.file(Paths.get(path)) { ch =>
+        val out = new BufferedOutputStream(Channels.newOutputStream(ch), 1 << 16)
         head(out)
         out.flush() // channel writes below share the stream's file position
-        val ch = fos.getChannel
         manifest.foreach { case (idx, n) =>
           if (n > 0) transferFile(partsDir.resolve(partName(idx)), ch)
         }
         tail(out, total)
         out.flush()
-      } finally fos.close()
+      }
       total
     } finally deleteRecursively(partsDir)
   }
 
   private def partName(idx: Int): String = f"part-$idx%05d"
-
-  /** Open partition `idx`'s part file for writing via an attempt-unique
-    * temp name; `commit()` atomically renames it into place. Speculative
-    * or zombie duplicate attempts of the same partition then race only on
-    * the rename — last COMPLETE file wins, a half-written attempt is never
-    * visible under the final name (the FileOutputCommitter pattern). */
-  private final class PartFile(partsDir: String, idx: Int) {
-    private val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
-    private val finalPath = Paths.get(partsDir, partName(idx))
-    private val tmpPath = Paths.get(partsDir, s"${partName(idx)}.a$attempt")
-    val stream = new BufferedOutputStream(new FileOutputStream(tmpPath.toFile), 1 << 20)
-    def commit(): Unit = {
-      stream.close()
-      Files.move(tmpPath, finalPath,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-    def abort(): Unit = {
-      scala.util.Try(stream.close())
-      scala.util.Try(Files.deleteIfExists(tmpPath))
-    }
-  }
 
   /** Concatenate `src` onto `dst` with zero-copy kernel transfers. */
   private def transferFile(src: Path, dst: FileChannel): Unit = {

@@ -1,11 +1,14 @@
 package graft.sinks
 
-import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter, Writer}
+import java.io.{BufferedWriter, OutputStreamWriter, Writer}
+import java.nio.channels.Channels
 import java.nio.charset.StandardCharsets
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Publish
 import graft.functions.Numerics
 
 /** Variable metadata the XML sinks need (subset of SdtmVariable). */
@@ -290,10 +293,10 @@ object XmlSinks {
 
   def writeDefineXmlFile(path: String, studyId: String, igVersion: String,
       datasets: Seq[DefineDataset], codelists: Seq[XmlCodelist],
-      ctStandards: Seq[CtStandard] = Nil): Unit = {
-    val w = new BufferedWriter(new OutputStreamWriter(
-      new FileOutputStream(path), StandardCharsets.UTF_8), 1 << 20)
-    try writeDefineXml(w, studyId, igVersion, datasets, codelists, ctStandards)
-    finally w.close()
-  }
+      ctStandards: Seq[CtStandard] = Nil): Unit =
+    Publish.file(Paths.get(path)) { ch =>
+      val w = new BufferedWriter(new OutputStreamWriter(
+        Channels.newOutputStream(ch), StandardCharsets.UTF_8), 1 << 20)
+      writeDefineXml(w, studyId, igVersion, datasets, codelists, ctStandards) // flushes w
+    }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.io.{BufferedReader, FileInputStream, InputStreamReader}
+import java.io.{BufferedReader, BufferedWriter, FileInputStream, InputStreamReader, OutputStreamWriter}
+import java.nio.channels.Channels
 import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.{Files, Path, Paths}
 import java.util.Locale
@@ -9,6 +10,9 @@ import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.Publish
+import graft.standards.Codelist
 
 /** Parsed header info for a CSV table (CsvHeaders —
   * `crates/tss-ingest/src/csv/header.rs:4-50`). */
@@ -115,7 +119,8 @@ object CsvIngest {
     * able to read the transcoded path, so driver-local tmp only works in
     * local mode) under a name derived from the source's (path, size,
     * mtime), so re-reading an unchanged file reuses the existing copy
-    * instead of re-transcoding. */
+    * instead of re-transcoding. [[Publish]] gives the copy the umask's
+    * permissions, so executors running as another user can read it. */
   private def transcodeToUtf8(path: String, cs: Charset,
       cacheDir: Option[String] = None): String = {
     val src = Paths.get(path)
@@ -127,33 +132,27 @@ object CsvIngest {
     val dir = cacheDir.map(Paths.get(_)).getOrElse(
       Paths.get(System.getProperty("java.io.tmpdir")))
     Files.createDirectories(dir)
-    val tmp = dir.resolve(s"graft-utf8-$key.csv")
-    if (Files.exists(tmp)) return tmp.toString
-    // write to a private .part file and move into place atomically, so a
-    // crashed half-written transcode is never mistaken for a finished one
-    val part = Files.createTempFile(tmp.getParent, s"graft-utf8-$key", ".part")
-    val in = new BufferedReader(new InputStreamReader(new FileInputStream(path), cs), 1 << 16)
-    val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      new java.io.FileOutputStream(part.toFile), StandardCharsets.UTF_8), 1 << 16)
-    try {
-      val buf = new Array[Char](1 << 16)
-      var first = true
-      var n = in.read(buf)
-      while (n > 0) {
-        val off = if (first && buf(0) == '\uFEFF') 1 else 0
-        first = false
-        out.write(buf, off, n - off)
-        n = in.read(buf)
-      }
-    } finally { in.close(); out.close() }
-    Files.move(part, tmp, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val copy = dir.resolve(s"graft-utf8-$key.csv")
+    if (Files.exists(copy)) return copy.toString
+    // published whole, so a crashed half-written transcode is never
+    // mistaken for a finished one
+    Publish.file(copy) { ch =>
+      val in = new BufferedReader(new InputStreamReader(new FileInputStream(path), cs), 1 << 16)
+      try {
+        in.mark(1)
+        if (in.read() != '\uFEFF') in.reset()
+        val out = new BufferedWriter(
+          new OutputStreamWriter(Channels.newOutputStream(ch), StandardCharsets.UTF_8), 1 << 16)
+        in.transferTo(out)
+        out.flush()
+      } finally in.close()
+    }
     // JVM-exit cleanup only for the implicit local-tmp default. A configured
     // cacheDir is shared cluster storage: deleting on driver exit would
     // defeat cross-run reuse and race concurrent jobs mid-scan — its
     // lifecycle belongs to the storage owner (TTL policy), not this JVM.
-    if (cacheDir.isEmpty) tmp.toFile.deleteOnExit()
-    tmp.toString
+    if (cacheDir.isEmpty) copy.toFile.deleteOnExit()
+    copy.toString
   }
 
   /** S4 — header schema probe (`reader.rs:239-264`): 1 header row = names;
@@ -225,16 +224,18 @@ object CsvIngest {
   /** Size floor of the post-ingest scan fanout. */
   private val FanoutMinBytes = 2L * 1024 * 1024
 
+  /** An empty header cell becomes `_c`; a name equal to an earlier one or
+    * to `_row_id` under Spark's case-insensitive resolution gets a suffix. */
   private def dedupe(names: Seq[String]): Seq[String] = {
-    val used = scala.collection.mutable.Set[String]()
+    val used = scala.collection.mutable.Set(Codelist.fold(RowIdCol))
     names.map { n =>
       val base = if (n.isEmpty) "_c" else n
       // probe until globally unique: header "a,a,a_1" must not synthesize a
       // second "a_1"
       var candidate = base
       var k = 1
-      while (used.contains(candidate)) { candidate = s"${base}_$k"; k += 1 }
-      used += candidate
+      while (used.contains(Codelist.fold(candidate))) { candidate = s"${base}_$k"; k += 1 }
+      used += Codelist.fold(candidate)
       candidate
     }
   }

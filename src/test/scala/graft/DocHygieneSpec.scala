@@ -144,6 +144,29 @@ class DocHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty, "plan text read in: " + offenders.mkString(", "))
   }
 
+  test("sinks, sources, session and Bench write files only through Publish") {
+    // split needles, as above: an in-place write truncates the previous
+    // artifact the moment it opens, and a temp file of one's own forgets
+    // the umask or the cleanup — publish through graft.Publish instead
+    val needles = Seq("FileOutput" + "Stream", "Files.wr" + "ite", "Files.mo" + "ve",
+      "createTemp" + "File", "Files.newOutput" + "Stream", "Files.newBuffered" + "Writer")
+    val root = "src/main/scala/graft"
+    val files = Seq("sinks", "sources", "session").flatMap(d => scalaSources(s"$root/$d")) :+
+      Paths.get(root, "Bench.scala")
+    val offenders = for {
+      p <- files
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      n <- needles if text.contains(n)
+    } yield s"$p: $n"
+    assert(offenders.isEmpty, "files written around Publish:\n  " + offenders.mkString("\n  "))
+    // and each writer of a product file does publish through it
+    val publishers = Seq("sinks/PartFiles.scala", "sinks/XmlSinks.scala",
+      "session/Persistence.scala", "sources/CsvIngest.scala", "Bench.scala")
+    val silent = publishers.filterNot(f =>
+      new String(Files.readAllBytes(Paths.get(root, f)), "UTF-8").contains("Publish."))
+    assert(silent.isEmpty, "no Publish call in: " + silent.mkString(", "))
+  }
+
   test("case folds in the clinical path name a Locale") {
     // under a Turkish default locale `ie` upper-cases to `İE` and `USUBJID`
     // lower-cases to `usubjıd`: fold with Codelist.fold or a named Locale

@@ -1,6 +1,7 @@
 package graft.session
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.GraftBridge
@@ -32,6 +33,18 @@ class StudySessionSpec extends SparkSpec {
 
   private lazy val session = StudySession.create(spark, "GRAFT1", studyDir,
     Map("DM" -> "dm.csv", "AE" -> "ae.csv"))
+
+  /** The regular files directly under `dir`, sorted. */
+  private def listing(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq.sorted finally s.close()
+  }
+
+  private def deleteTree(dir: java.nio.file.Path): Unit = if (Files.exists(dir)) {
+    val s = Files.walk(dir)
+    try s.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally s.close()
+  }
 
   test("E1: scoring suggests the obvious mappings") {
     val dm = session.domainState("DM").get
@@ -85,6 +98,19 @@ class StudySessionSpec extends SparkSpec {
     assert(orphan.isDefined)
     assert(orphan.get.count == 1)
     assert(orphan.get.samples == Seq("GRAFT1-999"))
+  }
+
+  test("E2: a NotCollected mark silences its variable's Expected warning") {
+    val s = StudySession.create(spark, "NC1", studyDir, Map("DM" -> "dm.csv"))
+    def expectedIssues = s.validate("DM").filter(i => i.variable == "RACE" &&
+      i.kind.startsWith("Expected"))
+    // unmapped, RACE normalizes to an all-blank column: ExpectedEmpty
+    assert(expectedIssues.map(_.kind) == Seq("ExpectedEmpty"))
+    val mapping = s.domainState("DM").get.mapping
+    assert(mapping.markNotCollected("RACE") == Right(()))
+    assert(mapping.notCollected == Set("RACE"))
+    assert(expectedIssues.isEmpty, "a NotCollected variable still warns")
+    s.domainCodes.foreach(c => s.domainState(c).get.source.unpersist())
   }
 
   test("E2: X4/X5 surface through session.validateCross (RELSPEC chain, RELREC refs)") {
@@ -472,7 +498,12 @@ class StudySessionSpec extends SparkSpec {
     val s = StudySession.create(spark, "FAIL2", studyDir,
       Map("AE" -> "ae.csv", "DM" -> "dm.csv"))
     val out = Paths.get("target", "tmp", "study_fail_out")
-    // dm.xpt is a directory: the XPT sink cannot open it for writing
+    // a prior complete export, then dm.xpt becomes a directory: the XPT
+    // sink cannot publish over it
+    deleteTree(out)
+    s.exportAll(out.toString)
+    Files.delete(out.resolve("dm.xpt"))
+    val prior = listing(out).map(p => p -> Files.readAllBytes(p)).toMap
     Files.createDirectories(out.resolve("dm.xpt"))
     // every job a fan-out task submits carries the call's tag; record which
     // of those jobs start and which end
@@ -496,6 +527,16 @@ class StudySessionSpec extends SparkSpec {
     assert(started.nonEmpty, "the export's jobs carry the fan-out tag")
     assert((started -- ended).isEmpty, s"tagged jobs still active: ${started -- ended}")
     assert(!Files.exists(out.resolve("ae.xml.parts")))
+    // every artifact is its prior bytes or a complete new one; no temp stays
+    val after = listing(out)
+    assert(after.filter(_.getFileName.toString.endsWith(".tmp")).isEmpty, after.toString)
+    assert(after.map(_.getFileName.toString).toSet == prior.keySet.map(_.getFileName.toString),
+      after.toString)
+    after.filterNot(p => Files.readAllBytes(p).sameElements(prior(p))).foreach { p =>
+      if (p.toString.endsWith(".xpt")) XptReader.read(p.toString)
+      else javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
+        .parse(p.toFile)
+    }
     // the session's own source frames stay cached; nothing else may
     s.domainCodes.foreach(c => s.domainState(c).get.source.unpersist())
     assert(spark.sharedState.cacheManager.isEmpty,

@@ -84,6 +84,24 @@ class CsvIngestSpec extends SparkSpec {
     } finally spark.conf.unset(CsvIngest.TranscodeDirKey)
   }
 
+  test("the transcoded copy has a plain file's permissions, not a temp file's 0600") {
+    val cacheDir = Files.createTempDirectory("graft-transcode-perms")
+    val p = write("utf16perms.csv", "SUBJID,NAME\n301,Di\n", StandardCharsets.UTF_16LE,
+      bom = Array(0xFF.toByte, 0xFE.toByte))
+    spark.conf.set(CsvIngest.TranscodeDirKey, cacheDir.toString)
+    try {
+      val (df, _) = CsvIngest.readCsvTable(spark, p)
+      assert(df.count() == 1)
+      val copies = cacheDir.toFile.listFiles().filter(_.getName.startsWith("graft-utf8-"))
+      assert(copies.map(_.getName).forall(_.endsWith(".csv")), copies.mkString(","))
+      // executors read the copy, possibly as another user: it must carry
+      // the umask's bits like any file created in that directory
+      val probe = Files.createFile(cacheDir.resolve("umask_probe"))
+      assert(Files.getPosixFilePermissions(copies.head.toPath) ==
+        Files.getPosixFilePermissions(probe))
+    } finally spark.conf.unset(CsvIngest.TranscodeDirKey)
+  }
+
   test("UTF-16 ingest scans splittably (more than one input partition)") {
     // 4000 rows ≈ 120 KB as UTF-16; with a 16 KB partition ceiling the scan
     // must fan out — the old multiLine path forced one whole-file task
@@ -116,6 +134,23 @@ class CsvIngestSpec extends SparkSpec {
     val names = df.columns.filterNot(_ == CsvIngest.RowIdCol).toSeq
     assert(names.distinct.size == names.size, names.toString)
     assert(names.head == "a" && names.size == 3)
+  }
+
+  test("a _row_id header keeps its own values") {
+    val p = write("rowid.csv", "_row_id,A\nx,1\ny,2\n")
+    val (df, _) = CsvIngest.readCsvTable(spark, p)
+    assert(df.columns.toSeq == Seq("_row_id_1", "A", CsvIngest.RowIdCol))
+    assert(df.orderBy(CsvIngest.RowIdCol).select("_row_id_1").collect().map(_.getString(0))
+      .toSeq == Seq("x", "y"))
+  }
+
+  test("headers that differ only in case ingest side by side") {
+    val p = write("twins.csv", "aeterm,AETERM,Aeterm_1\nlow,UP,mixed\n")
+    val (df, _) = CsvIngest.readCsvTable(spark, p)
+    val names = df.columns.filterNot(_ == CsvIngest.RowIdCol).toSeq
+    assert(names == Seq("aeterm", "AETERM_1", "Aeterm_1_1"))
+    assert(df.select(names.map(n => org.apache.spark.sql.functions.col(n)): _*).head().toSeq ==
+      Seq("low", "UP", "mixed"))
   }
 
   test("shape validation flags empties and wide frames") {
