@@ -34,6 +34,27 @@ object Graft {
     spark
   }
 
+  /** The session a study's plans run on: a clone of `spark`, so the
+    * caller's session is never changed. `interpreted` plans without
+    * whole-stage code generation and evaluates expressions interpreted;
+    * otherwise the clone keeps `spark`'s conf. A study pass is mostly
+    * fixed cost, and most of it Janino compiles that a study's few rows
+    * never repay: one cold `clinical_study` pass over a generated EDC study
+    * (perfbench `studygen.py`, 4-core VM) compiles 43 classes instead of
+    * 257–270. Interpreted vs compiled wall time by the size of the study's
+    * source files: 0.56 MB (150 subjects) −29 %, 5.6 MB (1,500) −14 %,
+    * 16.7 MB (4,500) −3 % (3 pairs, 37.6 vs 38.7 s), 29.7 MB (8,000)
+    * +12 % (3 pairs, 50.2 vs 44.7 s: export slower), 56 MB (15,000) +6 %.
+    * Studies that large are not benchmarked yet (ROADMAP direction 3). */
+  def studySession(spark: SparkSession, interpreted: Boolean): SparkSession = {
+    val s = org.apache.spark.sql.GraftBridge.cloneSession(spark)
+    if (interpreted) {
+      s.conf.set("spark.sql.codegen.wholeStage", "false")
+      s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    }
+    s
+  }
+
   /** Load one testdata table (TESTDATA.md). The testdata files are
     * single-row-group parquet (one split, so map-side work before the
     * first exchange is single-core); the fanout fix for that lives in

@@ -4,13 +4,17 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 
 /** The measurement tools over the registered queries, one main:
   *  - `time <sfDir> <rounds> <query> [query ...]`: [[Bench.runShard]] with no
-  *    round budget and no demotion; prints median and min seconds, no
-  *    contract line. pipe2/d16 at sf0.1 on local[32] need SPARK_DRIVER_MEM=16g.
+  *    round budget and no demotion; prints median and min seconds, and the
+  *    Janino compiles and compile milliseconds of one cold run made first
+  *    on a session of its own ([[compiles]]); no contract line. pipe2/d16
+  *    at sf0.1 on local[32] need SPARK_DRIVER_MEM=16g.
   *  - `plan [-v] [sfDir] [query ...]`: runs each query and prints its
   *    [[PlanFacts]] line; `-v` adds the final plan.
   *  - `dump <sfDir> <outDir> <suffix> [query ...]`: writes each query's
@@ -24,7 +28,8 @@ object Tools {
   def main(args: Array[String]): Unit = {
     val failed = args.toList match {
       case "time" :: sfDir :: rounds :: names if names.nonEmpty =>
-        time(sfDir, rounds.toInt, queryNames(names))
+        val resolved = queryNames(names)
+        time(sfDir, rounds.toInt, resolved, withSession(compiles(_, sfDir, resolved)))
       case "plan" :: rest =>
         val (verbose, positional) = rest.partition(_ == "-v")
         val names = queryNames(positional.drop(1))
@@ -48,7 +53,7 @@ object Tools {
     if (requested.isEmpty) SparkEntry.queries.keys.toVector.sorted else requested.toVector
   }
 
-  private def withSession(body: SparkSession => Seq[String]): Seq[String] = {
+  private def withSession[A](body: SparkSession => A): A = {
     val spark = Graft.session("graft-tools")
     try body(spark) finally spark.stop()
   }
@@ -62,16 +67,38 @@ object Tools {
         println(f"$q%-22s ERROR ${String.valueOf(e.getMessage).take(120)}"); true }
     }
 
-  private def time(sfDir: String, rounds: Int, names: Vector[String]): Seq[String] = {
+  /** Each query's Janino compiles and their milliseconds over one run on
+    * `spark`, in order: the deltas of Spark's compile counter
+    * (`CodegenMetrics.METRIC_COMPILATION_TIME`) and of the compile time the
+    * same step adds to (`CodeGenerator.compileTime`). On a fresh session
+    * that is the code generation a query's first run pays; a failed run
+    * counts what it compiled before it failed. */
+  private[graft] def compiles(spark: SparkSession, sfDir: String,
+      names: Seq[String]): Map[String, (Long, Double)] =
+    names.map { q =>
+      val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+      try SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case NonFatal(_) => () } // the timed rounds report it FAILED
+      spark.catalog.clearCache()
+      q -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+        (CodeGenerator.compileTime - ns0) / 1e6)
+    }.toMap
+
+  private def time(sfDir: String, rounds: Int, names: Vector[String],
+      cold: Map[String, (Long, Double)]): Seq[String] = {
     val res = Bench.runShard(names, sfDir, rounds, budgetSecs = Double.MaxValue,
       demoteSecs = Double.MaxValue, partialSink = None)
     println(f"sentinel [${res.sentinelBefore}%.3f, ${res.sentinelAfter}%.3f]")
     res.stats.foreach { s =>
       if (s.rounds == 0) println(s"${s.name} FAILED")
-      else println(f"${s.name}%-24s med=${s.med}%8.3f min=${s.min}%8.3f rounds=${s.rounds}")
+      else println(timeLine(s, cold(s.name)))
     }
     res.stats.filter(_.rounds == 0).map(_.name)
   }
+
+  private[graft] def timeLine(s: Bench.QueryStat, cold: (Long, Double)): String =
+    f"${s.name}%-24s med=${s.med}%8.3f min=${s.min}%8.3f rounds=${s.rounds}" +
+      f" compiles=${cold._1}%d compile_ms=${cold._2}%.1f"
 
   private[graft] def plan(spark: SparkSession, sfDir: String, names: Seq[String],
       verbose: Boolean): Seq[String] =

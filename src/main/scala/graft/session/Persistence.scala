@@ -22,7 +22,8 @@ case class ProjectSnapshot(
     omitted: Map[String, Seq[String]],
     sourceHashes: Map[String, String],
     standard: String = "sdtm", // implementation guide the study is authored against
-    ctVersion: String = null)  // CT publication pin (v3+; null = legacy file)
+    ctVersion: String = null,  // CT publication pin (v3+; null = legacy file)
+    notCollected: Map[String, Seq[String]] = Map.empty) // domain → NotCollected variables (v4+)
 
 /**
  * K4 — project persistence (`crates/tss-persistence/src/io/save.rs:78-106`,
@@ -50,8 +51,9 @@ object Persistence {
   // v2 adds `standard` (v1 files load as SDTM); v3 adds `ctVersion`
   // (v1/v2 files load as 2025-03-28 — the ONLY publication those builds
   // embedded, so a reopened legacy project keeps resolving exactly the
-  // terminology it was authored against, not the new default)
-  val FormatVersion = 3
+  // terminology it was authored against, not the new default); v4 adds
+  // `notCollected` (v1–v3 files load with no marks)
+  val FormatVersion = 4
 
   /** `types/mod.rs:36` — 3 id bytes + one format-generation byte. */
   val MagicBytes: Array[Byte] = Array('G'.toByte, 'T'.toByte, 'S'.toByte, 0x01.toByte)
@@ -133,11 +135,13 @@ object Persistence {
     val snap = mapper.readValue(json, classOf[ProjectSnapshot])
     // absent fields from older formats load as null: v1 predates the
     // standard selector (null = SDTM), v1/v2 predate the CT version pin
-    // (null = 2025-03-28, the publication those builds embedded). A v3+
-    // file declared the pin at save time, so a null there is corruption —
-    // fail fast rather than silently resolving against a pin the study
-    // was never authored with.
-    val s1 = if (snap.standard == null) snap.copy(standard = "sdtm") else snap
+    // (null = 2025-03-28, the publication those builds embedded), v1–v3
+    // predate NotCollected marks (null = none). A v3+ file declared the
+    // pin at save time, so a null there is corruption — fail fast rather
+    // than silently resolving against a pin the study was never authored
+    // with.
+    val s0 = if (snap.notCollected == null) snap.copy(notCollected = Map.empty) else snap
+    val s1 = if (s0.standard == null) s0.copy(standard = "sdtm") else s0
     if (s1.ctVersion == null) {
       if (s1.formatVersion >= 3)
         throw new IllegalArgumentException(
@@ -176,6 +180,8 @@ object Persistence {
       }.toMap,
       omitted = session.domainCodes.map(c =>
         c -> session.domainState(c).get.mapping.omitted.toSeq.sorted).toMap,
+      notCollected = session.domainCodes.map(c =>
+        c -> session.domainState(c).get.mapping.notCollected.toSeq.sorted).toMap,
       sourceHashes = assignments.map { case (d, f) =>
         d -> sha256(Paths.get(folder, f).toString)
       },

@@ -39,7 +39,8 @@ case class DomainState(
  */
 class StudySession(val spark: SparkSession, val studyId: String,
     val standard: String = "sdtm",
-    val ctVersion: String = Standards.DefaultCtVersion) {
+    val ctVersion: String = Standards.DefaultCtVersion,
+    private[graft] val compiled: Boolean = false) {
 
   require(Standards.CtVersions.contains(ctVersion),
     s"unknown CT version '$ctVersion' (embedded: ${Standards.CtVersions.mkString(", ")})")
@@ -58,6 +59,10 @@ class StudySession(val spark: SparkSession, val studyId: String,
     scala.collection.mutable.Map[String, Seq[(String, SuppColumnConfig)]]()
   private var itemsMetadata: Map[String, ItemMeta] = Map.empty
   private var studyCodelists: Map[String, Map[String, String]] = Map.empty
+
+  // every plan of the study runs on this clone of `spark`, interpreted
+  // ([[graft.Graft.studySession]]); `compiled` keeps Spark's code generation
+  private val planSession: SparkSession = graft.Graft.studySession(spark, interpreted = !compiled)
 
   /** Unsaved-change tracking for debounced auto-save (K4 —
     * `autosave/tracker.rs`). Session-level mutators mark it automatically;
@@ -93,7 +98,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
     // read never sees torn state — holding it across whole Spark jobs
     // would block every snapshot (and every other mutator) for the full
     // ingest. Only the shared-map writes below synchronize.
-    val (df, _) = CsvIngest.readCsvTable(spark, itemsCsvPath, itemsHeaderRows)
+    val (df, _) = CsvIngest.readCsvTable(planSession, itemsCsvPath, itemsHeaderRows)
     val dataCols = df.columns.filterNot(_ == CsvIngest.RowIdCol)
     val scores = ItemsMetadata.analyzeColumns(
       df.select(dataCols.toIndexedSeq.map(sourceCol): _*))
@@ -101,7 +106,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
       .map(schema => ItemsMetadata.loadItems(df, schema))
     val itemsForRouting = detected.getOrElse(itemsMetadata)
     val fromCsv = codeListsCsvPath.map { p =>
-      val (cdf, _) = CsvIngest.readCsvTable(spark, p, codeListsHeaderRows)
+      val (cdf, _) = CsvIngest.readCsvTable(planSession, p, codeListsHeaderRows)
       val byFormat = ItemsMetadata.loadCodelists(cdf.drop(CsvIngest.RowIdCol))
       itemsForRouting.values.flatMap(m => m.formatName.flatMap(f =>
         byFormat.get(Codelist.fold(f)).map(m.id -> _))).toMap
@@ -153,7 +158,7 @@ class StudySession(val spark: SparkSession, val studyId: String,
   private def buildDomainState(code: String, csvPath: String,
       headerRows: Int): DomainState = {
     val codeU = Codelist.fold(code)
-    val (raw, headers) = CsvIngest.readCsvTable(spark, csvPath, headerRows)
+    val (raw, headers) = CsvIngest.readCsvTable(planSession, csvPath, headerRows)
     val augmented = if (codeU == "RELSUB") Reshape.ensureRelsubBidirectional(raw) else raw
     // M1/M2 — study-codelist decode for coded columns present in the frame
     val decodeable = studyCodelists.filter { case (c, _) => augmented.columns.contains(c) }

@@ -18,6 +18,12 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A new session over `spark`'s context and shared state (cache manager
+    * included) that starts from a copy of its conf, functions and temp
+    * views; a conf set on either never reaches the other. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Drain the async SparkListener bus — lets tests make deterministic
     * negative assertions ("no job ran") without sleeping. */
   def waitForListenerBus(spark: SparkSession): Unit =

@@ -100,6 +100,17 @@ class DocHygieneSpec extends AnyFunSuite {
       "conf keys under src/main: " + found.mkString(", "))
   }
 
+  test("codegen conf is set only in Graft.scala, on a cloned session") {
+    // split needles, as above: a codegen switch outside the one study
+    // session helper changes plans beyond the studies it was measured for,
+    // and a clone made elsewhere is a second, unmeasured conf
+    def filesWith(needle: String) = scalaSources("src/main/scala")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
+      .map(_.getFileName.toString).sorted
+    assert(filesWith("spark.sql." + "codegen.") == Seq("Graft.scala"))
+    assert(filesWith("clone" + "Session") == Seq("Graft.scala", "GraftBridge.scala"))
+  }
+
   test("one thread pool in src/main: StudySession's fan-out helper") {
     // split needle, as above: a second pool restates the concurrency policy
     // (bound, unwrap, cancel-and-drain, abandon) — call the helper instead

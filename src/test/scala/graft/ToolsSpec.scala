@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** The tools main: one name resolver in front of every subcommand, the
-  * `plan` facts lines and the `dump` explain files. */
+  * `time` compile fields, the `plan` facts lines and the `dump` explain
+  * files. */
 class ToolsSpec extends SparkSpec {
 
   private val sfDir = SparkEntry.smokeSfDir
@@ -42,6 +43,15 @@ class ToolsSpec extends SparkSpec {
       "q1_agg                 pushedFilters=0 bhj=0 smj=0 bnl=0 wscg=3 exchange=2 unpartWin=0",
       "t1_token_counts        pushedFilters=0 bhj=0 smj=0 bnl=0 wscg=2 exchange=1 unpartWin=0",
       "d7_emb_neardup         pushedFilters=4 bhj=1 smj=0 bnl=0 wscg=12 exchange=3 unpartWin=0"))
+  }
+
+  test("time counts each query's Janino compiles and prints them after its timings") {
+    assume(haveData)
+    val cold = Tools.compiles(spark, sfDir, Seq("q1_agg", "t1_token_counts"))
+    assert(cold.keySet == Set("q1_agg", "t1_token_counts"))
+    cold.values.foreach { case (n, ms) => assert(n >= 0 && ms >= 0 && (n > 0 || ms == 0), cold) }
+    assert(Tools.timeLine(Bench.QueryStat("q1_agg", 0.5, 0.25, 3), (12L, 34.56)) ==
+      "q1_agg                   med=   0.500 min=   0.250 rounds=3 compiles=12 compile_ms=34.6")
   }
 
   test("dump writes each query's formatted pre-execution explain") {

@@ -27,9 +27,9 @@ class GoldenCorpusSpec extends GoldenHarness {
   val goldensFile = "goldens.txt"
   val expectedDefineFile = "expected_define.xml"
 
-  private def buildSession(): StudySession = {
+  private def buildSession(compiled: Boolean = false): StudySession = {
     val dir = resourceDir
-    val s = new StudySession(spark, "GOLD1", ctVersion = "2025-03-28")
+    val s = new StudySession(spark, "GOLD1", ctVersion = "2025-03-28", compiled = compiled)
     s.loadItemsMetadata(dir.resolve("GOLD1_Items.csv").toString,
       codeListsCsvPath = Some(dir.resolve("GOLD1_CodeLists.csv").toString),
       itemsHeaderRows = 2)
@@ -98,5 +98,15 @@ class GoldenCorpusSpec extends GoldenHarness {
   test("golden export: byte-stable across two consecutive runs") {
     val second = exportHashes(buildSession(), "target/tmp/golden_out2")
     assert(second == firstExport)
+  }
+
+  test("interpreted and compiled plans give the same artifacts and issues") {
+    // this small study plans interpreted; `compiled` keeps Spark's codegen
+    val interpreted = buildSession()
+    val compiled = buildSession(compiled = true)
+    assert(exportHashes(compiled, "target/tmp/golden_out_compiled") == firstExport)
+    for (code <- interpreted.domainCodes)
+      assert(compiled.validate(code) == interpreted.validate(code), code)
+    assert(compiled.validateCross() == interpreted.validateCross())
   }
 }

@@ -33,11 +33,13 @@ class PersistencePropertySpec extends AnyFunSuite {
       domains.map(d => strMap.map(d -> _))).map(_.toMap)
     omitted <- Gen.sequence[List[(String, Seq[String])], (String, Seq[String])](
       domains.map(d => Gen.listOf(str).map(l => d -> l.take(4)))).map(_.toMap)
+    notCollected <- Gen.sequence[List[(String, Seq[String])], (String, Seq[String])](
+      domains.map(d => Gen.listOf(str).map(l => d -> l.take(3)))).map(_.toMap)
     hashes <- strMap
     standard <- Gen.oneOf("sdtm", "send", "adam")
     ctVersion <- Gen.oneOf(graft.standards.Standards.CtVersions)
   } yield ProjectSnapshot(version, studyId, assignments, mappings, omitted, hashes,
-    standard, ctVersion)
+    standard, ctVersion, notCollected)
 
   test("binary container round-trips arbitrary snapshots bit-exactly") {
     val dir = Files.createTempDirectory("persist_prop")

@@ -18,7 +18,8 @@ class PersistenceSpec extends AnyFunSuite {
     omitted = Map("DM" -> Seq("DROPME")),
     sourceHashes = Map("DM" -> ("ab" * 32)),
     standard = "send",
-    ctVersion = "2025-09-26")
+    ctVersion = "2025-09-26",
+    notCollected = Map("DM" -> Seq("ETHNIC", "RACE")))
 
   private def tmpPath(name: String): String = {
     Files.createDirectories(Paths.get("target/tmp"))
@@ -69,6 +70,16 @@ class PersistenceSpec extends AnyFunSuite {
     Files.write(Paths.get(p2), v2.getBytes("UTF-8"))
     assert(Persistence.load(p2).ctVersion == "2025-03-28")
     assert(Persistence.load(p2).standard == "send")
+  }
+
+  test("v1–v3 snapshots predate NotCollected marks and load with none") {
+    for (v <- 1 to 3) {
+      val json = s"""{"formatVersion":$v,"studyId":"OLD$v","assignments":{},
+        "mappings":{},"omitted":{},"sourceHashes":{},"ctVersion":"2025-03-28"}"""
+      val p = tmpPath(s"persist_v${v}_nonc.json")
+      Files.write(Paths.get(p), json.getBytes("UTF-8"))
+      assert(Persistence.load(p).notCollected == Map.empty)
+    }
   }
 
   test("v3 snapshot with missing ctVersion is rejected, not backfilled") {

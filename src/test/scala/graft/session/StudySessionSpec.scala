@@ -100,6 +100,31 @@ class StudySessionSpec extends SparkSpec {
     assert(orphan.get.samples == Seq("GRAFT1-999"))
   }
 
+  private def codegenStages(df: org.apache.spark.sql.DataFrame): Int = {
+    df.collect() // under AQE the plan is only final once it has run
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+      }.size
+  }
+
+  test("a study plans without whole-stage codegen; the caller's session keeps it") {
+    assert(codegenStages(session.preview("DM").get) == 0)
+    // the same domains with the caller's codegen conf do plan it
+    val compiled = new StudySession(spark, "GRAFT1", compiled = true)
+    compiled.addDomain("DM", Paths.get(studyDir, "dm.csv").toString)
+    compiled.addDomain("AE", Paths.get(studyDir, "ae.csv").toString)
+    // every domain plans on the study's one clone, never on the caller's session
+    val planned = compiled.domainCodes.map(c => compiled.domainState(c).get.source.sparkSession)
+    assert(planned.distinct.size == 1 && !(planned.head eq spark))
+    assert(codegenStages(compiled.preview("DM").get) > 0)
+    compiled.domainCodes.foreach(c => compiled.domainState(c).get.source.unpersist())
+    // create never changed the caller's session
+    assert(spark.conf.get("spark.sql.codegen.wholeStage") == "true")
+    assert(spark.conf.get("spark.sql.codegen.factoryMode") == "FALLBACK")
+    assert(codegenStages(spark.range(100).selectExpr("id * 2 AS x").where("x > 10")) > 0)
+  }
+
   test("E2: a NotCollected mark silences its variable's Expected warning") {
     val s = StudySession.create(spark, "NC1", studyDir, Map("DM" -> "dm.csv"))
     def expectedIssues = s.validate("DM").filter(i => i.variable == "RACE" &&
@@ -110,6 +135,10 @@ class StudySessionSpec extends SparkSpec {
     assert(mapping.markNotCollected("RACE") == Right(()))
     assert(mapping.notCollected == Set("RACE"))
     assert(expectedIssues.isEmpty, "a NotCollected variable still warns")
+    // the mark survives a project save: the snapshot records it
+    val path = "target/tmp/study_nc.tss"
+    Persistence.save(Persistence.snapshotOf(s, studyDir, Map("DM" -> "dm.csv")), path)
+    assert(Persistence.load(path).notCollected == Map("DM" -> Seq("RACE")))
     s.domainCodes.foreach(c => s.domainState(c).get.source.unpersist())
   }
 
