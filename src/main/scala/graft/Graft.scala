@@ -45,7 +45,8 @@ object Graft {
     * source files: 0.56 MB (150 subjects) −29 %, 5.6 MB (1,500) −14 %,
     * 16.7 MB (4,500) −3 % (3 pairs, 37.6 vs 38.7 s), 29.7 MB (8,000)
     * +12 % (3 pairs, 50.2 vs 44.7 s: export slower), 56 MB (15,000) +6 %.
-    * Studies that large are not benchmarked yet (ROADMAP direction 3). */
+    * Studies that large are not benchmarked yet: the workload is ROADMAP
+    * direction 8(a), the size switch direction 10. */
   def studySession(spark: SparkSession, interpreted: Boolean): SparkSession = {
     val s = org.apache.spark.sql.GraftBridge.cloneSession(spark)
     if (interpreted) {

@@ -1,24 +1,24 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.Graft.table
 import graft.sinks.XmlSinks
 
 /**
- * Sink-side data aggregates (SURVEY §2.1 K1/K3): the per-variable
- * max-observed-length and has-collected-data pass every export sink runs
- * before writing — the only cluster job in the sinks, so it gets its own
- * oracle. The writers themselves are pinned byte-/string-level in ScalaTest
- * (XptSpec round trips, XmlSinksSpec structure).
+ * Sink-side data facts (SURVEY §2.1 K1/K3): the per-variable
+ * max-observed-length and has-collected-data that the export's one read of
+ * each dataset ([[XmlSinks.facts]]) gives the XPT and Define-XML writers,
+ * so they get their own oracle. The writers themselves are pinned
+ * byte-/string-level in ScalaTest (XptSpec round trips, XmlSinksSpec
+ * structure).
  */
 object SinkQueries {
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "k1_varstats" -> ((s, dir) => {
       val d = table(s, dir, "documents")
-      val stats = XmlSinks.varStats(d, Seq("lang", "source", "text"))
+      val stats = XmlSinks.facts(d.select("lang", "source", "text")).stats
       import s.implicits._
       Seq("lang", "source", "text").map { c =>
         (c, stats(c).maxLength, stats(c).hasData)

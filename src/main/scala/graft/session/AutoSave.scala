@@ -75,7 +75,6 @@ final class DirtyTracker(clock: () => Long = DirtyTracker.monotonicMs) {
   /** A failed save stays dirty so the next tick retries. */
   def saveFailed(): Unit = synchronized { saving = false }
 
-  def msSinceLastChange: Option[Long] = synchronized(lastChange.map(clock() - _))
   def msSinceFirstUnsaved: Option[Long] =
     synchronized(firstUnsavedChange.map(clock() - _))
 

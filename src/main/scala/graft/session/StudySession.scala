@@ -11,7 +11,7 @@ import graft.Graft.sourceCol
 import graft.operators._
 import graft.sinks.{CtStandard, XmlSinks, XmlVariable, XmlCodelist, XptWriter}
 import graft.sources.{CsvIngest, ItemMeta, ItemsMetadata}
-import graft.standards.{Codelist, SdtmDomain, SdtmVariable, Standards, VariableType}
+import graft.standards.{Codelist, SdtmDomain, Standards, VariableType}
 
 /** Per-domain state inside a session (DomainState —
   * `crates/tss-gui/src/service/study.rs:122-142`). */
@@ -30,9 +30,9 @@ case class DomainState(
  *  - E2 preview+validate: normalization is a single unexecuted projection;
  *    validation fires one fused aggregate per domain + study-wide
  *    anti-joins whose join strategy Spark chooses;
- *  - E3 export: per-domain XPT / Dataset-XML / Define-XML with one
- *    stats aggregate per domain feeding the writers, and SUPP-- datasets
- *    built from the same cached normalized frames.
+ *  - E3 export: per-domain XPT / Dataset-XML / Define-XML, and SUPP--
+ *    datasets built from the same cached normalized frames; each dataset's
+ *    rows are read once for the facts all its writers share.
  *
  * Mirrors `service/study.rs:27-153`, `service/preview.rs:46-86`,
  * `service/export.rs:127-276`.
@@ -191,17 +191,6 @@ class StudySession(val spark: SparkSession, val studyId: String,
     dirtyTracker.markDirty()
   }
 
-  /** Accept every scorer suggestion (the auto-accept path used in tests
-    * and batch pipelines; interactive flows call mapping.acceptManual). */
-  def acceptAllSuggestions(code: String): Unit = stateLock.synchronized {
-    domainState(code).foreach { ds =>
-      domainMetaFor(ds.code).foreach(_.variables.foreach { v =>
-        ds.mapping.acceptSuggestion(v.name) // no-op unless Suggested
-      })
-      dirtyTracker.markDirty()
-    }
-  }
-
   /** One auto-save tick (`autosave/tracker.rs:95-106` + `io/save.rs`):
     * persist a snapshot iff the debounce policy says the session is due.
     * Returns true when a save happened. A failed save keeps the session
@@ -300,15 +289,17 @@ class StudySession(val spark: SparkSession, val studyId: String,
     * then the SUPP-- `.xpt`s in parent-code order, then `define.xml`.
     *
     * The sink work is ONE ordered task list on the session's fan-out
-    * ([[StudySession.inParallel]]): per domain a stats+XPT+Define-row task
-    * and a Dataset-XML task, then one task per SUPP-- dataset. No task ever
-    * waits on another, so the long pole (the largest domain's Dataset-XML)
-    * overlaps everything else instead of the whole export running serially.
-    * Each domain's normalized frame is cached once and shared by its two
-    * sinks and its SUPP-- join. All session-state reads (previews,
-    * metadata, SUPP configs and template, the DM reference date) happen on
-    * the caller's thread BEFORE the fork; the tasks touch only their own
-    * frames and write paths, and every output byte is assembled in task
+    * ([[StudySession.inParallel]]): one task per dataset, domain or SUPP--,
+    * and no task waits on another. A task reads its dataset's rows once
+    * ([[XmlSinks.facts]]), writes the XPT with the char lengths that read
+    * observed, then (domains only) the Dataset-XML numbered from its
+    * partition counts, and returns its Define-XML row with the same stats,
+    * so the three artifacts can never disagree. Each domain's normalized
+    * frame is cached once, sorted, and shared by its sinks and its SUPP--
+    * join. All session-state reads (previews, metadata, codelists, SUPP
+    * configs and template, the DM reference date) and every plan happen on
+    * the caller's thread BEFORE the fork; the tasks only run their plans
+    * and write their own paths, and every output byte is assembled in task
     * order afterwards, so the produced files are identical to a serial
     * loop's (golden SHA-256 pins). */
   def exportAll(outDir: String): Seq[String] = {
@@ -320,19 +311,41 @@ class StudySession(val spark: SparkSession, val studyId: String,
     val exportable = domainCodes.sorted.filter(c =>
       domainMetaFor(c).isDefined && domainState(c).isDefined)
 
+    // one dataset to export: its rows in export order, the same rows as
+    // the XPT types them with the XPT's variable labels, the reference-data
+    // flag of its Dataset-XML (domains only), and its Define-XML row
+    // awaiting the stats
+    case class Export(rows: DataFrame, xpt: DataFrame, labels: Map[String, String],
+        datasetXml: Option[Boolean], define: XmlSinks.DefineDataset)
+
+    // a Define-XML row, the same for domain and SUPP-- datasets: the
+    // variables of `d` the rows carry, in role order; with `codelists`,
+    // each one's codelist the CT catalog can define (a CodeListRef without
+    // a matching CodeList element is a broken OID that fails define.xml
+    // validation). SUPP-- datasets carry no CodeListRefs
+    def defineRow(name: String, code: String, d: SdtmDomain, rows: DataFrame,
+        klass: String, isRefData: Boolean, codelists: Boolean) =
+      XmlSinks.DefineDataset(name, baseDomainCode(code), d.label.getOrElse(name),
+        d.structure.getOrElse(""), d.className.getOrElse(klass),
+        d.variablesByRole.filter(v => rows.columns.contains(v.name)).map(v =>
+          XmlVariable(v.name, v.label.getOrElse(""),
+            isNumeric = v.dataType == VariableType.Num,
+            required = v.isRequired, identifier = v.isIdentifier, expected = v.isExpected,
+            codelistOid = v.firstCodelistCode.filter(c => codelists && ct.get(c).isDefined)
+              .map(c => s"CL.$c"))),
+        stats = Map.empty, isReferenceData = isRefData)
+
     // per-domain plan + metadata, resolved serially (cheap, driver-only);
     // building the previews here also materializes the DM reference-date
     // memo on this thread — the forked tasks below only run the plans
-    case class DomainPlan(code: String, domain: SdtmDomain, frame: DataFrame,
-        presentVars: Seq[SdtmVariable], isRefData: Boolean)
-    val plans = exportable.map { code =>
+    val frames = exportable.map { code =>
+      // cached PRE-SORTED by the export order: every sink writes its rows
+      // in the frame's order, so caching the sorted frame pays that global
+      // sort once (bytes unchanged: the golden SHA-256 pins cover them)
+      code -> preview(code).get.orderBy(col(CsvIngest.RowIdCol)).cache()
+    }
+    val domainExports = frames.map { case (code, frame) =>
       val domain = domainMetaFor(code).get
-      // cached PRE-SORTED by the export order: both sinks (XPT `typed`,
-      // Dataset-XML's orderCol) sort by _row_id — caching the sorted frame
-      // pays that global sort once and the cached plan's outputOrdering
-      // satisfies both sinks' Sort requirements (bytes unchanged: the
-      // golden SHA-256 pins cover both artifacts)
-      val frame = preview(code).get.orderBy(col(CsvIngest.RowIdCol)).cache()
       val presentVars = domain.orderedVariables.filter(v => frame.columns.contains(v.name))
       // Trial Design / Study Reference datasets are reference data, not
       // subject data (is_reference_domain — export/common.rs:74-80): they
@@ -340,153 +353,90 @@ class StudySession(val spark: SparkSession, val studyId: String,
       // def:IsReferenceData="Yes" in Define-XML
       val isRefData = domain.className.exists(c =>
         c.equalsIgnoreCase("Trial Design") || c.equalsIgnoreCase("Study Reference"))
-      DomainPlan(code, domain, frame, presentVars, isRefData)
+      val rows = frame.select(presentVars.map(v => col(v.name)): _*)
+      // XPT: numeric SDTM vars ride as doubles; file order = source order.
+      // try_cast, not cast: normalization emits UNMAPPED variables as empty
+      // strings (the reference's total-function behavior), and under ANSI a
+      // plain cast of "" aborts the export — empty/unparseable numeric
+      // cells are missing values, exactly what XptWriter writes for a null
+      // (its own string fallback uses Numerics.parse the same way)
+      val xpt = rows.select(presentVars.map { v =>
+        if (v.dataType == VariableType.Num) col(v.name).try_cast("double").as(v.name)
+        else col(v.name)
+      }: _*)
+      Export(rows, xpt, presentVars.map(v => v.name -> v.label.getOrElse(v.name)).toMap,
+        Some(isRefData), defineRow(code, code, domain, rows, "", isRefData, codelists = true))
     }
 
-    // SUPP-- plans: the parent's plan, raw source and configs, and the
-    // SUPPQUAL template clone that names, labels and describes the dataset
-    // (the SDTM-IG template is embedded, so every standard resolves one)
+    // SUPP-- datasets: source extras joined on _row_id to the USUBJID/SEQ
+    // of the parent's cached normalized frame, unpivoted via stack (G1),
+    // named, labelled and described by a SUPPQUAL template clone (the
+    // SDTM-IG template is embedded, so every standard resolves one)
     lazy val suppTemplate = Standards.domain(standard, "SUPPQUAL")
       .orElse(Standards.domain("SUPPQUAL")).get
-    val supps = suppConfigs.toSeq.sortBy(_._1).flatMap { case (code, configs) =>
-      plans.find(_.code == code).map(p => (p, domains(code).source, configs,
-        suppTemplate.asSuppDomain(code, p.domain.label)))
-    }
-
-    // one task's share of the package: the file it wrote, its Define-XML
-    // row, and the codelists that row references
-    case class Part(path: Option[String], define: Option[XmlSinks.DefineDataset],
-        codelists: Seq[String] = Nil)
-
-    val domainTasks = plans.flatMap { p =>
-      val fileStem = s"$outDir/${p.code.toLowerCase(Locale.ROOT)}"
-      Seq(
-        // the shared stats aggregate, then XPT (which needs the observed
-        // char lengths) and the DefineDataset row
-        () => {
-          val varNames = p.presentVars.map(_.name)
-          // ONE stats aggregate per domain feeds both writers: the XPT
-          // observed lengths and the Define-XML maxLength/has_data come
-          // from the same numbers, so the two artifacts can never
-          // disagree (and export runs one scan fewer per domain)
-          val stats = XmlSinks.varStats(p.frame, varNames)
-          val charLengths = p.presentVars.filter(_.dataType != VariableType.Num)
-            .flatMap(v => stats.get(v.name).map(s => v.name -> math.max(s.maxLength, 1)))
-            .toMap
-          // XPT (numeric SDTM vars ride as doubles; file order = source
-          // order). try_cast, not cast: normalization emits UNMAPPED
-          // variables as empty strings (the reference's total-function
-          // behavior), and under ANSI a plain cast of "" aborts the
-          // export — empty/unparseable numeric cells are missing values,
-          // exactly what XptWriter writes for a null (its own string
-          // fallback uses Numerics.parse the same way)
-          val typed = p.frame.orderBy(col(CsvIngest.RowIdCol)).select(p.presentVars.map { v =>
-            if (v.dataType == VariableType.Num) col(v.name).try_cast("double").as(v.name)
-            else col(v.name)
-          }: _*)
-          // same label fallback as the DefineDataset below — XPT and
-          // Define-XML must agree on the dataset label
-          XptWriter.writeDataFrame(typed, s"$fileStem.xpt",
-            p.code, p.domain.label.getOrElse(p.code),
-            labels = p.presentVars.map(v => v.name -> v.label.getOrElse(v.name)).toMap,
-            declaredLengths = charLengths)
-          val codes = Seq.newBuilder[String]
-          val define = XmlSinks.DefineDataset(
-            name = p.code, domain = baseDomainCode(p.code),
-            label = p.domain.label.getOrElse(p.code),
-            structure = p.domain.structure.getOrElse(""),
-            klass = p.domain.className.getOrElse(""),
-            isReferenceData = p.isRefData,
-            variables = p.domain.variablesByRole
-              .filter(v => p.frame.columns.contains(v.name))
-              .map { v =>
-                // only reference codelists the CT catalog can actually
-                // define — a CodeListRef without a matching CodeList
-                // element is a broken OID that fails define.xml validation
-                val resolved = v.firstCodelistCode.filter(c => ct.get(c).isDefined)
-                resolved.foreach(codes += _)
-                xmlVariable(v, resolved.map(c => s"CL.$c"))
-              },
-            stats = stats)
-          Part(Some(s"$fileStem.xpt"), Some(define), codes.result())
-        },
-        // Dataset-XML (independent of stats)
-        () => {
-          XmlSinks.writeDatasetXmlFile(p.frame, s"$fileStem.xml",
-            p.code, studyId, igVersion, p.presentVars.map(_.name),
-            orderCol = Some(CsvIngest.RowIdCol), isReferenceData = p.isRefData)
-          Part(Some(s"$fileStem.xml"), None)
-        })
-    }
-    // SUPP-- datasets: source extras joined on _row_id to the USUBJID/SEQ
-    // of the parent's cached normalized frame, unpivoted via stack (G1)
-    val suppTasks = supps.map { case (p, source, configs, suppDomain) => () =>
-      // a split dataset (LBCH) keys its SUPP-- on the parent domain: RDOMAIN
-      // and the --SEQ IDVAR are LB's (SDTMIG 3.4 §4.1.7)
-      val rdomain = baseDomainCode(p.code)
-      val idCols = Seq("USUBJID", s"${rdomain}SEQ").filter(p.frame.columns.contains)
-      // select ONLY the configured supp columns from the raw side: a
-      // source that itself carries USUBJID/--SEQ columns must not
-      // collide with the normalized ids on the join output
-      val suppSrcCols = (configs.map(_._1)
-        .filter(source.columns.contains)
-        .filterNot(idCols.contains) :+ CsvIngest.RowIdCol).distinct
-      val joined = source.select(suppSrcCols.map(sourceCol): _*).join(
-        p.frame.select((idCols :+ CsvIngest.RowIdCol).map(col): _*),
-        Seq(CsvIngest.RowIdCol))
-      Reshape.buildSupp(rdomain, studyId, joined, configs).fold(Part(None, None)) { supp =>
-        val path = s"$outDir/${suppDomain.name.toLowerCase(Locale.ROOT)}.xpt"
-        val label = suppDomain.label.getOrElse(suppDomain.name)
-        // one stats aggregate feeds both the XPT lengths and Define-XML,
-        // as on the per-domain path
-        val stats = XmlSinks.varStats(supp, supp.columns.toSeq)
-        XptWriter.writeDataFrame(supp.orderBy("QNAM", "USUBJID", "IDVARVAL"), path,
-          suppDomain.name, label,
-          declaredLengths = stats.map { case (v, st) => v -> math.max(st.maxLength, 1) })
-        // the define.xml must describe every dataset in the package —
-        // variables limited to the frame, no CodeListRefs
-        Part(Some(path), Some(XmlSinks.DefineDataset(
-          name = suppDomain.name, domain = rdomain,
-          label = label,
-          structure = suppDomain.structure.getOrElse(""),
-          klass = suppDomain.className.getOrElse("Relationship"),
-          variables = suppDomain.variablesByRole
-            .filter(v => supp.columns.contains(v.name)).map(xmlVariable(_, None)),
-          stats = stats)))
+    val suppExports = suppConfigs.toSeq.sortBy(_._1).flatMap { case (code, configs) =>
+      frames.find(_._1 == code).flatMap { case (_, frame) =>
+        val source = domains(code).source
+        // a split dataset (LBCH) keys its SUPP-- on the parent domain:
+        // RDOMAIN and the --SEQ IDVAR are LB's (SDTMIG 3.4 §4.1.7)
+        val rdomain = baseDomainCode(code)
+        val idCols = Seq("USUBJID", s"${rdomain}SEQ").filter(frame.columns.contains)
+        // select ONLY the configured supp columns from the raw side: a
+        // source that itself carries USUBJID/--SEQ columns must not
+        // collide with the normalized ids on the join output
+        val suppSrcCols = (configs.map(_._1)
+          .filter(source.columns.contains)
+          .filterNot(idCols.contains) :+ CsvIngest.RowIdCol).distinct
+        val joined = source.select(suppSrcCols.map(sourceCol): _*).join(
+          frame.select((idCols :+ CsvIngest.RowIdCol).map(col): _*),
+          Seq(CsvIngest.RowIdCol))
+        Reshape.buildSupp(rdomain, studyId, joined, configs).map { supp =>
+          val rows = supp.orderBy("QNAM", "USUBJID", "IDVARVAL")
+          val suppDomain = suppTemplate.asSuppDomain(code, domainMetaFor(code).get.label)
+          // the define.xml must describe every dataset in the package
+          Export(rows, rows, Map.empty, None, defineRow(suppDomain.name, code, suppDomain,
+            rows, "Relationship", isRefData = false, codelists = false))
+        }
       }
     }
+
+    // one task per dataset: ONE facts read of its rows, then its XPT with
+    // the char lengths that read observed, then (domains only) its
+    // Dataset-XML numbered from that read's partition counts
+    val exports = domainExports ++ suppExports
     val parts =
-      try StudySession.inParallel(spark, domainTasks ++ suppTasks)(_ => ())
-      finally plans.foreach(_.frame.unpersist())
+      try StudySession.inParallel(spark, exports.map { e => () =>
+        val stem = s"$outDir/${e.define.name.toLowerCase(Locale.ROOT)}"
+        val facts = XmlSinks.facts(e.rows)
+        XptWriter.writeDataFrame(e.xpt, s"$stem.xpt", e.define.name, e.define.label,
+          labels = e.labels, declaredLengths = facts.charLengths)
+        e.datasetXml.foreach(isRefData => XmlSinks.writeDatasetXmlFile(e.rows, facts,
+          s"$stem.xml", e.define.name, studyId, igVersion, isRefData))
+        (s"$stem.xpt" +: e.datasetXml.map(_ => s"$stem.xml").toSeq,
+          e.define.copy(stats = facts.stats))
+      })(_ => ())
+      finally frames.foreach(_._2.unpersist())
 
     // each codelist links to the CT publication it resolved from; the
     // distinct publications become the def:Standards section
     // (define_xml.rs:377-400: OID = STD.CT.{publishingSet}.{version})
     val ctStandards = scala.collection.mutable.LinkedHashMap[String, CtStandard]()
-    val codelists = parts.flatMap(_.codelists).distinct.flatMap(code =>
-      ct.getWithCatalog(code).map { case (cl, cat) =>
+    val codelists = parts.flatMap(_._2.variables.flatMap(_.codelistOid)).distinct.flatMap(oid =>
+      ct.getWithCatalog(oid.stripPrefix("CL.")).map { case (cl, cat) =>
         val stdOid = for (set <- cat.publishingSet; ver <- cat.version) yield {
           val oid = s"STD.CT.${XmlSinks.sanitizeOid(set)}.${XmlSinks.sanitizeOid(ver)}"
           ctStandards.getOrElseUpdate(oid,
             CtStandard(oid, "CDISC/NCI", set, ver))
           oid
         }
-        XmlCodelist(s"CL.$code", cl.name, cl.extensible,
+        XmlCodelist(oid, cl.name, cl.extensible,
           cl.terms.map(_.submissionValue).distinct, standardOid = stdOid)
       })
     val definePath = s"$outDir/define.xml"
     XmlSinks.writeDefineXmlFile(definePath, studyId, igVersion,
-      parts.flatMap(_.define), codelists, ctStandards.values.toSeq)
-    parts.flatMap(_.path) :+ definePath
+      parts.map(_._2), codelists, ctStandards.values.toSeq)
+    parts.flatMap(_._1) :+ definePath
   }
-
-  /** One variable's Define-XML ItemDef: the same for domain and SUPP--
-    * datasets, save the codelist reference SUPP-- never carries. */
-  private def xmlVariable(v: SdtmVariable, codelistOid: Option[String]): XmlVariable =
-    XmlVariable(v.name, v.label.getOrElse(""),
-      isNumeric = v.dataType == VariableType.Num,
-      required = v.isRequired, identifier = v.isIdentifier,
-      expected = v.isExpected, codelistOid = codelistOid)
 }
 
 object StudySession {

@@ -29,12 +29,13 @@ import graft.Publish
 private[sinks] object PartFiles {
 
   /** Write `rows` as the one file at `path`: `writePart` encodes one
-    * partition's rows onto its part stream and returns how many it wrote;
+    * partition's rows, given its index, onto its part stream and returns
+    * how many it wrote;
     * `head` runs before the parts, `tail` after them with the total row
     * count. Returns that total. */
   def assemble[T](rows: RDD[T], path: String, head: OutputStream => Unit,
       tail: (OutputStream, Long) => Unit)(
-      writePart: (Iterator[T], OutputStream) => Long): Long = {
+      writePart: (Int, Iterator[T], OutputStream) => Long): Long = {
     val partsDir = Paths.get(path + ".parts")
     deleteRecursively(partsDir)
     Files.createDirectories(partsDir)
@@ -43,7 +44,7 @@ private[sinks] object PartFiles {
       val manifest = rows.mapPartitionsWithIndex { (idx, it) =>
         val n = Publish.file(Paths.get(partsDirStr, partName(idx))) { ch =>
           val out = new BufferedOutputStream(Channels.newOutputStream(ch), 1 << 20)
-          val n = writePart(it, out)
+          val n = writePart(idx, it, out)
           out.flush()
           n
         }

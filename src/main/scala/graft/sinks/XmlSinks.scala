@@ -6,7 +6,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
+import org.apache.spark.sql.types.{DataType, StringType}
 
 import graft.Publish
 import graft.functions.Numerics
@@ -35,6 +37,13 @@ case class CtStandard(oid: String, name: String, publishingSet: String, version:
 /** Per-variable data-dependent stats feeding the writers. */
 case class VarStats(maxLength: Int, hasData: Boolean)
 
+/** What one read of a dataset's rows knows ([[XmlSinks.facts]]): each
+  * partition's row count, in partition order, and each column's stats. */
+case class DatasetFacts(partitionRows: IndexedSeq[Long], stats: Map[String, VarStats]) {
+  /** Each column's XPT char length: its max trimmed length, min 1. */
+  def charLengths: Map[String, Int] = stats.map { case (v, s) => v -> math.max(s.maxLength, 1) }
+}
+
 /**
  * K2/K3 — Dataset-XML and Define-XML 2.1 sinks (ODM-based CDISC formats;
  * shapes studied from `crates/tss-submit/src/export/dataset_xml.rs:67-165`
@@ -42,8 +51,9 @@ case class VarStats(maxLength: Int, hasData: Boolean)
  *
  * Division of labor at scale: everything data-dependent (max lengths,
  * has-collected-data, row rendering) is Spark-side; document assembly is
- * driver-side string building. Define-XML needs exactly ONE aggregate per
- * domain; Dataset-XML renders rows per partition into part files that the
+ * driver-side string building. ONE read of a dataset's rows
+ * ([[XmlSinks.facts]]) gives Define-XML, the XPT and Dataset-XML their
+ * numbers; Dataset-XML renders rows per partition into part files that the
  * driver concatenates into the single regulatory file ([[PartFiles]]).
  */
 object XmlSinks {
@@ -86,40 +96,72 @@ object XmlSinks {
     case o => Some(o.toString).filter(_.trim.nonEmpty)
   }
 
-  /** One fused aggregate: per variable max trimmed length + any-non-blank
-    * (`common.rs:83-159`), the only cluster job Define-XML needs. */
-  def varStats(df: DataFrame, vars: Seq[String]): Map[String, VarStats] = {
-    val present = vars.filter(df.columns.contains)
-    if (present.isEmpty) return Map.empty
-    val exprs = present.flatMap { c =>
-      val t = rtrim(coalesce(col(c).cast("string"), lit("")))
-      Seq(max(length(t)).as(s"${c}__len"),
-        max(when(trim(t) =!= "", 1).otherwise(0)).as(s"${c}__has"))
-    }
-    val row = df.agg(exprs.head, exprs.tail: _*).head()
-    present.map { c =>
-      c -> VarStats(
-        maxLength = Option(row.getAs[Integer](s"${c}__len")).map(_.toInt).getOrElse(0),
-        hasData = Option(row.getAs[Integer](s"${c}__has")).exists(_ > 0))
-    }.toMap
+  /** The export's one read of a dataset's rows: a fold over `rows.rdd` (a
+    * lazy val: the very RDD the writers then render) giving each
+    * partition's row count and, per column, the max
+    * `length(rtrim(coalesce(cast(c as string), '')))` and whether any
+    * `trim(...) <> ''` (`common.rs:83-159`), as Spark defines them: only
+    * U+0020 trims, lengths count code points, and a non-string cell is
+    * cast by Spark's `Cast` in the session time zone. A cell has data
+    * exactly when its rtrimmed text is non-empty: `hasData = maxLength > 0`. */
+  def facts(rows: DataFrame): DatasetFacts = {
+    val schema = rows.schema
+    val tz = rows.sparkSession.conf.get("spark.sql.session.timeZone")
+    val perPartition = rows.rdd.mapPartitions { it =>
+      val text = schema.fields.map(f => castText(f.dataType, tz))
+      val maxLength = new Array[Int](text.length)
+      var n = 0L
+      it.foreach { r =>
+        var i = 0
+        while (i < text.length) {
+          if (!r.isNullAt(i)) maxLength(i) = math.max(maxLength(i), trimmedLength(text(i)(r.get(i))))
+          i += 1
+        }
+        n += 1
+      }
+      Iterator.single((n, maxLength))
+    }.collect()
+    DatasetFacts(perPartition.map(_._1).toVector, schema.fieldNames.indices.map { i =>
+      val len = perPartition.map(_._2(i)).maxOption.getOrElse(0)
+      schema.fieldNames(i) -> VarStats(len, hasData = len > 0)
+    }.toMap)
+  }
+
+  /** `cast(v as string)` as Spark evaluates it for a cell of type `dt`. */
+  private def castText(dt: DataType, tz: String): Any => String = dt match {
+    case _: StringType => _.asInstanceOf[String]
+    case _ =>
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+      val cast = Cast(BoundReference(0, dt, nullable = true), StringType, Some(tz))
+      val cell = new GenericInternalRow(1)
+      v => { cell.update(0, toCatalyst(v)); cast.eval(cell).toString }
+  }
+
+  /** Spark's `length(rtrim(s))`: trailing U+0020 only, in code points. */
+  private def trimmedLength(s: String): Int = {
+    var end = s.length
+    while (end > 0 && s.charAt(end - 1) == ' ') end -= 1
+    s.codePointCount(0, end)
   }
 
   // ---- K2: Dataset-XML ------------------------------------------------------
 
   /**
-   * Write one domain as Dataset-XML: `ItemGroupData` per row with
-   * `data:ItemGroupDataSeq` = 1-based row index in `orderCol` order, one
+   * Write one domain as Dataset-XML: `ItemGroupData` per row, in the
+   * frame's order, with `data:ItemGroupDataSeq` = 1-based row number, one
    * `ItemData` per non-empty cell, `ItemOID = IT.<ds>.<var>`. Returns the
-   * row count.
+   * row count. `facts` is [[facts]] of this same frame: the sink renders
+   * `rows.rdd`, the RDD the fold read, numbering each partition's rows on
+   * from the fold's counts (a partition that renders another count fails).
    *
    * Each partition renders AND UTF-8-encodes its blocks into a part file
    * (per-value escape + string assembly is the expensive part of this
    * sink and parallelizes perfectly) and [[PartFiles.assemble]] puts the
    * prologue and epilogue around them (same reachability note there).
    */
-  def writeDatasetXmlFile(df: DataFrame, path: String, datasetName: String,
-      studyId: String, igVersion: String, variables: Seq[String],
-      orderCol: Option[String] = None, isReferenceData: Boolean = false): Long = {
+  def writeDatasetXmlFile(rows: DataFrame, facts: DatasetFacts, path: String,
+      datasetName: String, studyId: String, igVersion: String,
+      isReferenceData: Boolean = false): Long = {
     val studyOid = s"STDY.${sanitizeOid(studyId)}"
     val mdvOid = s"MDV.$studyOid.SDTMIG.${sanitizeOid(igVersion)}"
     val defineFileOid = s"$studyOid.Define-XML_$DefineXmlVersion"
@@ -133,33 +175,23 @@ object XmlSinks {
       s"""  <$container StudyOID="${escape(studyOid)}" MetaDataVersionOID="${escape(mdvOid)}">\n"""
     val epilogue = s"  </$container>\n</ODM>\n"
 
-    val present = variables.filter(df.columns.contains)
-    val ordered = orderCol match {
-      case Some(c) => df.orderBy(col(c)).select(present.map(col): _*)
-      case None => df.select(present.map(col): _*)
-    }
+    val (rdd, counts) = (rows.rdd, facts.partitionRows)
+    require(rdd.getNumPartitions == counts.size, s"$datasetName: facts of another frame")
+    val starts = counts.scanLeft(0L)(_ + _)
     // ItemOIDs are sanitized exactly like Define-XML builds them, so the
     // two documents cross-reference (escape() alone would diverge on spaces)
     val dsOid = sanitizeOid(datasetName)
-    val itemOids = present.map(v => s"IT.$dsOid.${sanitizeOid(v)}").toArray
+    val itemOids = rows.columns.map(v => s"IT.$dsOid.${sanitizeOid(v)}")
     val openPrefix = s"""    <ItemGroupData ItemGroupOID="IG.$dsOid" data:ItemGroupDataSeq=""""
-    // zipWithIndex supplies the global 1-based ItemGroupDataSeq and runs a
-    // partition-size job before the write job. Do NOT cache the Row RDD
-    // across the two: caching 600k boxed Rows in the block store costs
-    // 7-15s at sf0.1 (measured r9 — it was the whole e3 export regression)
-    // while the sort's shuffle files are reused across jobs anyway, so only
-    // the cheap post-shuffle within-partition sort re-executes (~0.5s).
-    // Both jobs read identical shuffle output, so the order — and with it
-    // ItemGroupDataSeq — is deterministic.
-    PartFiles.assemble(ordered.rdd.zipWithIndex(), path,
+    PartFiles.assemble(rdd, path,
       head = _.write(prologue.getBytes(StandardCharsets.UTF_8)),
-      tail = (out, _) => out.write(epilogue.getBytes(StandardCharsets.UTF_8))) { (rows, out) =>
+      tail = (out, _) => out.write(epilogue.getBytes(StandardCharsets.UTF_8))) { (idx, rows, out) =>
       val w = new OutputStreamWriter(out, StandardCharsets.UTF_8)
       val sb = new java.lang.StringBuilder(96 + 48 * itemOids.length)
       var n = 0L
-      rows.foreach { case (r, idx) =>
+      rows.foreach { r =>
         sb.setLength(0)
-        sb.append(openPrefix).append(idx + 1).append("\">\n")
+        sb.append(openPrefix).append(starts(idx) + n + 1).append("\">\n")
         var i = 0
         while (i < itemOids.length) {
           renderValue(if (r.isNullAt(i)) null else r.get(i)).foreach { text =>
@@ -173,6 +205,8 @@ object XmlSinks {
         n += 1
       }
       w.flush()
+      if (n != counts(idx)) throw new IllegalStateException(
+        s"$datasetName: partition $idx rendered $n rows, its facts counted ${counts(idx)}")
       n
     }
   }
@@ -237,7 +271,8 @@ object XmlSinks {
       if (ds.isReferenceData) w.write(""" def:IsReferenceData="Yes"""")
       w.write(s""" def:Structure="${escape(ds.structure)}">\n""")
       var keySeq = 1
-      ds.variables.zipWithIndex.foreach { case (v, idx) =>
+      ds.variables.indices.foreach { idx =>
+        val v = ds.variables(idx)
         w.write(s"""        <ItemRef ItemOID="IT.$dsOid.${sanitizeOid(v.name)}" OrderNumber="${idx + 1}"""")
         w.write(s""" Mandatory="${if (v.required) "Yes" else "No"}"""")
         if (v.identifier) { w.write(s""" KeySequence="$keySeq""""); keySeq += 1 }

@@ -119,9 +119,9 @@ object XptWriter {
 
     out.write(headerRecord("NAMESTR ", "0" * 6 + f"${columns.size}%04d" + "0" * 20))
     var pos = 0
-    columns.zipWithIndex.foreach { case (c, i) =>
-      out.write(namestr(c, i + 1, pos))
-      pos += c.length
+    columns.indices.foreach { i =>
+      out.write(namestr(columns(i), i + 1, pos))
+      pos += columns(i).length
     }
     val namestrBytes = columns.size * 140
     val namestrPad = (80 - namestrBytes % 80) % 80
@@ -173,42 +173,40 @@ object XptWriter {
   }
 
   /**
-   * Column metadata for a DataFrame: numeric Spark types → Num(8); strings →
-   * Char with declared length or max observed trimmed byte length, min 1
-   * (`export/common.rs:83-119`). Observed lengths come from
-   * [[XmlSinks.varStats]] — the same numbers Define-XML declares — and
-   * that aggregate runs only when some char column has no declared length.
+   * Column metadata for a DataFrame: numeric Spark types → Num(8); other
+   * types → Char with the given length, or 1 when none is given (the floor
+   * of a blank column, `export/common.rs:83-119`). [[writeDataFrame]] gives
+   * every char column a length: the declared one, else the observed max
+   * trimmed length from [[XmlSinks.facts]] of the rows it writes.
    */
   def columnsFor(df: DataFrame, labels: Map[String, String] = Map.empty,
-      declaredLengths: Map[String, Int] = Map.empty): Seq[XptColumn] = {
-    val charCols = df.schema.fields.filter {
-      f => !f.dataType.isInstanceOf[NumericType] && !declaredLengths.contains(f.name)
-    }.map(_.name)
-    val observed = XmlSinks.varStats(df, charCols.toSeq)
+      declaredLengths: Map[String, Int] = Map.empty): Seq[XptColumn] =
     df.schema.fields.map { f =>
       val numeric = f.dataType.isInstanceOf[NumericType]
-      val len =
-        if (numeric) 8
-        else declaredLengths.getOrElse(f.name,
-          math.max(observed.get(f.name).fold(0)(_.maxLength), 1))
+      val len = if (numeric) 8 else declaredLengths.getOrElse(f.name, 1)
       XptColumn(f.name, labels.getOrElse(f.name, f.name), numeric, len)
     }.toSeq
-  }
 
   /** Write a DataFrame as one XPT member file. Numeric parity: integral
     * doubles and longs share the same IBM encoding; `--SEQ` longs become
     * doubles exactly as the reference casts at write (`xpt.rs:100-120`).
+    * A char column without a declared length gets its observed max trimmed
+    * length, min 1, from one [[XmlSinks.facts]] fold over the rows written.
     * Rows are encoded in the executors and assembled behind the headers
     * by [[PartFiles.assemble]] (same reachability note there). */
   def writeDataFrame(df: DataFrame, path: String, dsName: String, dsLabel: String,
       labels: Map[String, String] = Map.empty,
       declaredLengths: Map[String, Int] = Map.empty): Seq[XptColumn] = {
-    val cols = columnsFor(df, labels, declaredLengths)
+    val undeclared = df.schema.fields.exists(f =>
+      !f.dataType.isInstanceOf[NumericType] && !declaredLengths.contains(f.name))
+    val lengths =
+      if (undeclared) XmlSinks.facts(df).charLengths ++ declaredLengths else declaredLengths
+    val cols = columnsFor(df, labels, lengths)
     val colArr = cols.toArray
     val rowLen = colArr.map(_.length).sum
     PartFiles.assemble(df.rdd, path,
       head = writeHeaders(_, dsName, dsLabel, cols, LocalDateTime.of(2020, 1, 1, 0, 0, 0)),
-      tail = (out, rows) => writeTailPad(out, rows * rowLen)) { (rows, out) =>
+      tail = (out, rows) => writeTailPad(out, rows * rowLen)) { (_, rows, out) =>
       val buf = new Array[Byte](rowLen)
       var n = 0L
       while (rows.hasNext) {

@@ -178,6 +178,19 @@ class DocHygieneSpec extends AnyFunSuite {
     assert(silent.isEmpty, "no Publish call in: " + silent.mkString(", "))
   }
 
+  test("the sinks read a dataset only through XmlSinks.facts") {
+    // split needles, as above: an aggregate or an RDD index is a second
+    // read of an exported dataset — its stats and row numbers come from
+    // the one facts fold the writers share
+    val needles = Seq("zipWith" + "Index", ".ag" + "g(")
+    val offenders = for {
+      p <- scalaSources("src/main/scala/graft/sinks")
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      n <- needles if text.contains(n)
+    } yield s"$p: $n"
+    assert(offenders.isEmpty, "second reads in the sinks:\n  " + offenders.mkString("\n  "))
+  }
+
   test("case folds in the clinical path name a Locale") {
     // under a Turkish default locale `ie` upper-cases to `İE` and `USUBJID`
     // lower-cases to `usubjıd`: fold with Codelist.fold or a named Locale

@@ -142,6 +142,29 @@ class StudySessionSpec extends SparkSpec {
     s.domainCodes.foreach(c => s.domainState(c).get.source.unpersist())
   }
 
+  test("E3: an omitted variable leaves preview, the XPT and define.xml; the snapshot keeps it") {
+    val s = StudySession.create(spark, "OM1", studyDir, Map("DM" -> "dm.csv"))
+    assert(s.preview("DM").get.columns.contains("BRTHDTC"))
+    val mapping = s.domainState("DM").get.mapping
+    assert(mapping.omit("BRTHDTC") == Right(()))
+    assert(mapping.omit("NOSUCHVAR").isLeft)
+    assert(mapping.omitted == Set("BRTHDTC"))
+    assert(!s.preview("DM").get.columns.contains("BRTHDTC"))
+    assert(s.preview("DM").get.columns.contains("SEX"))
+
+    val outDir = "target/tmp/study_omit_out"
+    s.exportAll(outDir)
+    val xptVars = XptReader.read(s"$outDir/dm.xpt").columns.map(_.name)
+    assert(!xptVars.contains("BRTHDTC") && xptVars.contains("SEX"))
+    val define = new String(Files.readAllBytes(Paths.get(s"$outDir/define.xml")), "UTF-8")
+    assert(!define.contains("IT.DM.BRTHDTC") && define.contains("IT.DM.SEX"))
+
+    val path = "target/tmp/study_omit.tss"
+    Persistence.save(Persistence.snapshotOf(s, studyDir, Map("DM" -> "dm.csv")), path)
+    assert(Persistence.load(path).omitted == Map("DM" -> Seq("BRTHDTC")))
+    s.domainCodes.foreach(c => s.domainState(c).get.source.unpersist())
+  }
+
   test("E2: X4/X5 surface through session.validateCross (RELSPEC chain, RELREC refs)") {
     val d = Paths.get("target", "tmp", "study_rel")
     Files.createDirectories(d)

@@ -17,7 +17,7 @@ class PartFilesSpec extends SparkSpec {
       tail = (out, n) => {
         if (failTail) throw new IllegalStateException("tail failed")
         out.write(s"TAIL $n\n".getBytes(StandardCharsets.US_ASCII))
-      }) { (it, out) =>
+      }) { (_, it, out) =>
       var n = 0L
       it.foreach { i => out.write(s"$i\n".getBytes(StandardCharsets.US_ASCII)); n += 1 }
       n
